@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_flink_exactlyonce_example_spark.operators.overlap import MEMO_LOCK
+from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
 from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
@@ -276,43 +276,33 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM = 16  # characters per shingle — spans 2-3 word boundaries
 
 
-# distinct (doc_id, lang, gram-hash) relation per (applicationId, sf):
-# q_char_ngram and q_dup_span consume the identical shingle explode —
-# materialize once per session (the _ivf_cells_for policy; checkpoint
-# blocks die with the session, nothing leaks).
-_CHAR_GRAMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# distinct (doc_id, lang, gram-hash) relation: q_char_ngram and
+# q_dup_span consume the identical shingle explode — materialize once
+# per session.
+@session_cache("char_grams", shared=True)
 def _char_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CHAR_GRAMS_CACHE:
-        with MEMO_LOCK:
-            if key not in _CHAR_GRAMS_CACHE:
-                # position explode + xxhash64 per char — widen the one-split
-                # toy scan so the gram build uses every core (no-op at scale)
-                docs = widen_small_scan(
-                    table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-                )
-                _CHAR_GRAMS_CACHE[key] = (
-                    docs.select(
-                        "doc_id",
-                        "lang",
-                        "text",
-                        F.explode(
-                            F.expr(
-                                f"sequence(1, greatest(length(text) - {_NGRAM} + 1, 0))"
-                            )
-                        ).alias("i"),
-                    )
-                    .select(
-                        "doc_id",
-                        "lang",
-                        F.xxhash64(F.expr(f"substring(text, i, {_NGRAM})")).alias("h"),
-                    )
-                    .distinct()
-                    .localCheckpoint()
-                )
-    return _CHAR_GRAMS_CACHE[key]
+    # position explode + xxhash64 per char — widen the one-split toy
+    # scan so the gram build uses every core (no-op at scale)
+    docs = widen_small_scan(
+        table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    )
+    return (
+        docs.select(
+            "doc_id",
+            "lang",
+            "text",
+            F.explode(
+                F.expr(f"sequence(1, greatest(length(text) - {_NGRAM} + 1, 0))")
+            ).alias("i"),
+        )
+        .select(
+            "doc_id",
+            "lang",
+            F.xxhash64(F.expr(f"substring(text, i, {_NGRAM})")).alias("h"),
+        )
+        .distinct()
+        .localCheckpoint()
+    )
 
 
 #: Heavy-hitter guard (ADVICE r08): grams with document frequency above

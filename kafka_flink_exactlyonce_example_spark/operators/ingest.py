@@ -70,8 +70,8 @@ from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
     warm_index_cycle,
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import (
-    MEMO_LOCK,
     run_overlapped,
+    session_cache,
 )
 from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query
 from kafka_flink_exactlyonce_example_spark.sources import table
@@ -450,20 +450,22 @@ def _gate_frame(
     return _gate_variant(_gate_frame_dual(spark, sf_dir), survivors_only)
 
 
-#: (applicationId, sf_dir) → the MATERIALIZED DUAL gate verdict (one
-#: build serves both variants; ADVICE r16 — the key carries no
-#: survivors_only component because the variants are projections of
-#: the same checkpoint): the |batch|-bounded admission
-#: relation is rebuilt per consumer — ~2.2 s of gate-chain work each
-#: time — by TWO queries per variant (q_ingest_gate + q_index_refresh
-#: on the standing scenario; q_generation_roll + q_derived_catalog2 on
-#: the survivor-gated one), which is exactly the shared-session-cache
+#: The MATERIALIZED DUAL gate verdict (one build serves both variants;
+#: ADVICE r16 — the key carries no survivors_only component because
+#: the variants are projections of the same checkpoint). Uncached, the
+#: |batch|-bounded admission relation is rebuilt per consumer — ~2.2 s
+#: of gate-chain work each time — by TWO queries per variant
+#: (q_ingest_gate + q_index_refresh on the standing scenario;
+#: q_generation_roll + q_derived_catalog2 on the survivor-gated one),
+#: which is exactly the shared-session-cache
 #: policy's threshold (VERDICT r08 item 3: multi-consumer relations are
 #: pre-built, timed cache line items; single-consumer ones stay on
 #: their query's row). The lazy chain stays under the plan guards via
 #: the ::gate auxes (q_ingest_gate::gate here, q_generation_roll::gate
 #: for the survivor variant).
-_GATE_FLAGS_CACHE: dict[tuple[str, str], DataFrame] = {}
+@session_cache("gate_flags", shared=True)
+def _gate_flags_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _gate_frame_dual(spark, sf_dir).localCheckpoint()
 
 
 def gate_flags_for(
@@ -472,14 +474,7 @@ def gate_flags_for(
     """Session-cached checkpoint of the DUAL gate frame, projected to
     the requested variant — one |batch|-row materialization serves all
     four consumers of both variants."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GATE_FLAGS_CACHE:
-        with MEMO_LOCK:
-            if key not in _GATE_FLAGS_CACHE:
-                _GATE_FLAGS_CACHE[key] = _gate_frame_dual(
-                    spark, sf_dir
-                ).localCheckpoint()
-    return _gate_variant(_GATE_FLAGS_CACHE[key], survivors_only)
+    return _gate_variant(_gate_flags_dual(spark, sf_dir), survivors_only)
 
 
 @plan_aux("q_ingest_gate::gate")
@@ -873,15 +868,12 @@ def _gpt_plants(base: DataFrame, checkpoint: bool = True) -> DataFrame:
     )
 
 
-#: Session cache of the materialized 16-row plant relation, keyed
-#: (applicationId, sf_dir) — the plants are a pure function of the
-#: fixtures, and their four TakeOrdered corpus chains cost ~0.7 s of
-#: SEQUENTIAL construction latency per graded run (round 16, VERDICT
-#: r15 item 3). Same idiom as simsearch._INC_INDEX_CACHE; the lazy
+#: Session cache of the materialized 16-row plant relation — the
+#: plants are a pure function of the fixtures, and their four
+#: TakeOrdered corpus chains cost ~0.7 s of SEQUENTIAL construction
+#: latency per graded run (round 16, VERDICT r15 item 3). The lazy
 #: chains stay visible to the plan guards via the ::plants aux below.
-_GPT_PLANTS_CACHE: dict = {}
-
-
+@session_cache("gpt_plants")
 def _gpt_plants_cached(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -889,13 +881,8 @@ def _gpt_plants_cached(
     # frame is derived HERE from the same session-cached _tg_base, so
     # a cache hit can never silently return plants built from some
     # other caller's differently-filtered base (round-16 self-review)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GPT_PLANTS_CACHE:
-        with MEMO_LOCK:
-            if key not in _GPT_PLANTS_CACHE:
-                base, _, _ = _tg_base(spark, sf_dir)
-                _GPT_PLANTS_CACHE[key] = _gpt_plants(base)
-    return _GPT_PLANTS_CACHE[key]
+    base, _, _ = _tg_base(spark, sf_dir)
+    return _gpt_plants(base)
 
 
 @plan_aux("q_gate_post_takedown::plants")

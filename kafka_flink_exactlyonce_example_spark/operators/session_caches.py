@@ -1,105 +1,76 @@
-"""Named registry of the per-session SHARED cache builders, so the
-bench harness can time each build as its own line item (VERDICT r08
-item 3).
+"""The per-session SHARED caches in build order, so the bench harness
+can time each build as its own line item (VERDICT r08 item 3).
 
-Background: several expensive relations (shingles, MinHash signatures,
-band buckets, verified edges, IVF cells, hyperplane signs, char-grams,
-the PQ codebook, the LM model tables, the collected PCA model) are
-built ONCE per (session, sf) and shared across queries. In a bench
-loop, whichever FAMILY MEMBER the iteration order hits first absorbs
-the whole build cost — four rounds of q_semdedup driver reads
-(4.03/3.21/3.37/4.85 s) argued about a ~2.8 s ``_ivf_cells`` build
-that was never q_semdedup's own. Pre-building every shared cache as a
-named, timed step separates amortized infrastructure cost from each
-query's marginal cost, permanently.
+Several expensive relations (shingles, MinHash signatures, band
+buckets, verified edges, IVF cells, hyperplane signs, char-grams, the
+PQ codebook, the LM model tables) are built ONCE per session by a
+``@session_cache(name, shared=True)`` function and shared across
+queries. In a bench loop, whichever consumer the iteration order hits
+first would absorb the whole build cost; pre-building every shared
+cache as a named, timed step separates amortized infrastructure cost
+from each query's marginal cost.
 
-Ordering is DEPENDENCY order (insertion order of the dict): a parent
-cache listed before its consumers, so each line item reads its own
-marginal build cost (bands builds on sigs builds on shingles, ...).
-
-This module imports the private builders of sibling operator modules —
-deliberate: it is part of the same package and exists precisely to
-enumerate them; the bench harness and tests consume only
-``CACHE_BUILDERS``.
+Single-consumer caches (``shared=False``, e.g. ``jaccard_pairs`` for
+q_lsh_recall, ``pca_model`` for q_pca_power) are deliberately not
+pre-built: their build cost belongs on their one consumer's row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
+import time
 
 from pyspark.sql import SparkSession
 
-from kafka_flink_exactlyonce_example_spark.operators import (
+# the modules whose imports register the shared caches
+from kafka_flink_exactlyonce_example_spark.operators import (  # noqa: F401
     datamgmt,
     dedup,
     ingest,
     simsearch,
     textstats,
 )
+from kafka_flink_exactlyonce_example_spark.operators.overlap import SESSION_CACHES
 
-#: name -> builder(spark, sf_dir). Calling a builder MATERIALIZES the
-#: cache (every builder localCheckpoints / collects internally) and is
-#: idempotent — a second call returns the session-cached object.
-CACHE_BUILDERS: dict[str, Callable[[SparkSession, str], Any]] = {
-    # --- text shingle / MinHash chain (dependency order) ---
-    "shingles": dedup.shingles_for,
-    "minhash_sigs": dedup._minhash_signatures,
-    "capped_bands": dedup._capped_bands_for,
-    "lsh_edges": dedup._lsh_verified_edges,
-    # --- embedding-side caches ---
-    "ivf_seeds": dedup._ivf_seeds_for,
-    "ivf_cells": dedup._ivf_cells_for,
-    "ann_signs": simsearch._signs_for,
-    "lsh_buckets": simsearch.lsh_buckets_build,
-    "mp_buckets": simsearch.mp_buckets_build,
-    "unit_norms": simsearch._normalized,
-    "recall_brute": simsearch.brute_topk_for,
-    "inc_ann_index": simsearch.inc_index_build,
-    # round 16 (optimization): relations that 2+ queries each rebuilt
-    # per run — the gen-1 posting relation (q_generation_roll +
-    # q_roll_delete_only), and the two admission-gate verdict variants
-    # (standing: q_ingest_gate + q_index_refresh; survivor-gated:
-    # q_generation_roll + q_derived_catalog2) — now one build each,
-    # timed here, with each consumer row reading its marginal cost.
-    "inc_indexed1": simsearch.inc_indexed1_for,
-    "embed_pairs": dedup._embed_pairs_for,
-    # ONE dual build serves both verdict variants (the second variant
-    # is a projection of the same checkpoint — see _gate_frame_dual)
-    "gate_flags": ingest.gate_flags_for,
-    # round-11/12 coarse k-means quantizer family (the IVF/IVFADC rows
-    # of the index matrix): the ONE cached training chain (round 12 —
-    # cq_centroids materializes the whole Lloyd chain; cq_cells is one
-    # assignment pass against it), plus the within-cell sub-cell
-    # quantizer + assignment
-    "cq_centroids": simsearch._cq_centroids_for,
-    "cq_cells": simsearch._cq_cells_for,
-    "cq_subseeds": simsearch._cq_subseeds_for,
-    "cq_subcells": simsearch._cq_subcells_for,
-    "pq_codebook": simsearch._pq_train,
-    # --- corpus model tables ---
-    "char_grams": datamgmt._char_grams_for,
-    "bigram_ce": textstats._bigram_ce,
-}
+#: DEPENDENCY order: a parent cache before its consumers, so each line
+#: item reads its own marginal build cost (bands build on sigs build on
+#: shingles, ...).
+BUILD_ORDER = (
+    # text shingle / MinHash chain
+    "shingles",
+    "minhash_sigs",
+    "capped_bands",
+    "lsh_edges",
+    # embedding-side caches
+    "ivf_seeds",
+    "ivf_cells",
+    "ann_signs",
+    "lsh_buckets",
+    "mp_buckets",
+    "unit_norms",
+    "recall_brute",
+    "inc_ann_index",
+    "inc_indexed1",
+    "embed_pairs",
+    "gate_flags",
+    # coarse k-means quantizer family (the IVF/IVFADC rows of the index
+    # matrix) and the PQ codebook
+    "cq_centroids",
+    "cq_cells",
+    "cq_subseeds",
+    "cq_subcells",
+    "pq_codebook",
+    # corpus model tables
+    "char_grams",
+    "bigram_ce",
+)
 
-# SINGLE-CONSUMER session caches deliberately NOT pre-built here
-# (round-12 cache-budget audit, VERDICT r11 item 7): a pre-built line
-# item is for relations SHARED across queries — when exactly one query
-# consumes a cache, pre-building it moves that query's real cost into
-# the bench's infrastructure section and under-reports the query.
-# These caches still exist (idempotent, inside their modules); their
-# build cost now lands on their one consumer's marginal row:
-#   dedup._jaccard_scored_pairs  -> q_lsh_recall   (~2.9 s at sf0.1)
-#   simsearch.pca_model_for      -> q_pca_power    (~1.3 s)
-# (dedup._semdedup_scored_for moved OFF this list in round 16: the
-# embed_pairs cache build consumes it, so it now builds inside that
-# pre-built line item.)
+#: name -> getter(spark, sf_dir). Calling one MATERIALIZES the cache and
+#: is idempotent — a second call returns the session-cached object.
+CACHE_BUILDERS = {name: SESSION_CACHES[name] for name in BUILD_ORDER}
 
 
 def build_all(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Build every shared cache, returning per-cache wall seconds."""
-    import time
-
     out: dict[str, float] = {}
     for name, fn in CACHE_BUILDERS.items():
         t0 = time.perf_counter()

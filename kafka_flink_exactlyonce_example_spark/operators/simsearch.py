@@ -30,10 +30,7 @@ from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _ivf_seeds_for,
     _md5_mod_col,
 )
-from kafka_flink_exactlyonce_example_spark.operators.overlap import (
-    MEMO_LOCK,
-    memo_get,
-)
+from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
 from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query
 from kafka_flink_exactlyonce_example_spark.sources import table
@@ -358,17 +355,10 @@ _LSH_MAX_BITS = 12
 _LSH_TARGET_BUCKET = 32  # q_ann_lsh: K bumps once n > 32·2^K
 _MP_TARGET_BUCKET = 16   # q_ann_multiprobe: finer tables, earlier bumps
 
-_EMB_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
+@session_cache("emb_count")
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus row count, one parquet-metadata count per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_COUNT_CACHE:
-        with MEMO_LOCK:
-            if key not in _EMB_COUNT_CACHE:
-                _EMB_COUNT_CACHE[key] = table(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[key]
+    return table(spark, sf_dir, "embeddings").count()
 
 
 def _adaptive_bits(n: int, base: int, target: int) -> int:
@@ -503,7 +493,7 @@ def _lsh_bucket_frame(emb: DataFrame, bits: int = _LSH_BITS) -> DataFrame:
     ).select("vec_id", "tb.tbl", "tb.bucket")
 
 
-# Full-width plane-sign relation per (applicationId, sf): plane p's
+# Full-width plane-sign relation: plane p's
 # literal depends only on (table, p), so the sign bit for (vec, t, p)
 # is the SAME no matter which adaptive k a query resolved to. Both ANN
 # queries (and any future k) therefore share ONE scan that evaluates
@@ -513,37 +503,26 @@ def _lsh_bucket_frame(emb: DataFrame, bits: int = _LSH_BITS) -> DataFrame:
 # 12-bit code, mask low k bits), and it removed the second ~4.5 s
 # bucket build the round-4 bench showed q_ann_multiprobe paying after
 # q_ann_lsh had already scanned the same vectors at a different k.
-_SIGNS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cache("ann_signs", shared=True)
 def _signs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, sg): sg[t*_LSH_MAX_BITS + p] = 1 if plane (t, p) dot
     embedding > 0 else 0 — localCheckpoint'ed once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIGNS_CACHE:
-        with MEMO_LOCK:
-            if key not in _SIGNS_CACHE:
-                # The L·MAX_BITS sign dots are interpreted higher-order-function
-                # work (~6k lambda evals/row) — widen the one-split toy scan so
-                # the build uses every core (measured 8.7 s -> 0.8 s at sf0.1;
-                # no-op at scale where the scan already has many splits).
-                emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
-                flat = [
-                    p
-                    for t in range(_LSH_TABLES)
-                    for p in _lsh_planes(t, _LSH_MAX_BITS)
-                ]
-                pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
-                sg = F.transform(
-                    F.col("planes"),
-                    lambda w: F.when(dot(F.col("embedding"), w) > 0, 1).otherwise(0),
-                )
-                _SIGNS_CACHE[key] = (
-                    emb.crossJoin(F.broadcast(pdf))
-                    .select("vec_id", sg.alias("sg"))
-                    .localCheckpoint()
-                )
-    return _SIGNS_CACHE[key]
+    # The L·MAX_BITS sign dots are interpreted higher-order-function
+    # work (~6k lambda evals/row) — widen the one-split toy scan so
+    # the build uses every core (measured 8.7 s -> 0.8 s at sf0.1;
+    # no-op at scale where the scan already has many splits).
+    emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
+    flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, _LSH_MAX_BITS)]
+    pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
+    sg = F.transform(
+        F.col("planes"),
+        lambda w: F.when(dot(F.col("embedding"), w) > 0, 1).otherwise(0),
+    )
+    return (
+        emb.crossJoin(F.broadcast(pdf))
+        .select("vec_id", sg.alias("sg"))
+        .localCheckpoint()
+    )
 
 
 def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
@@ -566,65 +545,49 @@ def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
     ).select("vec_id", "tb.tbl", "tb.bucket")
 
 
-#: Materialized bucket relation per (applicationId, sf_dir, k): three
-#: queries consume buckets (q_ann_lsh + q_ann_recall share the same
-#: adaptive k; q_ann_multiprobe uses its finer ladder) and each used
-#: to pay its own localCheckpoint of the identical relation per query
-#: (round-9 bench: the two k-sharers ~1 s each, multiprobe's 5.8 s row
-#: was mostly its own build). Same cache policy as the sign relation
-#: the buckets derive from.
-_BUCKETS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+#: Materialized bucket relation per k: three queries consume buckets
+#: (q_ann_lsh + q_ann_recall share the same adaptive k; q_ann_multiprobe
+#: uses its finer ladder) and each used to pay its own localCheckpoint
+#: of the identical relation per query (round-9 bench: the two k-sharers
+#: ~1 s each, multiprobe's 5.8 s row was mostly its own build). The two
+#: bench line items below resolve k and read this cache.
+@session_cache("ann_buckets")
 def _buckets_cached(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, bits)
-    if key not in _BUCKETS_CACHE:
-        with MEMO_LOCK:
-            if key not in _BUCKETS_CACHE:
-                _BUCKETS_CACHE[key] = _buckets_for(spark, sf_dir, bits).localCheckpoint()
-    return _BUCKETS_CACHE[key]
+    return _buckets_for(spark, sf_dir, bits).localCheckpoint()
 
 
+@session_cache("lsh_buckets", shared=True)
 def lsh_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cache builder for the q_ann_lsh/q_ann_recall bucket
-    relation at the corpus-adaptive k (bench line item)."""
+    """The q_ann_lsh/q_ann_recall bucket relation at the
+    corpus-adaptive k (bench line item)."""
     k = _adaptive_bits(_emb_count(spark, sf_dir), _LSH_BITS, _LSH_TARGET_BUCKET)
     return _buckets_cached(spark, sf_dir, k)
 
 
+@session_cache("mp_buckets", shared=True)
 def mp_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cache builder for q_ann_multiprobe's finer-table bucket
-    relation (bench line item)."""
+    """q_ann_multiprobe's finer-table bucket relation (bench line
+    item)."""
     k = _adaptive_bits(_emb_count(spark, sf_dir), _MP_BITS, _MP_TARGET_BUCKET)
     return _buckets_cached(spark, sf_dir, k)
 
 
-# normalized-embedding relation per (applicationId, sf_dir): every ANN
-# query's exact-scoring stage needs û = v/‖v‖ for the whole corpus, and
-# bench runs the ANN family in one session — materialize once (same
-# policy and keying as dedup's MinHash signature cache).
-_NRM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# normalized-embedding relation: every ANN query's exact-scoring stage
+# needs û = v/‖v‖ for the whole corpus, and bench runs the ANN family
+# in one session — materialize once.
+@session_cache("unit_norms", shared=True)
 def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, ne): unit-normalized embeddings, localCheckpoint'ed
-    once per (session, sf). Keyed on applicationId (not id(spark) —
-    CPython reuses ids after GC, which could resurrect a checkpoint
-    bound to a stopped SparkContext)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NRM_CACHE:
-        with MEMO_LOCK:
-            if key not in _NRM_CACHE:
-                emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
-                _NRM_CACHE[key] = emb.select(
-                    "vec_id",
-                    F.expr(
-                        "transform(embedding, v -> CAST(v AS DOUBLE) / sqrt("
-                        "aggregate(transform(embedding, u -> CAST(u AS DOUBLE)"
-                        " * CAST(u AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, u) -> a + u)))"
-                    ).alias("ne"),
-                ).localCheckpoint()
-    return _NRM_CACHE[key]
+    once per (session, sf)."""
+    emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
+    return emb.select(
+        "vec_id",
+        F.expr(
+            "transform(embedding, v -> CAST(v AS DOUBLE) / sqrt("
+            "aggregate(transform(embedding, u -> CAST(u AS DOUBLE)"
+            " * CAST(u AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, u) -> a + u)))"
+        ).alias("ne"),
+    ).localCheckpoint()
 
 
 def _top1_by_cosine(cand: DataFrame, nrm: DataFrame) -> DataFrame:
@@ -901,47 +864,38 @@ def _recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |panel|·K-row relation; without the cache each one re-runs the
 # |panel| × corpus brute-force scan, the expensive half of the eval
 # harness at any scale (round 10).
-_BRUTE_TOPK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cache("recall_brute", shared=True)
 def brute_topk_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, neighbor_id): the exact cosine top-_RECALL_K corpus
     neighbors of each probe in the shared absolute panel — ONE linear
     scan of the normalized corpus with the bounded panel broadcast,
     then localCheckpoint'd so every index audit reads the bounded
     result instead of re-scoring |panel| × corpus pairs."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BRUTE_TOPK_CACHE:
-        with MEMO_LOCK:
-            if key not in _BRUTE_TOPK_CACHE:
-                nrm = _normalized(spark, sf_dir)
-                panel = _recall_panel(spark, sf_dir)
-                sim = F.aggregate(
-                    F.zip_with("ea", "eb", lambda a, b_: a * b_),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                probes = F.broadcast(
-                    nrm.join(panel, "vec_id", "left_semi").select(
-                        "vec_id", F.col("ne").alias("ea")
-                    )
-                )
-                ey = nrm.select(
-                    F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("eb")
-                )
-                rank_w = Window.partitionBy("vec_id").orderBy(
-                    F.col("sim").desc(), F.col("neighbor_id")
-                )
-                _BRUTE_TOPK_CACHE[key] = (
-                    ey.crossJoin(probes)
-                    .filter(F.col("vec_id") != F.col("neighbor_id"))
-                    .select("vec_id", "neighbor_id", sim.alias("sim"))
-                    .withColumn("rn", F.row_number().over(rank_w))
-                    .filter(F.col("rn") <= _RECALL_K)
-                    .select("vec_id", "neighbor_id")
-                    .localCheckpoint()
-                )
-    return _BRUTE_TOPK_CACHE[key]
+    nrm = _normalized(spark, sf_dir)
+    panel = _recall_panel(spark, sf_dir)
+    sim = F.aggregate(
+        F.zip_with("ea", "eb", lambda a, b_: a * b_),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    probes = F.broadcast(
+        nrm.join(panel, "vec_id", "left_semi").select(
+            "vec_id", F.col("ne").alias("ea")
+        )
+    )
+    ey = nrm.select(F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("eb"))
+    rank_w = Window.partitionBy("vec_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        ey.crossJoin(probes)
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .select("vec_id", "neighbor_id", sim.alias("sim"))
+        .withColumn("rn", F.row_number().over(rank_w))
+        .filter(F.col("rn") <= _RECALL_K)
+        .select("vec_id", "neighbor_id")
+        .localCheckpoint()
+    )
 
 
 def _recall_audit(
@@ -1223,15 +1177,6 @@ def q_mp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- q_incremental_ann frozen ingest index ------------------------
-#: (centroids, seeds) per (session, sf) — trained on the OLD split
-#: only, localCheckpoint'ed: the frozen coarse + fine quantizer that
-#: the ingest path routes against. Shared with the streaming ingest
-#: gate (streaming/jobs.py), where the same frozen index admits every
-#: micro-batch — training it per batch would move the quantizer under
-#: the router, the exact bug frozen-index semantics exist to prevent.
-_INC_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _inc_is_new_col():
     """Deterministic ~10% md5 batch split (same 'inc:' convention as
     q_incremental_dedup) — the 'new batch' vs 'indexed corpus' tag."""
@@ -1244,8 +1189,8 @@ def _inc_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) → the MATERIALIZED gen-1 posting relation
-#: (round 16, optimization): ``_assign_to_seeds`` of the 'inc:' old
+#: The MATERIALIZED gen-1 posting relation (round 16, optimization):
+#: ``_assign_to_seeds`` of the 'inc:' old
 #: corpus against the frozen seeds — q_generation_roll and
 #: q_roll_delete_only each checkpointed the identical relation per run
 #: (the shared-session-cache policy threshold: 2+ consumers). In
@@ -1253,27 +1198,14 @@ def _inc_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: already materialized — so the shared checkpoint is the honest
 #: in-session stand-in, not a cheat. The lazy chain stays under the
 #: plan guards via the consumers' ::index / ::state auxes.
-_INC_INDEXED1_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cache("inc_indexed1", shared=True)
 def inc_indexed1_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached checkpoint of the frozen gen-1 posting relation."""
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import (
-        _assign_to_seeds,
+    _cent1, seeds1 = inc_index_build(spark, sf_dir)
+    old = _inc_tagged(spark, sf_dir).filter(~F.col("is_new")).select(
+        "vec_id", "label", "embedding"
     )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _INC_INDEXED1_CACHE:
-        with MEMO_LOCK:
-            if key not in _INC_INDEXED1_CACHE:
-                _cent1, seeds1 = inc_index_build(spark, sf_dir)
-                old = _inc_tagged(spark, sf_dir).filter(~F.col("is_new")).select(
-                    "vec_id", "label", "embedding"
-                )
-                _INC_INDEXED1_CACHE[key] = _assign_to_seeds(
-                    old, seeds1
-                ).localCheckpoint()
-    return _INC_INDEXED1_CACHE[key]
+    return _assign_to_seeds(old, seeds1).localCheckpoint()
 
 
 def frozen_centroids(old: DataFrame) -> DataFrame:
@@ -1984,16 +1916,17 @@ def _inc_index_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     return frozen_index_frames(old)
 
 
+@session_cache("inc_ann_index", shared=True)
 def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Materialize the frozen ingest index once per (session, sf) —
-    a named bench line item (session_caches: ``inc_ann_index``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _INC_INDEX_CACHE:
-        with MEMO_LOCK:
-            if key not in _INC_INDEX_CACHE:
-                cent, seeds = _inc_index_frames(spark, sf_dir)
-                _INC_INDEX_CACHE[key] = (cent.localCheckpoint(), seeds.localCheckpoint())
-    return _INC_INDEX_CACHE[key]
+    """(centroids, seeds) trained on the OLD split only,
+    localCheckpoint'ed once per (session, sf): the frozen coarse + fine
+    quantizer that the ingest path routes against. Shared with the
+    streaming ingest gate (streaming/jobs.py), where the same frozen
+    index admits every micro-batch — training it per batch would move
+    the quantizer under the router, the exact bug frozen-index
+    semantics exist to prevent."""
+    cent, seeds = _inc_index_frames(spark, sf_dir)
+    return (cent.localCheckpoint(), seeds.localCheckpoint())
 
 
 @plan_aux("q_incremental_ann::index")
@@ -2367,22 +2300,9 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: report and the promote verdict) — materialize once per (session,
 #: sf), |batch| rows; the lazy chain stays visible to the plan gate
 #: through the q_rebuild_churn::chain aux above.
-_CHURN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cache("rebuild_churn")
 def rebuild_churn_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import (
-        _session_key,
-    )
-
-    key = _session_key(spark, sf_dir)
-    if key not in _CHURN_CACHE:
-        with MEMO_LOCK:
-            if key not in _CHURN_CACHE:
-                _CHURN_CACHE[key] = _rebuild_churn_frame(
-                    spark, sf_dir
-                ).localCheckpoint()
-    return _CHURN_CACHE[key]
+    return _rebuild_churn_frame(spark, sf_dir).localCheckpoint()
 
 
 @query("q_rebuild_churn", oracle=_CHURN_ORACLE)
@@ -3412,12 +3332,6 @@ _PQ_SUBDIM = 8     # dims per subspace (8 × 8 = 64)
 _PQ_K = 256        # codewords per subspace → 1 byte/subspace, 8 B/vector
 
 
-# per-(session, sf) trained PQ model: (codebook cent1, assignments a2)
-# localCheckpoint'ed once — q_pq_codebook reports the census, q_pq_adc
-# runs the query-time half on the same trained model.
-_PQ_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _pq_dist2(a, b):
     diffs = F.zip_with(
         a, b, lambda x, y: (x.cast("double") - y.cast("double"))
@@ -3426,19 +3340,17 @@ def _pq_dist2(a, b):
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
+@session_cache("pq_codebook", shared=True)
 def _pq_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(codebook, assignments): codebook = (s, c, cv) after one
     rounded Lloyd update; assignments = (vec_id, s, c, d2) under that
-    codebook. Plan rationale in q_pq_codebook's docstring."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def _build() -> tuple[DataFrame, DataFrame]:
-        cent1, a2 = _pq_train_frames(spark, sf_dir)
-        return (cent1.localCheckpoint(), a2.localCheckpoint())
-
-    return memo_get(_PQ_CACHE, key, _build)
+    codebook, localCheckpoint'ed once per session — q_pq_codebook
+    reports the census, q_pq_adc runs the query-time half on the same
+    trained model. Plan rationale in q_pq_codebook's docstring."""
+    cent1, a2 = _pq_train_frames(spark, sf_dir)
+    return (cent1.localCheckpoint(), a2.localCheckpoint())
 
 
 def _pq_train_frames(
@@ -3525,7 +3437,7 @@ def _pq_train_frames(
 @plan_aux("q_pq_codebook::train")
 def pq_train_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The data-touching PQ training stage, visible to the plan guards
-    even though every PQ consumer reads it through the _PQ_CACHE
+    even though every PQ consumer reads it through the session-cached
     checkpoint (the q_pca_power::moments policy): both Lloyd passes +
     the codebook reduce in one fingerprinted plan."""
     cent1, a2 = _pq_train_frames(spark, sf_dir)
@@ -3739,7 +3651,7 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC ranking against exact L2 — the accuracy-vs-compression number
     that decides K and M before the index ships.
 
-    Scale shape: the trained model rides the session _PQ_CACHE; the
+    Scale shape: the trained model rides the pq_codebook session cache; the
     per-probe LUT is probes×M×K rows — broadcast; the ADC score is
     ONE equi-join of the (vec, s, code) assignment relation against
     the LUT plus a (probe, vec) sum — 8-byte ids and code ints
@@ -3870,7 +3782,7 @@ def q_code_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pq_codebook's reconstruction MSE (distortion) and q_pq_adc's
     recall (end quality): balance explains WHY either degrades.
 
-    Rides the session _PQ_CACHE (codebook trained once per session);
+    Rides the pq_codebook session cache (codebook trained once per session);
     everything here is a groupBy of the (vec, s, code) relation to the
     bounded M·K occupancy grain and arithmetic on ≤16 rows. Entropy
     terms are exact rationals n/n_s through double ln — identical in
@@ -3995,22 +3907,16 @@ def _r(x: float, dp: int) -> float:
     )
 
 
-#: Collected sufficient-statistic model per (session, sf): the moments
-#: scan is executed ONCE per session even when plan tooling constructs
-#: q_pca_power repeatedly (ADVICE r08 — every plan-only caller used to
-#: pay a full Spark job per construction).
-_PCA_MODEL_CACHE: dict[tuple[str, str], list] = {}
-
-
+#: Collected sufficient-statistic model: the moments scan is executed
+#: ONCE per session even when plan tooling constructs q_pca_power
+#: repeatedly (ADVICE r08 — every plan-only caller used to pay a full
+#: Spark job per construction). Not shared: q_pca_power is its one
+#: consumer.
+@session_cache("pca_model")
 def pca_model_for(spark: SparkSession, sf_dir: str) -> list:
     """The collected bounded sufficient-statistic model (2,144 rows),
     one execution of the ``pca_moments`` scan per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PCA_MODEL_CACHE:
-        with MEMO_LOCK:
-            if key not in _PCA_MODEL_CACHE:
-                _PCA_MODEL_CACHE[key] = pca_moments(spark, sf_dir).collect()
-    return _PCA_MODEL_CACHE[key]
+    return pca_moments(spark, sf_dir).collect()
 
 
 @query("q_pca_power", oracle=_pca_power_oracle())
@@ -4325,25 +4231,20 @@ _IVF_ROUTE_CTES = f"""
     )"""
 
 
-# per-(session, sf) coarse-quantizer caches. The CHAIN cache is the
+# coarse-quantizer session caches. The CHAIN cache is the
 # single training run (3 assignment passes per session TOTAL, each
 # bounded ≤_CQ_K-row stage checkpointed before the next derives from
 # it — ADVICE r11: q_cq_train_curve previously re-trained the whole
 # chain because only the final codebook was cached, and cq_cells
 # re-trained it a third time). Deriving checkpoint-from-checkpoint is
-# the documented-safe exception to the _IVF_SEEDS_CACHE stats-hazard
+# the documented-safe exception to the _ivf_seeds_for stats-hazard
 # policy (joining a localCheckpoint'ed input loses row-count stats —
 # measured round 10, ~40 GB estimate for a 360 KB relation): every
 # consumer of these ≤20-row frames goes through cq_assign's forced
 # one-row F.broadcast collapse or an explicit F.broadcast join, so a
 # junk sizeInBytes estimate can never flip a join strategy (the
 # _cq_cells_as_label precedent).
-_CQ_CHAIN_CACHE: dict[tuple[str, str], list[DataFrame]] = {}
-_CQ_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CQ_SUBSEEDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CQ_SUBCELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cache("cq_chain")
 def _cq_chain_for(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """The full training chain [seeds, cent_1, …, cent__CQ_UPDATES] as
     checkpointed bounded frames — ONE k-means training per (session,
@@ -4351,37 +4252,27 @@ def _cq_chain_for(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     curve. Training is deterministic (md5 seeds + 6-dp rounded
     updates), so the cached chain embodies exactly the quantizer the
     oracle CTEs re-derive."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CQ_CHAIN_CACHE:
-        with MEMO_LOCK:
-            if key not in _CQ_CHAIN_CACHE:
-                _CQ_CHAIN_CACHE[key] = _cq_train_chain(
-                    table(spark, sf_dir, "embeddings"),
-                    _persist=lambda df: df.localCheckpoint(),
-                )
-    return _CQ_CHAIN_CACHE[key]
+    return _cq_train_chain(
+        table(spark, sf_dir, "embeddings"),
+        _persist=lambda df: df.localCheckpoint(),
+    )
 
 
+@session_cache("cq_centroids", shared=True)
 def _cq_centroids_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained coarse codebook (c, cv) — ≤ _CQ_K rows, bounded;
     the cached chain's final stage."""
     return _cq_chain_for(spark, sf_dir)[-1]
 
 
+@session_cache("cq_cells", shared=True)
 def _cq_cells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus coarse assignment (vec_id, ccell, embedding) — one
     assignment pass against the cached codebook (cq_assign broadcasts
     the ≤_CQ_K-row centroid table as one array row, so the checkpoint
     input is estimator-proof by construction)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CQ_CELLS_CACHE:
-        with MEMO_LOCK:
-            if key not in _CQ_CELLS_CACHE:
-                e = widen_small_scan(table(spark, sf_dir, "embeddings"))
-                _CQ_CELLS_CACHE[key] = cq_assign(
-                    e, _cq_centroids_for(spark, sf_dir)
-                ).localCheckpoint()
-    return _CQ_CELLS_CACHE[key]
+    e = widen_small_scan(table(spark, sf_dir, "embeddings"))
+    return cq_assign(e, _cq_centroids_for(spark, sf_dir)).localCheckpoint()
 
 
 def _cq_cells_as_label(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4402,6 +4293,7 @@ def _cq_cells_as_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_cache("cq_subseeds", shared=True)
 def _cq_subseeds_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fine-stage sub-cell quantizer WITHIN each coarse cell —
     dedup._ivf_seeds (k = max(1, ⌊√(n_cell/_CELL_TARGET)⌋) hash-sampled
@@ -4410,28 +4302,17 @@ def _cq_subseeds_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_embed_dup standing discipline), so the sub-cell collapses to the
     coarse cell and the cell-grain oracle stays exact; the k>1 regime
     is pinned by tests/test_ivf_cells.py."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CQ_SUBSEEDS_CACHE:
-        with MEMO_LOCK:
-            if key not in _CQ_SUBSEEDS_CACHE:
-                _CQ_SUBSEEDS_CACHE[key] = _ivf_seeds(
-                    _cq_cells_as_label(spark, sf_dir)
-                ).localCheckpoint()
-    return _CQ_SUBSEEDS_CACHE[key]
+    return _ivf_seeds(_cq_cells_as_label(spark, sf_dir)).localCheckpoint()
 
 
+@session_cache("cq_subcells", shared=True)
 def _cq_subcells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus fine assignment (vec_id, label=ccell, cell, embedding) —
     the (coarse cell, sub-cell) posting-list key q_ivf_adc scans."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CQ_SUBCELLS_CACHE:
-        with MEMO_LOCK:
-            if key not in _CQ_SUBCELLS_CACHE:
-                _CQ_SUBCELLS_CACHE[key] = _assign_to_seeds(
-                    _cq_cells_as_label(spark, sf_dir),
-                    _cq_subseeds_for(spark, sf_dir),
-                ).localCheckpoint()
-    return _CQ_SUBCELLS_CACHE[key]
+    return _assign_to_seeds(
+        _cq_cells_as_label(spark, sf_dir),
+        _cq_subseeds_for(spark, sf_dir),
+    ).localCheckpoint()
 
 
 def _ivf_route_frames(

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_flink_exactlyonce_example_spark.operators.overlap import memo_get
+from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
 
@@ -1422,22 +1422,15 @@ _BIGRAM_CE_CTE = """
 """
 
 
-# per-(session, sf) CE relation: one narrow row per doc, consumed by
-# q_bigram_ppl AND q_ppl_bucket — same localCheckpoint policy as the
-# dedup-side shingle/signature caches
-_BIGRAM_CE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# CE relation: one narrow row per doc, consumed by q_bigram_ppl AND
+# q_ppl_bucket — same localCheckpoint policy as the dedup-side
+# shingle/signature caches
+@session_cache("bigram_ce", shared=True)
 def _bigram_ce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, n_bigrams, ce): per-doc add-1 bigram CE under the
     corpus's own LM, localCheckpoint'ed once per (session, sf). Plan
     rationale in q_bigram_ppl's docstring."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_get(
-        _BIGRAM_CE_CACHE,
-        key,
-        lambda: _bigram_ce_frame(spark, sf_dir).localCheckpoint(),
-    )
+    return _bigram_ce_frame(spark, sf_dir).localCheckpoint()
 
 
 def _bigram_ce_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

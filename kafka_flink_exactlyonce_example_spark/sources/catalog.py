@@ -1,14 +1,15 @@
 """Batch catalog: the driver's ten parquet tables (FIXTURES.md).
 
-Schemas are fixed and known; we never rely on inference for graded
-queries. The one normalization: when ``events.ts`` is TIMESTAMP(NANOS)
-in parquet, Spark reads it (under ``nanosAsLong``) as LongType nanos —
-we convert with ``ts DIV 1000`` (integer truncation) to µs, matching
-bit-for-bit what DuckDB produces when it coerces the same column. When
-the driver generates the table with µs precision instead, the column
-already arrives as TimestampType (NTZ inference is disabled in
-session confs) and no conversion is needed — the check is on the
-loaded physical type, not on an assumed generation.
+Schemas are not declared here: :func:`table` infers each one from the
+parquet footer, and FIXTURES.md documents what the fixtures carry. The
+one normalization needs that inference: when ``events.ts`` is
+TIMESTAMP(NANOS) in parquet, Spark reads it (under ``nanosAsLong``) as
+LongType nanos — we convert with ``ts DIV 1000`` (integer truncation)
+to µs, matching bit-for-bit what DuckDB produces when it coerces the
+same column. When a generation writes the table with µs precision
+instead, the column already arrives as TimestampType (NTZ inference is
+disabled in session confs) and no conversion is needed — the check is
+on the inferred physical type, not on an assumed generation.
 
 At 100 TB these would be partitioned/bucketed external tables; the load
 pattern stays ``spark.read.parquet(dir)`` and every query would pick up
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from kafka_flink_exactlyonce_example_spark.operators.overlap import memo_get
+from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.session import ensure_session_confs
 
 TABLES = (
@@ -38,7 +39,7 @@ TABLES = (
 )
 
 
-#: (applicationId, sf_dir, name) → loaded LAZY DataFrame. Re-running
+#: One loaded LAZY DataFrame per (session, sf_dir, name). Re-running
 #: ``spark.read.parquet`` for every query costs ~0.1–0.25 s per call on
 #: the driver (file listing + footer/schema read + plan setup) — across
 #: a ~300-query bench that is tens of seconds of pure fixed overhead
@@ -46,43 +47,31 @@ TABLES = (
 #: lazy plan object: every execution still scans the parquet files, so
 #: nothing here caches *results* — it removes repeated driver-side
 #: metadata work, exactly what a warehouse catalog does for a real
-#: deployment. Keyed by applicationId so a stopped/rebuilt session can
-#: never serve a plan bound to a dead context. The catalog's fixture
-#: files are immutable per path (testdata SFs and one-shot tmp-dir
-#: fixtures), which is what makes the captured file listing safe.
+#: deployment. The catalog's fixture files are immutable per path
+#: (testdata SFs and one-shot tmp-dir fixtures), which is what makes
+#: the captured file listing safe.
 #: FAILURE MODE IF VIOLATED (ADVICE r16): rewriting or appending to a
 #: path within one session silently serves the stale listing — a test
-#: that must mutate a fixture path in place should pop the affected
-#: keys from this dict (or use a fresh tmp path, the current
+#: that must mutate a fixture must write it to a fresh tmp path (the
 #: convention everywhere).
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@session_cache("table")
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table from ``{sf_dir}/{name}.parquet``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-
-    def _load() -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events":
-            ts_type = df.schema["ts"].dataType
-            if isinstance(ts_type, LongType):
-                # ns → µs truncation, identical to DuckDB's coercion of
-                # the column.
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-                )
-            elif isinstance(ts_type, TimestampNTZType):
-                # belt-and-braces: if a caller-built session read the
-                # file before our confs applied, align to the one
-                # timestamp type.
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-
-    return memo_get(_TABLE_MEMO, key, _load)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events":
+        ts_type = df.schema["ts"].dataType
+        if isinstance(ts_type, LongType):
+            # ns → µs truncation, identical to DuckDB's coercion of the
+            # column.
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        elif isinstance(ts_type, TimestampNTZType):
+            # belt-and-braces: if a caller-built session read the file
+            # before our confs applied, align to the one timestamp type.
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

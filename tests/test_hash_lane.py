@@ -15,15 +15,16 @@ from tests.conftest import ORACLE_SF
 
 
 def _fresh_dedup(monkeypatch, lane: str | None):
-    """Set (or clear) the lane env var; the lane is part of
-    dedup._session_key so the session caches can never leak relations
-    across lanes."""
+    """Set (or clear) the lane env var; the lane is part of every
+    session-cache key, so the caches can never leak relations across
+    lanes."""
     from kafka_flink_exactlyonce_example_spark.operators import dedup
+    from kafka_flink_exactlyonce_example_spark.session import HASH_LANE_ENV
 
     if lane is None:
-        monkeypatch.delenv(dedup._HASH_LANE_ENV, raising=False)
+        monkeypatch.delenv(HASH_LANE_ENV, raising=False)
     else:
-        monkeypatch.setenv(dedup._HASH_LANE_ENV, lane)
+        monkeypatch.setenv(HASH_LANE_ENV, lane)
     return dedup
 
 

@@ -1,25 +1,49 @@
-"""Focused tests for operators/overlap.py (round 17): the shared
-session-cache lock and the intra-query job-overlap helper."""
+"""Focused tests for operators/overlap.py: the session-cache decorator
+(shared lock, build logging) and the intra-query job-overlap helper."""
 
 from __future__ import annotations
 
+import logging
+import re
+import sys
 import threading
 import time
+from types import SimpleNamespace
 
 import pytest
 
 from kafka_flink_exactlyonce_example_spark.operators.overlap import (
-    memo_get,
+    SESSION_CACHES,
     run_overlapped,
+    session_cache,
 )
+from kafka_flink_exactlyonce_example_spark.session import hash_lane
+
+#: stands in for a SparkSession: the decorator only reads its
+#: applicationId
+FAKE_SPARK = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
 
 
-def test_memo_get_builds_once_under_concurrency():
-    cache: dict = {}
+@pytest.fixture
+def throwaway_cache():
+    """``session_cache`` for throwaway names, unregistered afterwards."""
+    names = []
+
+    def make(name: str):
+        names.append(name)
+        return session_cache(name)
+
+    yield make
+    for name in names:
+        SESSION_CACHES.pop(name, None)
+
+
+def test_session_cache_builds_once_under_concurrency(throwaway_cache):
     builds = []
     start = threading.Barrier(8)
 
-    def build():
+    @throwaway_cache("test_build_once")
+    def build(spark, sf_dir):
         builds.append(threading.get_ident())
         time.sleep(0.05)  # widen the race window
         return object()
@@ -28,28 +52,74 @@ def test_memo_get_builds_once_under_concurrency():
 
     def worker():
         start.wait()
-        results.append(memo_get(cache, ("app", "sf"), build))
+        results.append(build(FAKE_SPARK, "sf"))
 
     threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a caller never returned"
     assert len(builds) == 1, "concurrent first-build ran more than once"
     assert all(r is results[0] for r in results), "callers saw different objects"
 
 
-def test_memo_get_is_reentrant_for_nested_builders():
+def test_session_cache_is_reentrant_for_nested_builders(throwaway_cache):
     """A builder that resolves another cache under the same lock (the
     gate_flags → inc_index_build → table() nesting) must not deadlock."""
-    outer: dict = {}
-    inner: dict = {}
+    inner_builds = []
 
-    def build_outer():
-        return ("outer", memo_get(inner, "k", lambda: "inner"))
+    @throwaway_cache("test_inner")
+    def inner(spark, sf_dir):
+        inner_builds.append(sf_dir)
+        return "inner"
 
-    assert memo_get(outer, "k", build_outer) == ("outer", "inner")
-    assert inner["k"] == "inner"
+    @throwaway_cache("test_outer")
+    def outer(spark, sf_dir):
+        return ("outer", inner(spark, sf_dir))
+
+    assert outer(FAKE_SPARK, "sf") == ("outer", "inner")
+    assert inner(FAKE_SPARK, "sf") == "inner"
+    assert inner_builds == ["sf"]
+
+
+def test_session_cache_keys_on_args_and_logs_builds(throwaway_cache, caplog):
+    """Each build is logged once with its name, key and seconds: DEBUG
+    on the main thread, WARNING off it (a wave thunk that hits a cold
+    cache serializes the wave). Hits log nothing."""
+
+    @throwaway_cache("test_logged")
+    def build(spark, sf_dir, n):
+        return [n]
+
+    with caplog.at_level(logging.DEBUG, logger=session_cache.__module__):
+        first = build(FAKE_SPARK, "sf", 1)
+        assert build(FAKE_SPARK, "sf", 1) is first
+        assert build(FAKE_SPARK, "sf", 2) == [2]
+        worker = threading.Thread(target=build, args=(FAKE_SPARK, "sf", 3))
+        worker.start()
+        worker.join()
+
+    records = [r for r in caplog.records if "test_logged" in r.getMessage()]
+    assert [r.levelno for r in records] == [
+        logging.DEBUG,
+        logging.DEBUG,
+        logging.WARNING,
+    ]
+    assert f"('app', 'sf', '{hash_lane()}', 1)" in records[0].getMessage()
+    assert all(re.search(r"in \d+\.\d{3} s", r.getMessage()) for r in records)
+    assert "off the main thread" in records[2].getMessage()
+
+
+def test_session_cache_rejects_a_duplicate_name(throwaway_cache):
+    throwaway_cache("test_dup")(lambda spark, sf_dir: 1)
+    with pytest.raises(ValueError, match="test_dup"):
+        session_cache("test_dup")(lambda spark, sf_dir: 2)
 
 
 def test_run_overlapped_preserves_argument_order():
@@ -71,3 +141,17 @@ def test_run_overlapped_propagates_exceptions():
 def test_run_overlapped_single_thunk_runs_inline():
     ident = run_overlapped(lambda: threading.get_ident())
     assert ident == [threading.get_ident()]
+
+
+def test_run_overlapped_keeps_the_callers_job_group(spark):
+    """Jobs inside a wave carry the caller's job group, so a trace can
+    attribute them to the key that submitted the wave."""
+    sc = spark.sparkContext
+    group = "test_run_overlapped_job_group"
+    sc.setJobGroup(group, "overlap wave")
+    try:
+        run_overlapped(*(lambda n=n: spark.range(n).count() for n in (10, 20, 30, 40)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
