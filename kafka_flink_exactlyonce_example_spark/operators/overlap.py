@@ -43,8 +43,9 @@ import functools
 import logging
 import threading
 import time
+import uuid
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any, TypeVar
 
 from pyspark import inheritable_thread_target
@@ -121,14 +122,38 @@ def run_overlapped(*thunks: Callable[[], T]) -> list[T]:
     guide §2.6's thread-pool overlap, sized to the wave (the waves at
     the call sites are 2-4 thunks; enough to fill each job's straggler
     tail, not enough to fight for executors). Each thunk inherits the
-    caller's job group and local properties. Exceptions propagate to
-    the caller exactly as in the sequential form. A single thunk runs
-    inline (no pool, no thread hop)."""
+    caller's job group and local properties. A single thunk runs
+    inline (no pool, no thread hop).
+
+    The wave's jobs share one job tag. The first thunk to raise cancels
+    the jobs its siblings are running (re-cancelling until they return,
+    since a sibling may submit another job), and its exception
+    propagates to the caller."""
     if len(thunks) == 1:
         return [thunks[0]()]
     session = SparkSession.getActiveSession()
+    tag = f"run_overlapped-{uuid.uuid4().hex}"
     if session is not None:
-        thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
+        thunks = tuple(
+            inheritable_thread_target(session)(_tagged(session.sparkContext, tag, t))
+            for t in thunks
+        )
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception() is not None]
+        if failed:
+            while pending:
+                if session is not None:
+                    session.sparkContext.cancelJobsWithTag(tag)
+                _, pending = wait(pending, timeout=0.5)
+            raise failed[0].exception()
         return [f.result() for f in futures]
+
+
+def _tagged(sc, tag: str, thunk: Callable[[], T]) -> Callable[[], T]:
+    def run() -> T:
+        sc.addJobTag(tag)
+        return thunk()
+
+    return run

@@ -65,34 +65,15 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # ---------------------------------------------------------------------------
-# Grading-window rotation — DERIVED, not hand-maintained.
+# Grading-window rotation — derived, not hand-maintained.
 #
 # The driver's correctness gate grades the FIRST 50 keys of ``queries()``
-# in dict-insertion order (observed round 1: CORRECTNESS_r01.json ==
-# list(QUERIES)[:50]). Registration order is grading-window only — all
-# queries run identically either way.
-#
-# History of why this is now computed instead of hand-listed: round 4's
-# guard globbed ALL CORRECTNESS_r0*.json and flagged its own round's
-# just-landed artifact (VERDICT r04 item 1); round 7 bumped the round
-# counter without rebuilding the hand-listed window, so the driver
-# re-graded round 6's exact 50 keys and both rotation-guard tests went
-# red (VERDICT r07 headline). The fix (VERDICT r07 item 2): derive the
-# round number AND the window from the driver's own on-disk artifacts at
-# load time, so counter, window, and guards can never desynchronize.
-# The only hand-maintained inputs left are:
-#   * ``_CHANGED_IN_ROUND`` — keys whose implementation changed, keyed
-#     by the build round the change landed in (they must re-earn a
-#     driver row on the new plan instead of coasting on a stale green).
-#     Round-scoped (ADVICE r08): once the driver's artifact advances
-#     ``rotation_round()`` past an entry, that entry is ignored — a
-#     forgotten edit can no longer pin stale keys into every future
-#     window;
-#   * ``_BACKLOG_ORDER``   — the canonical DRAIN ORDER for keys that
-#     have never had a driver row. Already-graded keys fall out of it
-#     automatically (it is filtered against the artifacts); keys missing
-#     from it (future additions) append in sorted order. It never needs
-#     per-round editing.
+# in dict-insertion order (CORRECTNESS_r01.json == list(QUERIES)[:50]).
+# Registration order only picks the grading window; every query runs the
+# same either way. The round number and the window are both derived at
+# load time from the driver's own CORRECTNESS artifacts, so a counter and
+# a window can never desynchronize. The one hand edit per round is
+# ``_CHANGED_IN_ROUND``.
 # ---------------------------------------------------------------------------
 
 _REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -100,485 +81,63 @@ _REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
 #: Driver grades exactly this many keys per round (first-N of queries()).
 _WINDOW_SIZE = 50
 
-#: While the never-graded backlog holds at least this many keys, the
-#: window guarantees at least this many first-ever keys per round —
-#: family keeps are truncated (lowest priority first) to make room.
-#: 40/round drains the 55-key round-7 backlog to 15 in round 8 and to
-#: zero in round 9 (VERDICT r07 item 1's done criterion).
-_MIN_FIRST_EVER = 40
+
+def _artifacts() -> dict[int, pathlib.Path]:
+    """Round N -> the driver's ``CORRECTNESS_r{N}.json`` at the repo root."""
+    found = {}
+    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            found[int(m.group(1))] = path
+    return found
 
 
 def rotation_round() -> int:
-    """The current build round, derived from the driver's own artifacts:
-    1 + max N over ``CORRECTNESS_r{N}.json`` files at the repo root.
-    The driver writes round N's file AFTER round N's build, so during
-    build N the files r01..r(N-1) exist. Public accessor (ADVICE r07
-    item d) — bench.py keys its per-round artifact name off this."""
-    rounds = [0]
-    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
-def graded_before(round_no: int | None = None) -> set[str]:
-    """Union of every key the driver graded in rounds < ``round_no``
-    (default: the derived current round), read from the driver's own
-    CORRECTNESS artifacts — never from memory (round-3 lesson)."""
-    if round_no is None:
-        round_no = rotation_round()
-    keys: set[str] = set()
-    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if m and int(m.group(1)) < round_no:
-            keys.update(json.loads(path.read_text()))
-    return keys
+    """The current build round: 1 + the newest CORRECTNESS artifact's N.
+    The driver writes round N's file after round N's build, so during
+    build N the files r01..r(N-1) exist. bench.py names its per-round
+    artifact after this."""
+    return max(_artifacts(), default=0) + 1
 
 
 def newest_grade_rounds(round_no: int | None = None) -> dict[str, int]:
-    """Per-key round of the NEWEST driver row in rounds < ``round_no``
-    (default: the derived current round), from the CORRECTNESS
-    artifacts. Drives the staleness-first re-grade ordering (round 11,
-    VERDICT r10 item 3): a green row from round 1 on a ten-times-
-    refactored engine is weaker evidence than a fresh one, so once the
-    never-graded backlog is empty the free window slots drain the
-    OLDEST newest-rows first — a permanent freshness mechanism, not a
-    one-off re-grade list. Keys absent from every artifact map to 0
-    (stalest possible).
-
-    The round scoping mirrors :func:`graded_before` (ADVICE r11): a
-    ``derive_window(round_no=N, prior=...)`` preview must read ONLY
-    the artifacts that existed when round N was derived, or a later
-    artifact landing on disk would silently change what a given
-    round's window "was" — tests and future-round simulations need
-    the derivation to be reproducible per round."""
+    """Per-key round of the newest driver row in rounds < ``round_no``
+    (default: the current round). Scoped to rounds < ``round_no`` so a
+    ``derive_window(round_no=N, prior=...)`` preview stays reproducible
+    after later artifacts land."""
     if round_no is None:
         round_no = rotation_round()
     newest: dict[str, int] = {}
-    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if m:
-            n = int(m.group(1))
-            if n >= round_no:
-                continue
-            for k in json.loads(path.read_text()):
-                if n > newest.get(k, 0):
-                    newest[k] = n
+    for n, path in sorted(_artifacts().items()):
+        if n < round_no:
+            newest.update(dict.fromkeys(json.loads(path.read_text()), n))
     return newest
 
 
-#: Keys whose IMPLEMENTATION changed, keyed by the round the change
-#: landed in — they are forced into THAT round's window so the new plan
-#: earns a fresh driver row. THE one per-round hand edit, and it is
-#: self-expiring (ADVICE r08): ``derive_window`` looks up only the
-#: round it is deriving, so entries for past rounds become inert the
-#: moment the driver's artifact advances ``rotation_round()`` — no
-#: forgotten-frozenset hazard.
-#:
-#: Round 8: q_session_stats moved from
-#: exact percentile to the histogram-CDF form (VERDICT r07 item 3);
-#: q_pca_power's matvec rounds moved driver-side over the bounded
-#: covariance model (VERDICT r07 item 7) — both also first-ever; and
-#: the _ivf_cells restructure (fallback folded into the counts reduce,
-#: inline array_max assignment — VERDICT r07 item 5's q_semdedup
-#: profile) changed the plans of its two consumers.
-#: …and q_char_ngram's postings restructure (one-shuffle inline-pair
-#: generation replacing the two-sided inverted-index self-join); and
-#: the HOF re-split fix (bound-column split before transform lambdas)
-#: in q_repetition, q_contamination, and the shared _shingles_frame —
-#: the shingle cache feeds the whole MinHash family, whose hash VALUES
-#: are unchanged (same shingles), so q_near_dup stands in as the
-#: graded representative of the shared-builder plan change.
-#: …and the widen_small_scan additions (operators/scale.py): the
-#: one-split toy scans feeding per-row-heavy map stages now widen to
-#: defaultParallelism first. Only q_winnow_fingerprint and
-#: q_poisson_bootstrap show the new exchange in their own graded
-#: plans (the other widened builds sit behind session checkpoints);
-#: both re-earn driver rows.
-#: Round 9: q_char_ngram grew the heavy-hitter df cap on its posting
-#: lists (ADVICE r08 — grams with df > _MAX_DF are excluded from BOTH
-#: sides of the Jaccard, mirrored in the oracle), which changes its
-#: plan and, at caps that bite, its results; q_dup_span shares the
-#: df-derived oracle-bound fix but is first-ever anyway.
-_CHANGED_IN_ROUND: dict[int, frozenset[str]] = {
-    8: frozenset({
-        "q_session_stats",
-        "q_pca_power",
-        "q_semdedup",
-        "q_embed_dup",
-        "q_char_ngram",
-        "q_repetition",
-        "q_contamination",
-        "q_near_dup",
-        "q_winnow_fingerprint",
-        "q_poisson_bootstrap",
-    }),
-    9: frozenset({
-        "q_char_ngram",
-    }),
-    #: Round 10: q_ann_lsh / q_ann_multiprobe consume the round-9
-    #: post-closing shared bucket cache (commit 6ec8625) — their
-    #: executed plans changed AFTER their last driver grade, so both
-    #: re-earn rows (VERDICT r09 item 2). q_ann_recall swapped its
-    #: corpus-relative probe sample for an absolute md5-TakeOrdered
-    #: panel; q_incremental_ann now routes against the frozen
-    #: (label, sub-cell) quantizer with 6-dp-rounded coarse cosines.
-    10: frozenset({
-        "q_ann_lsh",
-        "q_ann_multiprobe",
-        "q_ann_recall",
-        "q_incremental_ann",
-    }),
-    #: Round 11 (VERDICT r10 items 1+2): the IVF-family coarse
-    #: quantizer is now geometry-trained k-means (_CQ_K cells, nprobe
-    #: 2→4) and the PQ codebook moved to the FAISS-default M=8/K=256
-    #: shape with _ADC_RERANK 32→64 — q_ivf_recall / q_ivf_adc /
-    #: q_adc_recall re-route over the new cells, and q_pq_codebook /
-    #: q_pq_adc / q_code_entropy retrain under the new constants.
-    11: frozenset({
-        "q_ivf_recall",
-        "q_ivf_adc",
-        "q_adc_recall",
-        "q_pq_codebook",
-        "q_pq_adc",
-        "q_code_entropy",
-    }),
-    #: Round 12: q_knn_join moved to the shared unit-norm session
-    #: cache (normalized-dot scoring, oracle mirrored — VERDICT r11
-    #: item 4); q_cq_train_curve now reads the cached training chain
-    #: instead of re-training it (ADVICE r11), so its graded plan
-    #: assigns against three checkpointed codebooks; the frozen_top1
-    #: sub-cell scan hardened to a LEFT join (ADVICE r11 — empty-cell
-    #: routes surface as NULL rows instead of dropping), changing the
-    #: plans of its three graded consumers (values identical at every
-    #: graded SF — no NULL row can occur on a healthy corpus).
-    12: frozenset({
-        "q_knn_join",
-        "q_cq_train_curve",
-        "q_incremental_ann",
-        "q_ingest_gate",
-        "q_index_refresh",
-    }),
-    #: Round 13 (ADVICE r12 item 2): the three frozen_top1 consumers'
-    #: ORACLES moved to the LEFT-join mirror of the round-12 engine
-    #: hardening (the nn CTE now surfaces empty-cell routes as NULL
-    #: rows on the DuckDB side too — parity is total, not conditional
-    #: on a healthy corpus). Values identical at every graded SF, but
-    #: a changed oracle is a changed grading artifact, so all three
-    #: re-earn driver rows. And q_filtered_sweep's nested-tier truth
-    #: derivation (VERDICT r12 item 6): one widest-tier scored relation
-    #: + running-sum per-tier ranks replaces the four per-tier brute
-    #: scans — plan changed, values hash-equal at both SFs.
-    13: frozenset({
-        "q_incremental_ann",
-        "q_ingest_gate",
-        "q_index_refresh",
-        "q_filtered_sweep",
-    }),
-    #: Round 14 (ADVICE r13): q_filtered_route_matrix's cost_ivf moved
-    #: from F.floor(double division) to exact integer `div`, keeping
-    #: the three formulations (engine / oracle / filtered_ann_route)
-    #: bit-identical at any corpus size — values unchanged at every
-    #: graded SF, but the expression (hence the plan) changed.
-    14: frozenset({
-        "q_filtered_route_matrix",
-    }),
-    #: Round 15 (ADVICE r14): the keep-best tie-break key moved from
-    #: the arithmetic composite n_chars·1e6 − doc_id (collides once
-    #: doc_ids reach ~1e6 per unit of n_chars delta — nondeterministic
-    #: at 100 TB id spaces) to a lexicographic struct on the Spark
-    #: side and an ordered-aggregate first() on the DuckDB side —
-    #: values identical on the graded fixtures (ids ≤ 49,999), plans
-    #: changed (hash_agg → sort_agg) in all three consumers. And the
-    #: roll census's admission gate now sees the SAME window's
-    #: takedown wave (VERDICT r14 item 1): all three checks run
-    #: against gen-1 SURVIVORS, so q_generation_roll's verdict,
-    #: folds and churn re-derive under the threaded wave.
-    15: frozenset({
-        "q_dedup_keep_best",
-        "q_pipeline_curate",
-        "q_curate_post_takedown",
-        "q_generation_roll",
-    }),
-    #: Round 16 (VERDICT r15 item 3): q_gate_post_takedown's shared
-    #: v1/v2 chains restructured — ONE digest aggregation (per-h
-    #: survivor-flag max) replaces the two distinct-h views, ONE
-    #: checkpointed scored relation (inline-argmax coarse routing, no
-    #: window shuffle; each formulation a window over it, v2 ranking
-    #: survivors first with frozen_top1's totality preserved) replaces
-    #: the two frozen_top1 passes, qb/qsets checkpointed, plants
-    #: session-cached. Values identical at every SF (crosschecked);
-    #: the plan changed, so the key re-earns a driver row.
-    #: Round 16 optimization pass: the admission-gate verdict became a
-    #: shared session cache (2 consumers per variant — the r08 policy
-    #: threshold), so q_ingest_gate / q_index_refresh now read the
-    #: checkpointed relation and their returned plans moved to a
-    #: LogicalRDD scan (chain guarded via the q_ingest_gate::gate aux).
-    #: Values identical at every SF (crosschecked); the plans changed,
-    #: so both re-earn driver rows. q_generation_roll /
-    #: q_derived_catalog2 / q_roll_delete_only share the same caches
-    #: but already checkpointed the identical relations per run, so
-    #: their executed plans are byte-identical (fingerprints verified
-    #: unchanged).
-    #: …and the (label, cell)-blocked embedding pair join became the
-    #: shared undirected ``embed_pairs`` session cache: q_embed_dup is
-    #: now a projection of it and q_semdedup derives its dropped set
-    #: from one evaluation per pair (was a directed 2× scan). Values
-    #: identical at every SF (crosschecked); both plans moved to a
-    #: LogicalRDD scan (chain guarded via q_embed_dup::pairs), so both
-    #: re-earn driver rows.
-    16: frozenset({
-        "q_gate_post_takedown",
-        "q_ingest_gate",
-        "q_index_refresh",
-        "q_embed_dup",
-        "q_semdedup",
-        "q_generation_roll",
-        "q_winnow_fingerprint",
-    }),
-    #: Round 17 (optimization round 2, VERDICT r16 next-round item 1):
-    #: q_gate_post_takedown's two text-side candidate+verify passes
-    #: collapsed into ONE dual-cap pass — a per-bucket (count(*),
-    #: conditional survivor sum) window yields both cap views, one
-    #: (band_idx, band_key) candidate join carries (_c1, _c2) flags
-    #: whose per-pair MAX replaces the per-variant DISTINCTs, and one
-    #: word-set verify with a per-doc conditional MAX replaces the two
-    #: Jaccard joins. Values byte-identical at sf0.001/0.01/0.1
-    #: (crosschecked vs the unchanged two-sided oracle); the plan
-    #: changed (parquet scans 9→6, exchanges −3, joins −5 in the
-    #: fingerprint), so the key re-earns a driver row.
-    #: …and q_generation_roll (VERDICT r16 item 3): the rolled posting
-    #: relation is checkpointed (it fed BOTH the posting count and the
-    #: v2 churn side — crossJoin branches re-evaluated the whole
-    #: warm-cycle chain twice; hidden chain under the new ::index2
-    #: aux), and the v1 churn side now reads the survivor-gated gate
-    #: verdict's neighbor column instead of re-running the identical
-    #: route+top-1 pass (the round-16 w2 ≡ tombstone-filtered
-    #: frozen_top1 equivalence, hash-graded on both gate consumers).
-    #: Values identical at every SF (crosschecked); the plan changed,
-    #: so the key re-earns a driver row.
-    17: frozenset({
-        "q_gate_post_takedown",
-        "q_generation_roll",
-    }),
-}
+def graded_before(round_no: int | None = None) -> set[str]:
+    """Every key the driver graded in rounds < ``round_no``."""
+    return set(newest_grade_rounds(round_no))
+
+
+#: Keys whose implementation, plan or oracle changed, keyed by the round
+#: the change lands in; ``derive_window`` forces them into that round's
+#: window so the new plan earns a fresh driver row. The one per-round
+#: hand edit. Only the round being derived is looked up, so an entry
+#: goes inert once the driver's artifact advances ``rotation_round()``.
+_CHANGED_IN_ROUND: dict[int, frozenset[str]] = {}
 
 
 def changed_in(round_no: int | None = None) -> frozenset[str]:
-    """Impl-changed keys for ``round_no`` (default: the derived current
-    round). Past-round entries are inert by construction."""
+    """Impl-changed keys for ``round_no`` (default: the current round)."""
     if round_no is None:
         round_no = rotation_round()
     return _CHANGED_IN_ROUND.get(round_no, frozenset())
 
-#: Canonical drain order for never-driver-graded keys. Filtered against
-#: the artifacts at load time, so graded keys drop out on their own.
-#: Round-8 ordering puts the round-6 capability additions, the non-
-#: mining families, and the front of the mining backlog inside the
-#: 40-key pop; the 15 leftovers (all single-table mining rollups) are
-#: round 9's final pop.
-_BACKLOG_ORDER: tuple[str, ...] = (
-    # round-6 capability additions (VERDICT r06/r07 named these first)
-    "q_minhash_containment",
-    "q_leakage_split",
-    "q_kmv_setops",
-    "q_pca_power",
-    # impl-changed this round (also first-ever)
-    "q_session_stats",
-    # textstats / simsearch / datamgmt / analytics backlog
-    "q_byte_fallback",
-    "q_oov_rate",
-    "q_post_strat",
-    "q_context_budget",
-    "q_residual_quality",
-    "q_embed_norm_qc",
-    "q_kanon",
-    "q_compaction_plan",
-    "q_snapshot_diff",
-    "q_anomaly",
-    "q_zorder",
-    "q_table_checksum",
-    "q_approx_quantile",
-    "q_ab_test",
-    "q_median_mad",
-    "q_yoy",
-    "q_running_distinct",
-    "q_bitmap_days",
-    # mining backlog, front
-    "q_weighted_median",
-    "q_mode",
-    "q_ewma",
-    "q_changepoint",
-    "q_attribution",
-    "q_survival",
-    "q_autocorr",
-    "q_seasonality",
-    "q_cuped",
-    "q_event_paths",
-    "q_srm",
-    "q_winsorize",
-    "q_rolling_slope",
-    "q_twap",
-    "q_concurrency",
-    "q_benford",
-    "q_chi2_indep",
-    # mining backlog, tail — round 9's pop
-    "q_growth_accounting",
-    "q_abc_class",
-    "q_control_chart",
-    "q_repeat_revenue",
-    "q_sla",
-    "q_affinity",
-    "q_mde",
-    "q_dup_payments",
-    "q_rank_shift",
-    "q_price_index",
-    "q_hour_heatmap",
-    "q_coverage_gaps",
-    "q_mutual_info",
-    "q_drawdown",
-    "q_whale_curve",
-    # NEW in round 8 (single capability addition under the cap:
-    # per-doc duplicated-span coverage on the round-8 postings
-    # infrastructure) — first-ever by construction, pops in round 9
-    # with the mining tail
-    "q_dup_span",
-    # NEW in round 9: the recall@10 audit of the LSH ANN vs brute
-    # force on a fixed probe panel, and the ingest-time ANN lookup
-    # (frozen-quantizer cell routing + within-cell neighbor) — both
-    # first-ever by construction, pop with the round-9 window
-    "q_ann_recall",
-    "q_incremental_ann",
-    # round-10 capability additions
-    "q_ingest_gate",
-    "q_mp_recall",
-    "q_index_refresh",
-    "q_ivf_recall",
-    "q_ivf_adc",
-    "q_adc_recall",
-    # round-11 capability additions (QC + tuning rows of the
-    # geometry-trained coarse quantizer): cell-health census, Lloyd
-    # convergence curve, and the graded nprobe recall-vs-cost sweep
-    "q_cq_census",
-    "q_cq_train_curve",
-    "q_ivf_nprobe_sweep",
-    "q_ann_filtered",
-    # round-12 capability additions: the selectivity-aware filtered-
-    # search planner row (both regimes graded, route CASE integer-
-    # exact) — VERDICT r11 item 1 — and the engine-graded k=6/H1
-    # multiprobe frontier point — item 2
-    "q_ann_filtered_sel",
-    "q_mp_frontier",
-    # and the selectivity-ladder operating table (route + chosen-route
-    # recall/cost per tier — the crossover twin of q_ivf_nprobe_sweep)
-    "q_filtered_sweep",
-    # and the SHRINK half of the index lifecycle: the post-delete
-    # compaction trigger, q_index_refresh's mirror image
-    "q_index_compact",
-    # round-13 capability additions: the delete path EXECUTED (the
-    # tombstone anti-join threaded through frozen_top1, graded against
-    # the survivors-recomputed truth — VERDICT r12 item 1a) and the
-    # ANN operating-point planner rows (item 4 — both branches of the
-    # builder dispatch carry full oracles)
-    "q_ann_tombstone",
-    "q_ann_planned",
-    "q_ann_planned_ivf",
-    # and the text-dedup side of the delete path: keeper churn under
-    # the takedown wave (groups whose keep-best must recompute)
-    "q_dedup_tombstone",
-    # the composed planner: operating-point planning married to the
-    # filtered-search crossover (predicate requests resolve through
-    # filtered_ann_route and deliver the chosen route's neighbors)
-    "q_ann_planned_filtered",
-    # ...and its exactness-override branch (recall 1.0 forces the
-    # filtered brute route regardless of cost)
-    "q_ann_planned_fbrute",
-    # round-13 second-session additions: the text near-dup index's
-    # fold lifecycle graded (three-generation split + planted
-    # near-copies, the gen-2 blind-spot closure under the hash grade)
-    "q_text_gen_fold",
-    # the planner's whole decision surface (10-request ladder resolved
-    # relationally vs an independent SQL argmin, fallback/refusal
-    # regimes included)
-    "q_ann_route_matrix",
-    # and the serving result LIST: frozen_topk's ranked top-3 relation
-    # (rank emitted — list order is part of the graded claim)
-    "q_serve_topk",
-    # the composed resolver's decision surface (the filtered twin of
-    # q_ann_route_matrix: crossover/override/refusal regimes over the
-    # live survivor counts)
-    "q_filtered_route_matrix",
-    # serve-side answer churn across an index-generation roll (the
-    # deploy-gating report: which probes' top-1 changed and why)
-    "q_rebuild_churn",
-    # ...and the promote/rollback verdict derived from it (both
-    # branches hash-graded via a strict and a lenient bar)
-    "q_gen_promote",
-    # round-14 capability additions (VERDICT r13 items 1-4): the TEXT
-    # index's delete path (near-text flags against the pre-takedown vs
-    # survivors-only index, planted flip/hold probes — q_ann_tombstone's
-    # text twin)
-    "q_text_tombstone",
-    # the keeper re-point EXECUTED: the post-wave exact-dedup manifest
-    # consuming q_dedup_tombstone's report (re-pointed keepers named,
-    # extinct groups dropped)
-    "q_manifest_repoint",
-    # filtered serving: the composed planner's predicate branch
-    # threaded through the serve path (fivf cost pick and the
-    # exactness-override fbrute, both graded at k=_SERVE_K)
-    "q_serve_filtered",
-    "q_serve_fbrute",
-    # the generation-roll census: one row per roll stage over the
-    # graded 'inc:'/'del:' window (gate, takedowns, digest/posting
-    # deltas, churn, both promote verdicts)
-    "q_generation_roll",
-    # the near-dup-grain executed re-point: the post-takedown curated
-    # manifest (keep-best over surviving group members, extinct groups
-    # dropped, untouched groups byte-stable)
-    "q_curate_post_takedown",
-    # round-15 capability addition (VERDICT r14 item 1): admission
-    # under the SAME window's takedown wave — all three gate checks
-    # against gen-1 survivors, the rejected→admitted flip hash-graded
-    # via four planted populations
-    "q_gate_post_takedown",
-    # round-15 (VERDICT r14 item 4): the generation-catalog derivation
-    # itself — per-depth recall/cost of the frozen gen-1 generation's
-    # label-routed scan vs brute truth on the bounded md5 panel, the
-    # shipped catalog's rounding conventions in integer arithmetic
-    "q_derived_catalog",
-    # round-15 (VERDICT r14 item 3): the delete-only window's churn
-    # gate — auto survivor panel, BOTH churn sides self-excluded,
-    # both promote bars live (strict blocks, lenient promotes)
-    "q_roll_delete_only",
-    # round-16 (VERDICT r15 item 1): the fired-cell warm retrain
-    # EXECUTED under a driver hash — planted md5 quantizer +
-    # data-derived call-time trigger target fire exactly one cell's
-    # 1→2 split at every graded SF, sub-cell membership checksummed
-    # against the CTE-for-CTE retrain mirror
-    "q_fired_rebuild",
-    # round-16: the SHRINK twin — a planted k=2 oversplit quantizer,
-    # the 'del:' wave fires the compact report (call-time target),
-    # and the warm 2→1 merge executes with the md5-first SURVIVING
-    # seed retained (the seed pre-filter is live at sf0.1, where the
-    # fired label's second seed is itself deleted)
-    "q_fired_merge",
-    # round-16 (VERDICT r15 item 5's graded half): the catalog
-    # derivation AT THE CHAINED gen-2 state — the roll window's
-    # posting relation (survivors ∪ frozen-routed admits) under the
-    # retrained coarse router, sharing _dc_core/_dc_rows with the
-    # gen-1 row and _ROLL_STATE_CTES with the roll census
-    "q_derived_catalog2",
-)
 
 #: SURVEY §2 family span, as operator MODULES, highest priority first.
-#: When window slots remain after the first-ever guarantee, one keep
-#: per family not already covered is added in this order (the member
-#: rotates by round so repeated grading re-covers different keys).
-#: Under backlog pressure the TAIL is dropped first — the rows-only
-#: smoke families (multimodal, udf_demo) and the end-to-end pipeline
-#: sit last because their members are either rows-only by contract or
-#: were re-graded green as recently as round 7.
+#: The window holds one keep per family not already covered, added in
+#: this order; the keep is the family's stalest member, so repeated
+#: grading re-covers different keys.
 _FAMILY_KEEP_PRIORITY: tuple[str, ...] = (
     "wordcount",       # §2.1 reference core — q_wordcount is pinned first anyway
     "relational",      # §2.2
@@ -608,78 +167,56 @@ def _module_of(fn: QueryFn) -> str:
 def derive_window(
     round_no: int | None = None, prior: set[str] | None = None
 ) -> list[str]:
-    """Compute the 50-key grading window for ``round_no`` from (a) the
-    CORRECTNESS artifacts on disk, (b) ``_CHANGED_IN_ROUND[round_no]``, (c) the
-    ``_BACKLOG_ORDER`` drain order, (d) rotating family keeps. Pure
-    function of on-disk state + the two declared inputs — the guard
-    tests verify its properties instead of a hand-listed tuple.
+    """The 50-key grading window for ``round_no``, in four steps:
 
-    Assembly order:
       1. ``q_wordcount`` (flagship identity, every round);
-      2. every changed-this-round key;
-      3. first-ever keys popped in ``_BACKLOG_ORDER`` order (unlisted
-         never-graded keys append sorted) until the window holds
-         ``min(_MIN_FIRST_EVER, |never-graded|)`` first-ever keys;
-      4. one keep per uncovered ``_FAMILY_KEEP_PRIORITY`` family while
-         slots remain — the family's STALEST member (oldest newest
-         driver row; never-graded first, name tie-break);
-      5. any still-free slots: more backlog, then previously-graded
-         keys ordered STALENESS-FIRST (oldest newest driver row
-         first, name tie-break) — re-graded keys fall to the back on
-         the next derivation automatically, so the whole surface
-         re-freshens round-robin at window granularity (round 11;
-         replaced the blind ``(round·7) % n`` rotation that could
-         leave round-1 rows stale for ten rounds).
+      2. every ``_CHANGED_IN_ROUND[round_no]`` key, sorted;
+      3. one keep per ``_FAMILY_KEEP_PRIORITY`` family not yet covered:
+         its stalest member;
+      4. every remaining key, stalest first.
+
+    Stalest means the oldest newest driver row, name as tie-break; a key
+    never graded counts as round 0, so it sorts first. A graded key falls
+    to the back on the next derivation, so the whole surface re-freshens
+    round-robin at window granularity.
 
     ``prior`` (tests only) overrides the graded-before set so future
-    rounds can be previewed before their artifacts exist.
+    rounds can be previewed before their artifacts exist; keys outside it
+    count as never graded.
     """
     if round_no is None:
         round_no = rotation_round()
     if not QUERIES:
         raise RuntimeError("derive_window() requires load_all() registration")
-    if prior is None:
-        prior = graded_before(round_no)
-    never = [k for k in QUERIES if k not in prior]
-    listed = [k for k in _BACKLOG_ORDER if k in never]
-    backlog = listed + sorted(set(never) - set(listed))
+    changed = changed_in(round_no)
+    missing = sorted(changed - QUERIES.keys())
+    if missing:  # typo guard: a renamed query must update the pins too
+        raise KeyError(f"changed keys not registered: {missing}")
+    newest = newest_grade_rounds(round_no)
+    if prior is not None:
+        newest = {k: n for k, n in newest.items() if k in prior}
+
+    def staleness(key: str) -> tuple[int, str]:
+        return (newest.get(key, 0), key)
 
     window: list[str] = []
 
-    def _add(key: str) -> None:
-        if key not in window and key in QUERIES and len(window) < _WINDOW_SIZE:
+    def add(key: str) -> None:
+        if key not in window and len(window) < _WINDOW_SIZE:
             window.append(key)
 
-    _add("q_wordcount")
-    for key in sorted(changed_in(round_no)):
-        _add(key)
-
-    target_first_ever = min(_MIN_FIRST_EVER, len(never))
-    for key in backlog:
-        if sum(k in never for k in window) >= target_first_ever:
-            break
-        _add(key)
-
-    newest = newest_grade_rounds(round_no)
-
-    def _staleness(key: str) -> tuple[int, str]:
-        # never-graded (no artifact row) sorts stalest of all
-        return (newest.get(key, 0), key)
-
+    add("q_wordcount")
+    for key in sorted(changed):
+        add(key)
     by_module: dict[str, list[str]] = {}
     for key, fn in QUERIES.items():
         by_module.setdefault(_module_of(fn), []).append(key)
     covered = {_module_of(QUERIES[k]) for k in window}
     for fam in _FAMILY_KEEP_PRIORITY:
-        if fam in covered or fam not in by_module:
-            continue
-        _add(min(by_module[fam], key=_staleness))
-        covered.add(fam)
-
-    for key in backlog:  # leftover slots: drain further
-        _add(key)
-    for key in sorted((k for k in QUERIES if k in prior), key=_staleness):
-        _add(key)
+        if fam not in covered and fam in by_module:
+            add(min(by_module[fam], key=staleness))
+    for key in sorted(QUERIES, key=staleness):
+        add(key)
     return window
 
 
@@ -694,9 +231,6 @@ def load_all() -> None:
     from kafka_flink_exactlyonce_example_spark import lifecycle, pipeline  # noqa: F401
 
     window = derive_window()
-    missing = [k for k in window if k not in QUERIES]
-    if missing:  # typo guard: a renamed query must update the inputs too
-        raise KeyError(f"window keys not registered: {missing}")
     ordered = {k: QUERIES[k] for k in window}
     ordered.update((k, v) for k, v in QUERIES.items() if k not in ordered)
     QUERIES.clear()

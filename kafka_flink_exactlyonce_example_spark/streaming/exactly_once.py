@@ -42,15 +42,13 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 
-class IdempotentBatchSink:
-    """foreachBatch handler writing batch-partitioned parquet with
-    atomic commit markers (exactly-once under replay)."""
+class CommitMarkers:
+    """The ``_commits/{batchId}`` marker directory shared by every sink
+    here: existence-only commit bits, created rename-atomically."""
 
     def __init__(self, out_dir: str) -> None:
         self.out_dir = out_dir
-        self.data_dir = os.path.join(out_dir, "data")
         self.commits_dir = os.path.join(out_dir, "_commits")
-        os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.commits_dir, exist_ok=True)
 
     def _marker(self, batch_id: int) -> str:
@@ -59,15 +57,8 @@ class IdempotentBatchSink:
     def is_committed(self, batch_id: int) -> bool:
         return os.path.exists(self._marker(batch_id))
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed batch: already fully committed
-        (
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(self.data_dir, f"batch_id={batch_id}")
-            )
-        )
-        # rename-atomic marker: commit point of the 2-phase protocol
+    def _commit(self, batch_id: int) -> None:
+        """Rename-atomic marker: the commit point of the 2-phase protocol."""
         fd, tmp = tempfile.mkstemp(dir=self.commits_dir, prefix=".tmp")
         os.close(fd)
         os.rename(tmp, self._marker(batch_id))
@@ -76,17 +67,32 @@ class IdempotentBatchSink:
         # only batch-id-named markers count: a leftover ``.tmp*`` from a
         # crash inside the marker create (mkstemp done, rename not) or
         # any stray non-numeric file must neither count as a commit nor
-        # crash the listing (fault-injection tests, round 9)
+        # crash the listing. isascii: str.isdigit alone accepts e.g.
+        # superscript '\u00b2' (int() rejects -> crash) and non-ASCII
+        # decimal digits like '\u0663' (int() parses -> a phantom commit)
         return sorted(
             int(b)
             for b in os.listdir(self.commits_dir)
-            # isascii guard (round-10 ADVICE): str.isdigit alone
-            # accepts e.g. superscript '\u00b2' (int() rejects ->
-            # crash) and non-ASCII decimal digits like '\u0663'
-            # (int() PARSES -> a phantom commit id); only ASCII
-            # 0-9 names are commit markers
             if b.isascii() and b.isdigit()
         )
+
+
+class IdempotentBatchSink(CommitMarkers):
+    """foreachBatch handler writing batch-partitioned parquet with
+    atomic commit markers (exactly-once under replay)."""
+
+    def __init__(self, out_dir: str) -> None:
+        super().__init__(out_dir)
+        self.data_dir = os.path.join(out_dir, "data")
+        os.makedirs(self.data_dir, exist_ok=True)
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.is_committed(batch_id):
+            return  # replayed batch: already fully committed
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(self.data_dir, f"batch_id={batch_id}")
+        )
+        self._commit(batch_id)
 
     def read_committed(self, spark: SparkSession) -> DataFrame:
         """Union of all marker-committed batches — for append-mode
@@ -162,7 +168,7 @@ class FanOutSink:
             batch_df.unpersist()
 
 
-class ContinuousAggregateSink:
+class ContinuousAggregateSink(CommitMarkers):
     """Materialized continuous-aggregate maintenance — the streaming
     half of q_multires_rollup's hypertable story: an UPDATE-mode
     windowed aggregation emits each batch's changed (key, accumulator)
@@ -193,33 +199,10 @@ class ContinuousAggregateSink:
     """
 
     def __init__(self, out_dir: str, key_cols: list[str]) -> None:
-        self.out_dir = out_dir
+        super().__init__(out_dir)
         self.key_cols = list(key_cols)
         self.snap_dir = os.path.join(out_dir, "snap")
-        self.commits_dir = os.path.join(out_dir, "_commits")
         os.makedirs(self.snap_dir, exist_ok=True)
-        os.makedirs(self.commits_dir, exist_ok=True)
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.commits_dir, str(batch_id))
-
-    def is_committed(self, batch_id: int) -> bool:
-        return os.path.exists(self._marker(batch_id))
-
-    def committed_batches(self) -> list[int]:
-        # batch-id-named markers only (same rationale as
-        # IdempotentBatchSink.committed_batches: torn .tmp markers and
-        # stray files are not commits and must not crash the listing)
-        return sorted(
-            int(b)
-            for b in os.listdir(self.commits_dir)
-            # isascii guard (round-10 ADVICE): str.isdigit alone
-            # accepts e.g. superscript '\u00b2' (int() rejects ->
-            # crash) and non-ASCII decimal digits like '\u0663'
-            # (int() PARSES -> a phantom commit id); only ASCII
-            # 0-9 names are commit markers
-            if b.isascii() and b.isdigit()
-        )
 
     def _snap_path(self, batch_id: int) -> str:
         return os.path.join(self.snap_dir, f"batch_id={batch_id}")
@@ -235,21 +218,25 @@ class ContinuousAggregateSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.is_committed(batch_id):
             return
-        spark = batch_df.sparkSession
         prior = [b for b in self.snapshot_batches() if b < batch_id]
-        if prior:
-            prev = spark.read.parquet(self._snap_path(prior[-1]))
-            keys = batch_df.select(*self.key_cols)
-            merged = prev.join(keys, self.key_cols, "left_anti").unionByName(
-                batch_df
-            )
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(self._snap_path(batch_id))
-        fd, tmp = tempfile.mkstemp(dir=self.commits_dir, prefix=".tmp")
-        os.close(fd)
-        os.rename(tmp, self._marker(batch_id))
+        prev = (
+            batch_df.sparkSession.read.parquet(self._snap_path(prior[-1]))
+            if prior
+            else None
+        )
+        self._merge(prev, batch_df).write.mode("overwrite").parquet(
+            self._snap_path(batch_id)
+        )
+        self._commit(batch_id)
         self._gc(batch_id)
+
+    def _merge(self, prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        """Snapshot N from snapshot N−1 (None for the first) and batch N:
+        replace by key."""
+        if prev is None:
+            return batch_df
+        keys = batch_df.select(*self.key_cols)
+        return prev.join(keys, self.key_cols, "left_anti").unionByName(batch_df)
 
     def _gc(self, batch_id: int) -> None:
         """Retention: drop snapshot DATA older than the previous
@@ -310,31 +297,19 @@ class CdcUpsertSink(ContinuousAggregateSink):
         super().__init__(out_dir, key_cols)
         self.version_cols = list(version_cols)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
+    def _merge(self, prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        spark = batch_df.sparkSession
-        prior = [b for b in self.snapshot_batches() if b < batch_id]
-        merged = batch_df
-        if prior:
-            prev = spark.read.parquet(self._snap_path(prior[-1]))
-            merged = prev.unionByName(batch_df)
+        merged = batch_df if prev is None else prev.unionByName(batch_df)
         w = Window.partitionBy(*self.key_cols).orderBy(
             *[F.col(v).desc() for v in self.version_cols]
         )
-        latest = (
+        return (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        latest.write.mode("overwrite").parquet(self._snap_path(batch_id))
-        fd, tmp = tempfile.mkstemp(dir=self.commits_dir, prefix=".tmp")
-        os.close(fd)
-        os.rename(tmp, self._marker(batch_id))
-        self._gc(batch_id)
 
 
 def derive_coarser(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -17,7 +18,8 @@ ORACLE_SF = "/root/testdata/sf0.01"
 def spark():
     from kafka_flink_exactlyonce_example_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=cpus)
     yield spark
     spark.stop()
 

@@ -155,3 +155,33 @@ def test_run_overlapped_keeps_the_callers_job_group(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
+
+
+def test_run_overlapped_cancels_the_siblings_jobs_on_failure(spark):
+    """One thunk raising cancels the job a sibling is running instead of
+    waiting it out: the call raises the thunk's error within seconds,
+    and the sibling's job ends cancelled."""
+    sc = spark.sparkContext
+    sibling_error: list[BaseException] = []
+
+    def long_job():
+        # 400 half-second tasks: about a minute on 4 cores if not cancelled
+        try:
+            return sc.parallelize(range(400), 400).map(lambda x: time.sleep(0.5) or x).count()
+        except Exception as e:
+            sibling_error.append(e)
+            raise
+
+    def fail_once_the_sibling_runs():
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getActiveJobsIds():
+            assert time.monotonic() < deadline, "sibling job never started"
+            time.sleep(0.05)
+        raise ValueError("thunk failed")
+
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="thunk failed"):
+        run_overlapped(long_job, fail_once_the_sibling_runs)
+    assert time.monotonic() - t0 < 20
+    assert len(sibling_error) == 1
+    assert "cancel" in str(sibling_error[0]).lower()

@@ -1,26 +1,22 @@
 """Registration-order contract: the driver's correctness gate grades the
-FIRST 50 keys of ``queries()`` in dict order (round-1 evidence:
-CORRECTNESS_r01.json keys == list(QUERIES)[:50]).
+FIRST 50 keys of ``queries()`` in dict order (CORRECTNESS_r01.json keys
+== list(QUERIES)[:50]).
 
-Since round 8 the window is DERIVED (``registry.derive_window``) from
-the driver's on-disk CORRECTNESS artifacts + two declared inputs
-(``_CHANGED_IN_ROUND``, ``_BACKLOG_ORDER``) — round 7 proved a
-hand-listed tuple desynchronizes from a hand-bumped counter (the bump
-landed, the rotation didn't, and the driver re-graded round 6's exact
-50 keys; VERDICT r07 headline). These tests therefore verify the
-PROPERTIES of the derivation rather than a per-round key list:
+The window is derived (``registry.derive_window``) from the driver's
+on-disk CORRECTNESS artifacts plus one declared input,
+``_CHANGED_IN_ROUND``, so these tests check the properties of the
+derivation rather than a per-round key list:
 
 (a) the applied order is exactly the derivation's output;
-(b) the window guarantees ``min(40, |never-graded|)`` first-ever keys,
-    so the backlog drains at >= 40/round until empty;
-(c) every changed-this-round key is in the window (new plans re-earn
-    driver rows instead of coasting on stale greens);
-(d) family span: every `_FAMILY_KEEP_PRIORITY` family is covered unless
-    the window is genuinely full of higher-priority keys, and only the
-    lowest-priority families are dropped;
+(b) every changed-this-round key is in the window (new plans re-earn
+    driver rows instead of coasting on stale greens), and a past
+    round's entry pins nothing;
+(c) every `_FAMILY_KEEP_PRIORITY` family is covered;
+(d) stalest first: a never-graded key (round 0) goes ahead of every
+    graded key that is not a family keep, and the oldest driver rows
+    are re-graded first;
 (e) the derived round number tracks the artifacts on disk, so a new
-    CORRECTNESS file rotates the window automatically — no counter to
-    forget.
+    CORRECTNESS file rotates the window automatically.
 """
 
 from __future__ import annotations
@@ -29,6 +25,8 @@ import glob
 import json
 import pathlib
 import re
+
+import pytest
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -72,86 +70,27 @@ def test_graded_before_reads_only_prior_rounds(registry_loaded):
     assert prior <= everything
 
 
-def test_window_min_first_ever(registry_loaded):
-    """>= min(40, |never-graded|) first-ever keys per round — the drain
-    rate VERDICT r07 item 1 requires (55 -> <=15 after r08 -> 0 after
-    r09)."""
-    prior = registry_loaded.graded_before()
-    never = {k for k in registry_loaded.QUERIES if k not in prior}
-    window = set(_first50(registry_loaded))
-    target = min(registry_loaded._MIN_FIRST_EVER, len(never))
-    assert len(window & never) >= target, (
-        f"only {len(window & never)} first-ever keys in window, "
-        f"need {target}"
-    )
-
-
 def test_changed_impls_stay_in_window(registry_loaded):
     """Keys whose plans changed this round must be graded with the new
     implementation, not coast on a stale green row."""
     assert registry_loaded.changed_in() <= set(_first50(registry_loaded))
 
 
-def test_family_span_or_backlog_pressure(registry_loaded):
-    """Every family is covered when slots allow; under backlog pressure
-    only the lowest-priority tail (rows-only smoke families) may drop,
-    and then the window must actually be full of first-ever keys."""
-    window = _first50(registry_loaded)
-    covered = {
-        registry_loaded._module_of(registry_loaded.QUERIES[k]) for k in window
-    }
-    required = [
-        fam
-        for fam in registry_loaded._FAMILY_KEEP_PRIORITY
-        if any(
-            registry_loaded._module_of(fn) == fam
-            for fn in registry_loaded.QUERIES.values()
-        )
-    ]
-    missing = [fam for fam in required if fam not in covered]
-    if missing:
-        # keeps are handed out in priority order, so a family may only
-        # be dropped if every family that DID get a keep slot ranks
-        # higher — pops/changed cover families out of order, which is
-        # fine; the keep budget itself must never skip a priority.
-        prior = registry_loaded.graded_before()
-        never = {k for k in registry_loaded.QUERIES if k not in prior}
-        changed = registry_loaded.changed_in()
-        keep_keys = [
-            k for k in window
-            if k != "q_wordcount" and k not in never and k not in changed
-        ]
-        idx = {fam: i for i, fam in enumerate(required)}
-        keep_fams = {
-            registry_loaded._module_of(registry_loaded.QUERIES[k])
-            for k in keep_keys
-        }
-        worst_keep = max((idx[f] for f in keep_fams if f in idx), default=-1)
-        best_missing = min(idx[f] for f in missing)
-        assert worst_keep < best_missing, (
-            f"family {required[best_missing]} dropped while lower-priority "
-            f"families kept: {sorted(keep_fams)}"
-        )
-        # …and only because the window genuinely filled with first-ever
-        # + changed keys
-        target = min(registry_loaded._MIN_FIRST_EVER, len(never))
-        assert len(set(window) & never) >= target
+def _required_families(registry_loaded) -> set[str]:
+    modules = {registry_loaded._module_of(fn) for fn in registry_loaded.QUERIES.values()}
+    return set(registry_loaded._FAMILY_KEEP_PRIORITY) & modules
 
 
-def test_backlog_order_covers_never_graded(registry_loaded):
-    """_BACKLOG_ORDER has no duplicates, and every never-graded key is
-    either listed in it or a future addition (handled by the derivation's
-    sorted append) — so the drain order is total and deterministic."""
-    backlog = list(registry_loaded._BACKLOG_ORDER)
-    assert len(backlog) == len(set(backlog))
-    prior = registry_loaded.graded_before()
-    never = {k for k in registry_loaded.QUERIES if k not in prior}
-    unlisted = never - set(backlog)
-    # every unlisted never-graded key would be appended sorted; listing
-    # is preferred but the derivation tolerates additions. Pin today's
-    # state: the round-7 backlog is fully listed.
-    assert unlisted == set(), f"add new keys to _BACKLOG_ORDER: {sorted(unlisted)}"
+def _covered_families(registry_loaded, window) -> set[str]:
+    return {registry_loaded._module_of(registry_loaded.QUERIES[k]) for k in window}
 
+
+def test_window_covers_every_family(registry_loaded):
+    """One keep per family: the window spans the whole SURVEY §2 surface."""
+    missing = _required_families(registry_loaded) - _covered_families(
+        registry_loaded, _first50(registry_loaded)
+    )
+    assert not missing, f"window misses families: {sorted(missing)}"
 
 def test_reorder_is_complete_and_lossless(registry_loaded):
     """Reordering must not drop or duplicate any registered query."""
@@ -161,11 +100,10 @@ def test_reorder_is_complete_and_lossless(registry_loaded):
 
 
 def test_next_round_auto_rotation_preview(registry_loaded):
-    """The whole point of the derivation: when the driver lands the
-    current round's artifact, the NEXT round's window must pop the
-    entire leftover backlog with no hand edit (round-9 instance of this
-    test proved the 16-key final pop; generalized once the backlog
-    drained). Simulated by injecting the would-be graded set."""
+    """When the driver lands the current round's artifact, the next
+    round's window must take every still-ungraded key and span every
+    family with no hand edit. Simulated by injecting the would-be graded
+    set."""
     cur = registry_loaded.rotation_round()
     this_window = registry_loaded.derive_window()
     prior_next = registry_loaded.graded_before() | set(this_window)
@@ -176,41 +114,68 @@ def test_next_round_auto_rotation_preview(registry_loaded):
         f"{sorted(leftovers - set(nxt))}"
     )
     assert len(nxt) == 50
-    # with the backlog drained, the family span is fully restored
-    covered = {
-        registry_loaded._module_of(registry_loaded.QUERIES[k]) for k in nxt
-    }
-    required = {
-        fam
-        for fam in registry_loaded._FAMILY_KEEP_PRIORITY
-        if any(
-            registry_loaded._module_of(fn) == fam
-            for fn in registry_loaded.QUERIES.values()
-        )
-    }
-    assert required <= covered, (
-        f"round {cur + 1} misses families: {required - covered}"
+    missing = _required_families(registry_loaded) - _covered_families(
+        registry_loaded, nxt
     )
+    assert not missing, f"round {cur + 1} misses families: {sorted(missing)}"
 
-
-def test_changed_in_is_round_scoped(registry_loaded):
-    """ADVICE r08: a past round's changed-keys entry must be inert —
-    deriving a LATER round's window ignores it, so a forgotten hand
-    edit can only under-pin, never permanently over-pin."""
-    assert registry_loaded.changed_in(8) == registry_loaded._CHANGED_IN_ROUND[8]
-    # rounds with no entry pin nothing
+def test_changed_in_is_round_scoped(registry_loaded, monkeypatch):
+    """A changed-keys entry pins its own round's window only: deriving any
+    other round ignores it, so a forgotten hand edit can under-pin but
+    never permanently over-pin."""
+    newest = registry_loaded.newest_grade_rounds()
+    # the freshest keys: nothing but a pin puts them at the window head
+    pinned = frozenset(
+        sorted(registry_loaded.QUERIES, key=lambda k: (-newest.get(k, 0), k))[:3]
+    ) - {"q_wordcount"}
+    monkeypatch.setitem(registry_loaded._CHANGED_IN_ROUND, 9998, pinned)
+    assert registry_loaded.changed_in(9998) == pinned
     assert registry_loaded.changed_in(9999) == frozenset()
-    # the round-8 pins do not leak into a later round's window
-    # derivation: with every key already graded, a later window's
-    # non-wordcount prefix comes from keeps/regrades, not round-8 pins
-    # (probe a round with NO _CHANGED_IN_ROUND entry of its own)
     prior_all = set(registry_loaded.QUERIES)
+    head = slice(1, 1 + len(pinned))
+    w = registry_loaded.derive_window(round_no=9998, prior=prior_all)
+    assert w[head] == sorted(pinned)
     w = registry_loaded.derive_window(round_no=9999, prior=prior_all)
-    pinned = registry_loaded._CHANGED_IN_ROUND[8] - {"q_wordcount"}
-    # pins would force all round-8 keys into the window head right
-    # after q_wordcount; the round-scoped lookup must not do that
-    assert set(w[1 : 1 + len(pinned)]) != pinned
+    assert set(w[head]) != pinned
 
+
+def test_changed_key_typo_is_rejected(registry_loaded, monkeypatch):
+    monkeypatch.setitem(
+        registry_loaded._CHANGED_IN_ROUND, 9998, frozenset({"q_no_such_key"})
+    )
+    with pytest.raises(KeyError, match="q_no_such_key"):
+        registry_loaded.derive_window(round_no=9998)
+
+
+def test_never_graded_key_precedes_graded_regrades(registry_loaded):
+    """Dropping keys from ``prior`` makes them never graded (round 0), so
+    they land ahead of every graded key outside the wordcount / changed /
+    family-keep head. Two fresh keys of one family are dropped: the first
+    becomes that family's keep, the second must lead the stalest-first
+    tail."""
+    newest = registry_loaded.newest_grade_rounds()
+    window = set(registry_loaded.derive_window())
+    by_module: dict[str, list[str]] = {}
+    for k in sorted(registry_loaded.QUERIES, key=lambda k: (-newest.get(k, 0), k)):
+        if k not in window and k not in registry_loaded.changed_in():
+            fam = registry_loaded._module_of(registry_loaded.QUERIES[k])
+            by_module.setdefault(fam, []).append(k)
+    dropped = next(keys[:2] for keys in by_module.values() if len(keys) >= 2)
+    prior = registry_loaded.graded_before() - set(dropped)
+    w = registry_loaded.derive_window(prior=prior)
+    assert set(dropped) <= set(w)
+    # a family keep is the first window key of its module; q_wordcount
+    # and changed keys sit ahead of the keeps
+    seen: set[str] = set()
+    regrades = []
+    for k in w:
+        fam = registry_loaded._module_of(registry_loaded.QUERIES[k])
+        if fam in seen and k in prior:
+            regrades.append(k)
+        seen.add(fam)
+    assert regrades, "window holds no graded non-family key"
+    first_regrade = w.index(regrades[0])
+    assert all(w.index(k) < first_regrade for k in dropped), (dropped, w)
 
 def test_window_drains_stalest_regrades(registry_loaded):
     """Round-11 freshness mechanism (VERDICT r10 item 3): with the
