@@ -1,5 +1,5 @@
 """Bench harness: every registered query at $SPARK_GRAFT_SF_DIR
-(default sf0.1) on one reused local[$SPARK_GRAFT_CPUS] session.
+(default sf0.1) on one reused ``local[session.local_cpus()]`` session.
 
 Prints ONE SHORT JSON line (round 1 lesson: a 175-key map on stdout got
 truncated by the driver's capture → ``"parsed": null`` in BENCH_r01):
@@ -39,7 +39,7 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     from kafka_flink_exactlyonce_example_spark import registry
-    from kafka_flink_exactlyonce_example_spark.session import get_spark
+    from kafka_flink_exactlyonce_example_spark.session import get_spark, local_cpus
 
     registry.load_all()
     spark = get_spark(app_name="bench")
@@ -85,7 +85,7 @@ def main() -> None:
             # self-identify which run a map belongs to (VERDICT r16
             # item 2: an 8-core scaling rerun was only identifiable by
             # cross-referencing loadavg tails)
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "na"),
+            "cpus": local_cpus(),
             "loadavg_before": load_before,
             "loadavg_after": load_after,
             "caches": caches,
@@ -128,7 +128,7 @@ def main() -> None:
         # the plain r{N} name; any later run of the same round — e.g. a
         # scaling rerun at a different $SPARK_GRAFT_CPUS — lands under a
         # distinct _c{cpus}[_sK] name so every map survives.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "na")
+        cpus = local_cpus()
         dest = here / f"BENCH_FULL_r{label:02d}.json"
         if dest.exists():
             dest = here / f"BENCH_FULL_r{label:02d}_c{cpus}.json"
