@@ -684,7 +684,6 @@ from kafka_flink_exactlyonce_example_spark.operators.overlap import (  # noqa: E
 from kafka_flink_exactlyonce_example_spark.operators.ingest import (  # noqa: E402
     _DEL_TAG_SQL,
     _GATE_POST_CTES,
-    _gate_frame,
     _is_del_col,
     gate_flags_for,
 )
@@ -694,7 +693,7 @@ from kafka_flink_exactlyonce_example_spark.operators.simsearch import (  # noqa:
     inc_index_build,
     inc_indexed1_for,
 )
-from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query  # noqa: E402
+from kafka_flink_exactlyonce_example_spark.registry import query  # noqa: E402
 from kafka_flink_exactlyonce_example_spark.sources import table  # noqa: E402
 
 #: q_gen_promote's graded bars, REUSED BY IMPORT (not re-hardcoded —
@@ -835,108 +834,6 @@ _ROLL_ORACLE = (
 )
 
 
-@plan_aux("q_generation_roll::gate")
-def _roll_gate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The roll census's admission stage in LAZY form — the census
-    checkpoints the |batch|-bounded gate verdict (it is referenced by
-    the digest fold, the admitted-vector slice, AND the batch
-    aggregate, and a lazy reference re-runs the whole gate chain per
-    consumer), which hides the chain behind a LogicalRDD; registered
-    here under the plan guards (the q_pca_power::moments rule).
-    Round 15: the census gates against gen-1 SURVIVORS (the takedown
-    wave threaded through all three checks), so the guarded chain is
-    the survivors_only variant."""
-    return _gate_frame(spark, sf_dir, survivors_only=True)
-
-
-@plan_aux("q_generation_roll::route")
-def _roll_route_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The census's admitted-vector slice + frozen routing in LAZY
-    form — the query checkpoints both (|batch|-bounded, each consumed
-    by several warm-cycle stages), hiding the embeddings scan, the
-    gate semi-join, and the two-stage routing behind LogicalRDDs;
-    registered here under the plan guards (the q_pca_power::moments
-    rule — round-14 self-review: only the gate chain had an aux)."""
-    flags = _gate_frame(spark, sf_dir, survivors_only=True)
-    cent1, seeds1 = inc_index_build(spark, sf_dir)
-    adm_vecs = (
-        _inc_tagged(spark, sf_dir)
-        .filter(F.col("is_new"))
-        .select("vec_id", "label", "embedding")
-        .join(
-            flags.filter(F.col("admitted") == 1)
-            .select("doc_id")
-            .withColumnRenamed("doc_id", "vec_id"),
-            "vec_id",
-            "left_semi",
-        )
-    )
-    return frozen_route(
-        adm_vecs.select("vec_id", "embedding"), cent1, seeds1
-    )
-
-
-@plan_aux("q_generation_roll::index")
-def _roll_index_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The gen-1 posting relation (assign chain) and the merged roll
-    corpus (tombstone anti-join ∪ admitted) in LAZY form — the census
-    checkpoints both (each is read by several warm-cycle/churn
-    stages), hiding the corpus-touching chains behind LogicalRDDs;
-    registered under the plan guards (the q_pca_power::moments
-    rule). Joined on the posting id so both derivations sit in one
-    fingerprinted plan."""
-    cent1, seeds1 = inc_index_build(spark, sf_dir)
-    tagged = _inc_tagged(spark, sf_dir)
-    old = tagged.filter(~F.col("is_new")).select(
-        "vec_id", "label", "embedding"
-    )
-    tomb = old.filter(_is_del_col()).select("vec_id")
-    indexed1 = _assign_to_seeds(old, seeds1)
-    merged = tombstone_filter(old, tomb).select("vec_id")
-    return indexed1.join(merged, "vec_id", "left_semi")
-
-
-@plan_aux("q_generation_roll::index2")
-def _roll_index2_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ROLLED generation's posting relation (warm_index_cycle's
-    ``indexed2``) in LAZY form — round 17: the census checkpoints it
-    because it is consumed by BOTH the post-roll posting count and the
-    v2 churn side, and Catalyst does not share the anti-join/retrain/
-    union subtree across crossJoin branches (the round-16 census
-    lesson), so the un-checkpointed row evaluated the whole warm-cycle
-    chain twice per run. The checkpoint hides the chain behind a
-    LogicalRDD; it is registered here under the plan guards (the
-    q_pca_power::moments rule). Built with the EMPTY fired set the
-    graded SFs execute (the fired collects are data-derived driver
-    results an aux must not run jobs for; at every graded SF both
-    reports fire zero cells — the standing q_generation_roll guard)."""
-    flags = _gate_frame(spark, sf_dir, survivors_only=True)
-    cent1, seeds1 = inc_index_build(spark, sf_dir)
-    tagged = _inc_tagged(spark, sf_dir)
-    old = tagged.filter(~F.col("is_new")).select(
-        "vec_id", "label", "embedding"
-    )
-    new = tagged.filter(F.col("is_new")).select(
-        "vec_id", "label", "embedding"
-    )
-    tomb = old.filter(_is_del_col()).select("vec_id")
-    adm_vecs = new.join(
-        flags.filter(F.col("admitted") == 1)
-        .select(F.col("doc_id").alias("vec_id")),
-        "vec_id",
-        "left_semi",
-    )
-    adm_routed = frozen_route(
-        adm_vecs.select("vec_id", "embedding"), cent1, seeds1
-    )
-    indexed1 = _assign_to_seeds(old, seeds1)
-    merged = tombstone_filter(old, tomb).unionByName(adm_vecs)
-    _cent2, _seeds2, indexed2 = warm_index_cycle(
-        merged, seeds1, indexed1, adm_routed, tomb, []
-    )
-    return indexed2
-
-
 @query("q_generation_roll", oracle=_ROLL_ORACLE)
 def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generation roll's BOOKKEEPING, driver-graded in one row
@@ -984,8 +881,8 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen-1 posting relation, and the merged roll corpus are
     checkpointed (re-execution discipline; in production the posting
     relation is loaded from the generation's parquet — already
-    materialized), with every hidden chain plan-aux-registered
-    (::gate, ::route, ::index). COST NOTE: this is by construction
+    materialized); the plan gate fingerprints each checkpoint's
+    executed plan under this key. COST NOTE: this is by construction
     the most composed row in the suite — ~6 chained relational
     programs — and its measured warm floor is ~10 s at sf0.1 on
     local[32] (the churn pair alone costs ~3.5 s there); that is the
@@ -1017,8 +914,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain per consumer (the round-12 re-execution lesson). In
     # production this relation is LOADED from the generation's parquet
     # — already materialized — so the checkpoint is the honest
-    # in-session stand-in, not a cheat. The hidden chain stays under
-    # the plan guards via the ::index aux. Resolved on the MAIN thread
+    # in-session stand-in, not a cheat. Resolved on the MAIN thread
     # (the overlap-wave rule: session caches never resolve in thunks).
     indexed1 = inc_indexed1_for(spark, sf_dir)
 
@@ -1071,8 +967,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # indexed2 feeds BOTH the post-roll posting count and the v2 churn
     # side, and Catalyst does not share the warm-cycle subtree across
     # crossJoin branches — the un-checkpointed row evaluated the whole
-    # anti-join/retrain/union chain twice per run (round 17; the
-    # hidden chain sits under the plan guards via the ::index2 aux)
+    # anti-join/retrain/union chain twice per run
     indexed2 = indexed2.localCheckpoint()
 
     probes = new.select("vec_id", "embedding")
@@ -1266,22 +1161,15 @@ _DC_ORACLE = f"""
 """.replace("{K}", str(_RECALL_K))
 
 
-def _dc_core(
-    members: DataFrame, centn: DataFrame, checkpoint: bool = True
-):
+def _dc_core(members: DataFrame, centn: DataFrame):
     """The derivation's corpus-touching relations — md5 panel, routing
     ranks, brute truth — over ANY (vec_id, label, embedding) member
-    relation and (label, centroid) router (round 16: generalized from
-    the gen-1-only builder so q_derived_catalog2 can run the SAME
-    program over the rolled generation's posting relation), with the
-    checkpoint flag pattern (:func:`dedup._tt_plant`'s):
-    ``checkpoint=True`` is the executed chain (each relation is
-    consumed by 2–3 downstream stages, and a lazy reference re-runs
-    its full member scan per consumer — the round-12 lesson;
-    measured: the un-checkpointed row paid ~3 redundant embeddings
-    scans per run), ``checkpoint=False`` the plan-aux's LAZY view of
-    the SAME builders, so the guarded plan can never desynchronize
-    from the executed one."""
+    relation and (label, centroid) router, so q_derived_catalog and
+    q_derived_catalog2 run the SAME program over their generations.
+    Each relation is checkpointed: each is consumed by 2–3 downstream
+    stages, and a lazy reference re-runs its full member scan per
+    consumer (the un-checkpointed row paid ~3 redundant embeddings
+    scans per run)."""
     from pyspark.sql import Window
 
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
@@ -1290,9 +1178,7 @@ def _dc_core(
 
     p = md5_panel(members.select("vec_id", "embedding")).select(
         F.col("vec_id").alias("pid"), F.col("embedding").alias("pe")
-    )
-    if checkpoint:
-        p = p.localCheckpoint()  # feeds rankr, truth AND panel_n
+    ).localCheckpoint()  # feeds rankr, truth AND panel_n
     rank_w = Window.partitionBy("pid").orderBy(F.desc("rsim"), "label")
     rankr = (
         p.crossJoin(F.broadcast(centn))
@@ -1319,20 +1205,16 @@ def _dc_core(
         .filter(F.col("trn") <= _RECALL_K)
         .select("pid", "vec_id")
     )
-    if checkpoint:
-        # rankr (bounded |panel|·max(nprobes)) and truth (bounded
-        # |panel|·K, consumed by the hit join AND the trials count —
-        # un-checkpointed, the |panel| × n truth scan runs twice) both
-        # depend only on the p checkpoint above and not on each other,
-        # so their materializations overlap (guide §2.6; plans
-        # unchanged, only WHEN each runs moves — round 17)
-        rankr, truth = run_overlapped(
-            rankr.localCheckpoint, truth.localCheckpoint
-        )
+    # rankr (bounded |panel|·max(nprobes)) and truth (bounded |panel|·K,
+    # consumed by the hit join AND the trials count — un-checkpointed,
+    # the |panel| × n truth scan runs twice) both depend only on the p
+    # checkpoint above and not on each other, so their materializations
+    # overlap (plans unchanged, only WHEN each runs moves)
+    rankr, truth = run_overlapped(rankr.localCheckpoint, truth.localCheckpoint)
     return members, p, rankr, truth
 
 
-def _dc_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
+def _dc_frames(spark: SparkSession, sf_dir: str):
     """q_derived_catalog's state: :func:`_dc_core` over the standing
     frozen gen-1 members and the incremental index's coarse router."""
     cent, _seeds = inc_index_build(spark, sf_dir)
@@ -1343,19 +1225,7 @@ def _dc_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
         .filter(~F.col("is_new"))
         .select("vec_id", "label", "embedding")
     )
-    return _dc_core(members, centn, checkpoint)
-
-
-@plan_aux("q_derived_catalog::state")
-def _dc_state_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derivation's corpus-touching chains in LAZY form — the
-    md5-TakeOrdered panel, the routing ranks, and the |panel| × n
-    brute truth — which the graded row checkpoints; joined on the
-    probe id so every hidden chain sits in one fingerprinted plan
-    under the plan guards (the q_pca_power::moments rule). Same
-    builders as the executed chain (checkpoint=False)."""
-    _members, p, rankr, truth = _dc_frames(spark, sf_dir, checkpoint=False)
-    return p.join(rankr, "pid").join(truth, "pid")
+    return _dc_core(members, centn)
 
 
 @query("q_derived_catalog", oracle=_DC_ORACLE)
@@ -1389,8 +1259,7 @@ def q_derived_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregates composed via broadcast crossJoins (the census
     idiom). The panel, ranks and truth are checkpointed (each is
     consumed by 2–3 downstream stages; round-15 self-review — the
-    un-checkpointed row paid ~3 redundant member scans per run), with
-    the hidden chains under the plan guards via the ::state aux. No
+    un-checkpointed row paid ~3 redundant member scans per run). No
     corpus × corpus relation, no data-scaled shuffle key, no
     collect."""
     return _dc_rows(spark, *_dc_frames(spark, sf_dir))
@@ -1559,28 +1428,6 @@ _RDO_ORACLE = f"""
 """
 
 
-@plan_aux("q_roll_delete_only::state")
-def _rdo_state_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The delete-only census's corpus-touching state in LAZY form —
-    the gen-1 posting relation (assign chain), the survivor anti-join,
-    and the md5-TakeOrdered panel — which the graded row checkpoints
-    (each is referenced by several warm-cycle/churn stages); joined on
-    the posting id so every hidden chain sits in one fingerprinted
-    plan under the plan guards (the q_pca_power::moments rule)."""
-    cent1, seeds1 = inc_index_build(spark, sf_dir)
-    old = _inc_tagged(spark, sf_dir).filter(~F.col("is_new")).select(
-        "vec_id", "label", "embedding"
-    )
-    tomb = old.filter(_is_del_col()).select("vec_id")
-    indexed1 = _assign_to_seeds(old, seeds1)
-    surv = tombstone_filter(old, tomb)
-    panel = md5_panel(surv.select("vec_id", "embedding")).select("vec_id")
-    return (
-        indexed1.join(surv.select("vec_id"), "vec_id", "left_semi")
-        .join(panel, "vec_id", "left_semi")
-    )
-
-
 @query("q_roll_delete_only", oracle=_RDO_ORACLE.replace(
     "{B0}", str(_PROMOTE_THRESHOLDS[0])
 ).replace("{B1}", str(_PROMOTE_THRESHOLDS[1])))
@@ -1624,8 +1471,7 @@ def q_roll_delete_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice against broadcast tables with two sub-cell posting scans,
     1-row aggregates composed via broadcast crossJoins. The posting
     relation, survivor slice and panel are checkpointed
-    (re-execution discipline; hidden chains under the plan guards via
-    the ::state aux)."""
+    (re-execution discipline)."""
     cent1, seeds1 = inc_index_build(spark, sf_dir)
     old = _inc_tagged(spark, sf_dir).filter(~F.col("is_new")).select(
         "vec_id", "label", "embedding"
@@ -1755,7 +1601,7 @@ _DC2_ORACLE = (
 )
 
 
-def _dc2_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
+def _dc2_frames(spark: SparkSession, sf_dir: str):
     """q_derived_catalog2's state: the ROLLED generation's posting
     relation and coarse router, built by the q_generation_roll window
     (gate against gen-1 survivors → admitted vectors at their
@@ -1767,11 +1613,7 @@ def _dc2_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
         frozen_centroids,
     )
 
-    flags = (
-        gate_flags_for(spark, sf_dir, survivors_only=True)
-        if checkpoint
-        else _gate_frame(spark, sf_dir, survivors_only=True)
-    )
+    flags = gate_flags_for(spark, sf_dir, survivors_only=True)
     cent1, seeds1 = inc_index_build(spark, sf_dir)
     tagged = _inc_tagged(spark, sf_dir)
     old = tagged.filter(~F.col("is_new")).select(
@@ -1788,16 +1630,14 @@ def _dc2_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
         "left_semi",
     )
     surv = tombstone_filter(old, tomb)
-    if checkpoint:
-        # adm_vecs and surv are independent (batch semi-join vs corpus
-        # anti-join; surv feeds TWO separately materialized chains —
-        # x2 below and the coarse retrain via merged — without the
-        # checkpoint the survivor anti-join scan executes twice, the
-        # round-12 lazy re-execution hazard), so wave 1 overlaps them
-        # (guide §2.6, round 17; plans unchanged)
-        adm_vecs, surv = run_overlapped(
-            adm_vecs.localCheckpoint, surv.localCheckpoint
-        )
+    # adm_vecs and surv are independent (batch semi-join vs corpus
+    # anti-join; surv feeds TWO separately materialized chains — x2
+    # below and the coarse retrain via merged — and without the
+    # checkpoint the survivor anti-join scan executes twice), so wave 1
+    # overlaps them (plans unchanged)
+    adm_vecs, surv = run_overlapped(
+        adm_vecs.localCheckpoint, surv.localCheckpoint
+    )
     adm_routed = frozen_route(
         adm_vecs.select("vec_id", "embedding"), cent1, seeds1
     )
@@ -1810,33 +1650,11 @@ def _dc2_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
     cent2 = frozen_centroids(merged)
     ckey = "cell" if "cell" in cent2.columns else "label"
     centn = cent2.select(F.col(ckey).alias("label"), "centroid")
-    if checkpoint:
-        # wave 2: the gen-2 member union (feeds panel, truth AND cand)
-        # and the retrained coarse router (bounded |labels| rows) both
-        # read only wave-1 checkpoints — overlapped for the same reason
-        x2, centn = run_overlapped(
-            x2.localCheckpoint, centn.localCheckpoint
-        )
-    return _dc_core(x2, centn, checkpoint)
-
-
-@plan_aux("q_derived_catalog2::state")
-def _dc2_state_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_derived_catalog2's hidden chains in LAZY form — the gate
-    verdict, the admitted-vector routing, the gen-2 posting union,
-    the retrained centroids, the md5 panel, the routing ranks, and
-    the |panel| × n brute truth — joined on the probe id under the
-    plan guards (the q_pca_power::moments rule)."""
-    members, p, rankr, truth = _dc2_frames(spark, sf_dir, checkpoint=False)
-    return (
-        p.join(rankr, "pid")
-        .join(truth, "pid")
-        .join(
-            members.select(F.col("vec_id").alias("pid")),
-            "pid",
-            "left_semi",
-        )
-    )
+    # wave 2: the gen-2 member union (feeds panel, truth AND cand) and
+    # the retrained coarse router (bounded |labels| rows) both read only
+    # wave-1 checkpoints — overlapped for the same reason
+    x2, centn = run_overlapped(x2.localCheckpoint, centn.localCheckpoint)
+    return _dc_core(x2, centn)
 
 
 @query("q_derived_catalog2", oracle=_DC2_ORACLE)
@@ -1871,5 +1689,5 @@ def q_derived_catalog2(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates via broadcast crossJoins. Checkpoints: gate verdict,
     admitted vectors, the gen-2 member union, the retrained
     centroids, plus _dc_core's panel/ranks/truth (each 2–3
-    consumers; hidden chains under the ::state aux)."""
+    consumers)."""
     return _dc_rows(spark, *_dc2_frames(spark, sf_dir))

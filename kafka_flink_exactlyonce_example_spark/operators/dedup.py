@@ -29,7 +29,7 @@ from kafka_flink_exactlyonce_example_spark.functions.similarity import (
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
-from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query
+from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.session import hash_lane
 from kafka_flink_exactlyonce_example_spark.sources import table
 
@@ -856,8 +856,7 @@ def _semdedup_scored_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _embed_pairs_build(scored: DataFrame) -> DataFrame:
     """UNDIRECTED (va < vb) near-dup pair relation over the scored
     corpus: (label, cell)-blocked equi-join, raw cosine ≥ 0.3, with
-    both sides' rounded centroid cosines attached. One definition for
-    the executed cache build and the lazy ::pairs plan aux. The sim
+    both sides' rounded centroid cosines attached. The sim
     expression is exactly q_embed_dup's historical one — dot(ea, eb) /
     (na · nb) with per-row norms — and it is direction-symmetric bit
     for bit (per-element float multiply commutes, the zip_with sum
@@ -904,21 +903,10 @@ def _embed_pairs_build(scored: DataFrame) -> DataFrame:
 #: projection, and q_semdedup's dominance rule maps to one dropped id
 #: per undirected pair (va iff cb < ca, else vb — the tie drops the
 #: higher id, which the va < vb orientation encodes). Shared-cache
-#: policy: 2 consumers. The lazy chain stays under the plan guards via
-#: the q_embed_dup::pairs aux.
+#: policy: 2 consumers.
 @session_cache("embed_pairs", shared=True)
 def _embed_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _embed_pairs_build(_semdedup_scored_for(spark, sf_dir)).localCheckpoint()
-
-
-@plan_aux("q_embed_dup::pairs")
-def _embed_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The blocked pair join + HOF cosine chain in LAZY form —
-    q_embed_dup and q_semdedup consume it through the session-cached
-    checkpoint (``_embed_pairs_for``), which hides the join behind a
-    LogicalRDD in both returned plans; registered here under the plan
-    guards (the q_pca_power::moments rule)."""
-    return _embed_pairs_build(_semdedup_scored_for(spark, sf_dir))
 
 
 def _ivf_cells(e: DataFrame) -> DataFrame:
@@ -1721,14 +1709,10 @@ def _tg_cand(qb: DataFrame, capped: DataFrame) -> DataFrame:
     )
 
 
-@plan_aux("q_text_gen_fold::phase1")
 def _text_gen_phase1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phase 1 of the graded fold row in LAZY form: batch 1 ids
     anti-joined against the v1 near-text hits — the corpus-touching
-    band-join + verify chain. The query checkpoints this
-    |batch|-bounded frame, which hides the chain behind a LogicalRDD
-    in the returned plan, so it is registered here under the plan
-    guards (the q_pca_power::moments rule)."""
+    band-join + verify chain; the query checkpoints it."""
     base, bands_all, sets_all = _tg_base(spark, sf_dir)
     corpus_ids = base.filter(F.col("g") >= 2).select("doc_id")
     b1_ids = base.filter(F.col("g") == 0).select("doc_id")
@@ -1751,7 +1735,7 @@ def _text_gen_frames(spark: SparkSession, sf_dir: str):
     # slice, AND the v2 verifier — left lazy, each reference re-runs
     # the whole phase-1 band-join + verify (the round-12 crossJoin
     # re-execution lesson); one O(|batch|)-row checkpoint runs it
-    # once, with the hidden chain plan-aux-registered above
+    # once
     admitted_ids = _text_gen_phase1(spark, sf_dir).localCheckpoint()
 
     # planted near-copies of the first _TEXT_GEN_PLANT admitted docs:
@@ -2011,7 +1995,6 @@ def _tt_plant(
     base: DataFrame,
     pop,
     id_base: int,
-    checkpoint: bool = True,
     exact: bool = False,
 ) -> DataFrame:
     """Deterministic plant over the first _TT_PLANT docs of a
@@ -2020,11 +2003,8 @@ def _tt_plant(
     with the source, text not byte-equal; ``exact=True`` (round 15,
     q_gate_post_takedown's digest populations) copies the text
     VERBATIM instead, so the plant shares its source's normalized
-    digest. Checkpointed by default (O(1) rows referenced three
-    times: bands, word sets, probe ids); ``checkpoint=False`` is the
-    plan-aux's LAZY view of the SAME builder — one definition, so the
-    guarded plan can never desynchronize from the executed chain
-    (round-14 self-review)."""
+    digest. Checkpointed: O(1) rows referenced three times (bands,
+    word sets, probe ids)."""
     first_word = F.element_at(
         F.filter(F.split("text", " "), lambda w: w != ""), 1
     )
@@ -2045,30 +2025,7 @@ def _tt_plant(
             txt.alias("text"),
         )
     )
-    return planted.localCheckpoint() if checkpoint else planted
-
-
-@plan_aux("q_text_tombstone::plants")
-def _tt_plants_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two plant derivations in LAZY form (each a TakeOrdered over
-    the corpus scan) — q_text_tombstone checkpoints the 8 planted rows,
-    hiding these chains behind LogicalRDDs, so they are registered here
-    under the plan guards (the q_pca_power::moments rule). Same builder
-    as the executed chain (:func:`_tt_plant` with checkpoint=False)."""
-    base, _, _ = _tg_base(spark, sf_dir)
-    return _tt_plant(
-        base,
-        (F.col("g") >= 2) & _del_tag_col("doc_id"),
-        _TT_DEL_PLANT_BASE,
-        checkpoint=False,
-    ).unionByName(
-        _tt_plant(
-            base,
-            (F.col("g") >= 2) & ~_del_tag_col("doc_id"),
-            _TT_SURV_PLANT_BASE,
-            checkpoint=False,
-        )
-    )
+    return planted.localCheckpoint()
 
 
 _TT_DEL_SQL = """CAST(CAST(concat('0x', substring(

@@ -63,7 +63,6 @@ from kafka_flink_exactlyonce_example_spark.operators.dedup import (
 )
 from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
     _inc_tagged,
-    frozen_centroids,
     frozen_route,
     frozen_top1,
     inc_index_build,
@@ -73,7 +72,7 @@ from kafka_flink_exactlyonce_example_spark.operators.overlap import (
     run_overlapped,
     session_cache,
 )
-from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query
+from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
 
 #: The deterministic md5 'del:' tombstone split (~20% of ids) shared by
@@ -445,8 +444,8 @@ def _gate_frame(
     thread — the admission semantics q_generation_roll's census
     grades. Since round 16 both variants are projections of ONE dual
     chain (:func:`_gate_frame_dual` — one corpus pass, one scored
-    scan), so the lazy form here, the ::gate plan auxes, and the
-    session-cached checkpoints can never desynchronize."""
+    scan), so the lazy form here and the session-cached checkpoints
+    can never desynchronize."""
     return _gate_variant(_gate_frame_dual(spark, sf_dir), survivors_only)
 
 
@@ -460,9 +459,7 @@ def _gate_frame(
 #: which is exactly the shared-session-cache
 #: policy's threshold (VERDICT r08 item 3: multi-consumer relations are
 #: pre-built, timed cache line items; single-consumer ones stay on
-#: their query's row). The lazy chain stays under the plan guards via
-#: the ::gate auxes (q_ingest_gate::gate here, q_generation_roll::gate
-#: for the survivor variant).
+#: their query's row).
 @session_cache("gate_flags", shared=True)
 def _gate_flags_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _gate_frame_dual(spark, sf_dir).localCheckpoint()
@@ -475,17 +472,6 @@ def gate_flags_for(
     the requested variant — one |batch|-row materialization serves all
     four consumers of both variants."""
     return _gate_variant(_gate_flags_dual(spark, sf_dir), survivors_only)
-
-
-@plan_aux("q_ingest_gate::gate")
-def _ingest_gate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The standing-scenario gate chain in LAZY form — q_ingest_gate
-    and q_index_refresh consume it through the session-cached
-    checkpoint (``gate_flags_for``), which hides the chain behind a
-    LogicalRDD in both returned plans; registered here under the plan
-    guards (the q_pca_power::moments rule — the survivor-gated twin is
-    q_generation_roll::gate)."""
-    return _gate_frame(spark, sf_dir)
 
 
 @query(
@@ -501,9 +487,8 @@ def q_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc admission verdict for the 'inc:'-split ingest batch —
     see the module docstring. Composes three session-cached /
     frozen-index relations; the verdict relation itself is the shared
-    session cache ``gate_flags_for`` (round 16 — q_index_refresh
-    consumes the identical chain; the lazy plan stays guarded via the
-    ::gate aux)."""
+    session cache ``gate_flags_for`` (q_index_refresh consumes the
+    identical chain)."""
     return gate_flags_for(spark, sf_dir).drop("cell")
 
 
@@ -841,7 +826,7 @@ _GPT_EXACT_DEL_BASE = 6_000_000_000
 _GPT_EXACT_SURV_BASE = 7_000_000_000
 
 
-def _gpt_plants(base: DataFrame, checkpoint: bool = True) -> DataFrame:
+def _gpt_plants(base: DataFrame) -> DataFrame:
     """The four plant populations (16 rows): near/exact copies of the
     first 4 taken-down and the first 4 surviving corpus docs — ONE
     builder, :func:`dedup._tt_plant` (q_text_tombstone's recipe; the
@@ -851,19 +836,13 @@ def _gpt_plants(base: DataFrame, checkpoint: bool = True) -> DataFrame:
     del_pop = (F.col("g") >= 1) & _del_tag_col("doc_id")
     surv_pop = (F.col("g") >= 1) & ~_del_tag_col("doc_id")
     return (
-        _tt_plant(base, del_pop, _GPT_NEAR_DEL_BASE, checkpoint)
+        _tt_plant(base, del_pop, _GPT_NEAR_DEL_BASE)
+        .unionByName(_tt_plant(base, surv_pop, _GPT_NEAR_SURV_BASE))
         .unionByName(
-            _tt_plant(base, surv_pop, _GPT_NEAR_SURV_BASE, checkpoint)
+            _tt_plant(base, del_pop, _GPT_EXACT_DEL_BASE, exact=True)
         )
         .unionByName(
-            _tt_plant(
-                base, del_pop, _GPT_EXACT_DEL_BASE, checkpoint, exact=True
-            )
-        )
-        .unionByName(
-            _tt_plant(
-                base, surv_pop, _GPT_EXACT_SURV_BASE, checkpoint, exact=True
-            )
+            _tt_plant(base, surv_pop, _GPT_EXACT_SURV_BASE, exact=True)
         )
     )
 
@@ -871,8 +850,7 @@ def _gpt_plants(base: DataFrame, checkpoint: bool = True) -> DataFrame:
 #: Session cache of the materialized 16-row plant relation — the
 #: plants are a pure function of the fixtures, and their four
 #: TakeOrdered corpus chains cost ~0.7 s of SEQUENTIAL construction
-#: latency per graded run (round 16, VERDICT r15 item 3). The lazy
-#: chains stay visible to the plan guards via the ::plants aux below.
+#: latency per graded run.
 @session_cache("gpt_plants")
 def _gpt_plants_cached(
     spark: SparkSession, sf_dir: str
@@ -883,16 +861,6 @@ def _gpt_plants_cached(
     # other caller's differently-filtered base (round-16 self-review)
     base, _, _ = _tg_base(spark, sf_dir)
     return _gpt_plants(base)
-
-
-@plan_aux("q_gate_post_takedown::plants")
-def _gpt_plants_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The four plant derivations in LAZY form (each a TakeOrdered over
-    the corpus scan) — the graded row checkpoints the 16 planted rows,
-    hiding these chains behind a LogicalRDD, so they are registered
-    here under the plan guards (the q_pca_power::moments rule)."""
-    base, _, _ = _tg_base(spark, sf_dir)
-    return _gpt_plants(base, checkpoint=False)
 
 
 def _route_inline(
@@ -943,17 +911,12 @@ def _route_inline(
     )
 
 
-def _gpt_scored(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
-    """The gate pair's ONE-PASS scored relation — the two-stage batch
-    routing × the gen-1 posting assignment's sub-cell members, each
-    neighbor carrying its tombstone flag — with the checkpoint flag
-    pattern (round-16 self-review: one builder for the executed chain
-    AND the ::route aux, so the guarded plan can never desynchronize
-    from the executed one). ``checkpoint=True`` materializes the
-    bounded |batch| × posting-list relation once for BOTH top-1
-    windows; ``checkpoint=False`` is the aux's lazy view."""
+def _gpt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gate pair's ONE-PASS scored relation, lazy — the two-stage
+    batch routing × the gen-1 posting assignment's sub-cell members,
+    each neighbor carrying its tombstone flag. The caller checkpoints
+    the bounded |batch| × posting-list relation once for BOTH top-1
+    windows."""
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         cosine,
     )
@@ -986,19 +949,7 @@ def _gpt_scored(
             F.coalesce("_tb", F.lit(0)).alias("_tb"),
         )
     )
-    return scored.localCheckpoint() if checkpoint else scored
-
-
-@plan_aux("q_gate_post_takedown::route")
-def _gpt_route_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The gate pair's shared embedding-side chain in LAZY form — the
-    one-pass SCORED relation the graded row checkpoints since round
-    16 (it is consumed by BOTH top-1 windows); registered here so the
-    hidden routing/assign/scoring chain sits in one fingerprinted
-    plan under the plan guards (the q_pca_power::moments rule). SAME
-    builder as the executed chain (:func:`_gpt_scored`,
-    checkpoint=False)."""
-    return _gpt_scored(spark, sf_dir, checkpoint=False)
+    return scored
 
 
 _GPT_PLANT_TEXT_SQL = """
@@ -1255,12 +1206,10 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every lazy reference re-runs the 16-row plant signature chain
     # (cheap data, many STAGES — shuffle-round overhead dominates at
     # this grain) plus the batch slice; one checkpoint each halves
-    # that (round 16, VERDICT r15 item 3 — bounded: |batch| + 16
-    # rows; the plant chains stay under the plan guards via the
-    # standing ::plants aux, the batch slices are cached-scan reads).
-    # Round 17: the two probe-side checkpoints and the embedding-side
-    # scored checkpoint (same relation _gpt_scored(checkpoint=True)
-    # materializes — built lazily HERE on the main thread so its
+    # that (bounded: |batch| + 16 rows; the batch slices are
+    # cached-scan reads). The two probe-side checkpoints and the
+    # embedding-side scored checkpoint (built lazily HERE on the main
+    # thread so its
     # session-cache getters never resolve inside a thunk) share no
     # inputs beyond the session caches, so the three eager jobs run as
     # one overlapped wave (guide §2.6; plans unchanged).
@@ -1271,7 +1220,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tg_qsets(sets_all, batch_ids)
         .unionByName(qsets_p)
         .localCheckpoint,
-        _gpt_scored(spark, sf_dir, checkpoint=False).localCheckpoint,
+        _gpt_scored(spark, sf_dir).localCheckpoint,
     )
     # ONE dual-cap candidate+verify pass serves BOTH text formulations
     # (round 17, VERDICT r16 next-round item 1 — was two full passes:
@@ -1369,8 +1318,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scored the same sub-cell posting scan). The scored relation —
     # routed probe × its sub-cell's members, every neighbor carrying a
     # tombstone flag — is computed once and checkpointed (bounded:
-    # |batch| × one posting list; hidden chains under the plan guards
-    # via the ::route aux), then each side is a window over it:
+    # |batch| × one posting list), then each side is a window over it:
     # v1 ranks all neighbors, v2 ranks survivors FIRST (_tb asc) and
     # NULLs the sim when the best row is tombstoned — byte-equivalent
     # to frozen_top1's tombstone-filtered LEFT join incl. its totality
@@ -1473,14 +1421,11 @@ def _fr_seeds(old: DataFrame, k: int = 1) -> DataFrame:
     )
 
 
-def _fr_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
-    """q_fired_rebuild's corpus-touching state with the checkpoint
-    flag pattern (:func:`lifecycle._dc_frames`'s): the executed chain
-    checkpoints the planted quantizer, the posting relation, and the
-    routed batch (each is consumed by 2–4 warm-cycle/report/census
-    stages — a lazy reference re-runs its scan per consumer, the
-    round-12 lesson); ``checkpoint=False`` is the plan-aux's LAZY view
-    of the SAME builders."""
+def _fr_frames(spark: SparkSession, sf_dir: str):
+    """q_fired_rebuild's corpus-touching state: the planted quantizer,
+    the posting relation, and the routed batch are checkpointed (each
+    is consumed by 2–4 warm-cycle/report/census stages, and a lazy
+    reference re-runs its scan per consumer)."""
     tagged = _inc_tagged(spark, sf_dir)
     old = tagged.filter(~F.col("is_new")).select(
         "vec_id", "label", "embedding"
@@ -1488,71 +1433,23 @@ def _fr_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
     new = tagged.filter(F.col("is_new")).select(
         "vec_id", "label", "embedding"
     )
-    if checkpoint:
-        # round 17 (VERDICT r16 item 9 — share only what is provably
-        # state-independent): the coarse-stage centroid relation is the
-        # per-label mean over the SAME frozen old corpus the shared
-        # inc-index cache trains on — it does not depend on the planted
-        # k (only the SEEDS differ between this key, q_fired_merge and
-        # the real quantizer) — so the executed chain reads the
-        # session-cached checkpoint instead of re-aggregating the
-        # corpus per run. The identical lazy derivation stays in the
-        # aux path below (checkpoint=False), so the guarded plan keeps
-        # the full centroid chain visible.
-        cent1, _seeds_real = inc_index_build(spark, sf_dir)
-    else:
-        cent1 = frozen_centroids(old)
-    seeds1 = _fr_seeds(old)
-    if checkpoint:
-        seeds1 = seeds1.localCheckpoint()  # |labels| rows, 4 consumers
+    # the coarse-stage centroid relation is the per-label mean over the
+    # SAME frozen old corpus the shared inc-index cache trains on — it
+    # does not depend on the planted k (only the SEEDS differ between
+    # this key, q_fired_merge and the real quantizer) — so the chain
+    # reads the session-cached checkpoint instead of re-aggregating the
+    # corpus per run
+    cent1, _seeds_real = inc_index_build(spark, sf_dir)
+    seeds1 = _fr_seeds(old).localCheckpoint()  # |labels| rows, 4 consumers
     indexed1 = _assign_to_seeds(old, seeds1)
     adm_routed = frozen_route(new.select("vec_id", "embedding"), cent1, seeds1)
-    if checkpoint:
-        # the posting assignment (fired + non-fired slices) and the
-        # routed batch (report + 2 warm slices) both depend only on
-        # the seeds1 checkpoint — one overlapped wave (guide §2.6,
-        # round 17; plans unchanged)
-        indexed1, adm_routed = run_overlapped(
-            indexed1.localCheckpoint, adm_routed.localCheckpoint
-        )
+    # the posting assignment (fired + non-fired slices) and the routed
+    # batch (report + 2 warm slices) both depend only on the seeds1
+    # checkpoint — one overlapped wave (plans unchanged)
+    indexed1, adm_routed = run_overlapped(
+        indexed1.localCheckpoint, adm_routed.localCheckpoint
+    )
     return old, new, cent1, seeds1, indexed1, adm_routed
-
-
-@plan_aux("q_fired_rebuild::state")
-def _fr_state_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graded row's hidden chains in LAZY form — the planted-seed
-    rank, the posting assignment, the two-stage batch routing, the
-    merged roll corpus, AND the trigger report's label-grain chain
-    (round-16 self-review: the report is checkpointed into the graded
-    output too) — unioned at posting grain and semi-joined so every
-    chain sits in one fingerprinted plan under the plan guards (the
-    q_pca_power::moments rule). The report is built with a
-    PLACEHOLDER cell_target (the executed chain's t is a data-derived
-    literal — the plan SHAPE is identical for any value, and the aux
-    must not execute a job to compute it)."""
-    old, new, _cent1, seeds1, indexed1, adm_routed = _fr_frames(
-        spark, sf_dir, checkpoint=False
-    )
-    merged = old.unionByName(new)
-    oldcells = old.groupBy(F.col("label").alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_old")
-    )
-    newcells = adm_routed.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_admitted")
-    )
-    report = index_refresh_report(oldcells, newcells, cell_target=1.0)
-    a = indexed1.select("vec_id", "label", F.col("cell").alias("icell"))
-    b = adm_routed.select("vec_id", F.col("cell").alias("label"), "icell")
-    return (
-        a.unionByName(b)
-        .join(seeds1.select("label"), "label", "left_semi")
-        .join(merged.select("vec_id"), "vec_id", "left_semi")
-        .join(
-            report.select(F.col("cell").alias("label")),
-            "label",
-            "left_semi",
-        )
-    )
 
 
 _FR_ORACLE = f"""
@@ -1755,8 +1652,7 @@ def q_fired_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain that touches ONLY the fired cell's members. Output ≤
     |labels| + |fired| rows. Checkpoints: planted seeds, postings,
     routed batch, merged corpus, and the trigger report (each 2–4
-    consumers; every hidden chain — the report's included — under
-    the plan guards via the ::state aux)."""
+    consumers)."""
     old, new, _cent1, seeds1, indexed1, adm_routed = _fr_frames(spark, sf_dir)
     oldcells = old.groupBy(F.col("label").alias("cell")).agg(
         F.count(F.lit(1)).alias("n_old")
@@ -1843,64 +1739,30 @@ def q_fired_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_fired_merge — the fired-cell warm MERGE executed, driver-graded
 # --------------------------------------------------------------------------
 
-def _fm_frames(spark: SparkSession, sf_dir: str, checkpoint: bool = True):
-    """q_fired_merge's corpus-touching state with the checkpoint flag
-    pattern: the planted k=2 quantizer, its posting assignment, and
-    the survivor slice (each consumed by 2–3 warm-cycle/census
-    stages)."""
+def _fm_frames(spark: SparkSession, sf_dir: str):
+    """q_fired_merge's corpus-touching state, checkpointed: the planted
+    k=2 quantizer, its posting assignment, and the survivor slice (each
+    consumed by 2–3 warm-cycle/census stages)."""
     old = (
         _inc_tagged(spark, sf_dir)
         .filter(~F.col("is_new"))
         .select("vec_id", "label", "embedding")
     )
     tomb = old.filter(_is_del_col()).select("vec_id")
-    seeds1 = _fr_seeds(old, k=2)
-    if checkpoint:
-        seeds1 = seeds1.localCheckpoint()  # |labels| rows, 3 consumers
+    seeds1 = _fr_seeds(old, k=2).localCheckpoint()  # |labels| rows, 3 consumers
     indexed1 = _assign_to_seeds(old, seeds1)
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         tombstone_filter,
     )
 
     surv = tombstone_filter(old, tomb)
-    if checkpoint:
-        # the posting assignment (fired/non-fired slices) and the
-        # survivor anti-join (warm-cycle merged, 3 reads) are
-        # independent — one overlapped wave (guide §2.6, round 17)
-        indexed1, surv = run_overlapped(
-            indexed1.localCheckpoint, surv.localCheckpoint
-        )
+    # the posting assignment (fired/non-fired slices) and the survivor
+    # anti-join (warm-cycle merged, 3 reads) are independent — one
+    # overlapped wave
+    indexed1, surv = run_overlapped(
+        indexed1.localCheckpoint, surv.localCheckpoint
+    )
     return old, tomb, seeds1, indexed1, surv
-
-
-@plan_aux("q_fired_merge::state")
-def _fm_state_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graded row's hidden chains in LAZY form — the planted-seed
-    rank, the 2-sub-cell posting assignment, the survivor anti-join,
-    AND the compact report's label-grain chain (round-16 self-review:
-    the report is checkpointed into the graded output too; built with
-    a placeholder cell_target — the plan shape is t-independent and
-    the aux must not execute a job) — joined at posting grain under
-    the plan guards."""
-    old, _tomb, seeds1, indexed1, surv = _fm_frames(
-        spark, sf_dir, checkpoint=False
-    )
-    cells = old.select(
-        "label", _is_del_col().cast("int").alias("is_del")
-    ).groupBy(F.col("label").alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_before"),
-        F.sum("is_del").cast("long").alias("n_deleted"),
-    )
-    report = index_compact_report(cells, cell_target=1.0)
-    return (
-        indexed1.join(seeds1.select("label"), "label", "left_semi")
-        .join(surv.select("vec_id"), "vec_id", "left_semi")
-        .join(
-            report.select(F.col("cell").alias("label")),
-            "label",
-            "left_semi",
-        )
-    )
 
 
 _FM_ORACLE = f"""
@@ -2066,7 +1928,7 @@ def q_fired_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     √n-bounded seeds, one tombstone anti-join, label-grain report
     aggregates (t and fired collects catalog-grain), a retrain
     touching only the fired cell's survivors. Output |labels| × 2 − 1
-    rows. Checkpoints under the ::state aux."""
+    rows."""
     old, tomb, seeds1, indexed1, surv = _fm_frames(spark, sf_dir)
     cells = old.select(
         "label", _is_del_col().cast("int").alias("is_del")

@@ -32,7 +32,7 @@ from kafka_flink_exactlyonce_example_spark.operators.dedup import (
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
-from kafka_flink_exactlyonce_example_spark.registry import plan_aux, query
+from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
 
 
@@ -1196,8 +1196,7 @@ def _inc_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (the shared-session-cache policy threshold: 2+ consumers). In
 #: production this relation is LOADED from the generation's parquet —
 #: already materialized — so the shared checkpoint is the honest
-#: in-session stand-in, not a cheat. The lazy chain stays under the
-#: plan guards via the consumers' ::index / ::state auxes.
+#: in-session stand-in, not a cheat.
 @session_cache("inc_indexed1", shared=True)
 def inc_indexed1_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached checkpoint of the frozen gen-1 posting relation."""
@@ -1905,17 +1904,6 @@ def frozen_topk(
     )
 
 
-def _inc_index_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """q_incremental_ann's frozen index: :func:`frozen_index_frames`
-    trained on the OLD split of the embeddings table only."""
-    old = (
-        _inc_tagged(spark, sf_dir)
-        .filter(~F.col("is_new"))
-        .select("vec_id", "label", "embedding")
-    )
-    return frozen_index_frames(old)
-
-
 @session_cache("inc_ann_index", shared=True)
 def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, seeds) trained on the OLD split only,
@@ -1925,19 +1913,13 @@ def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     index admits every micro-batch — training it per batch would move
     the quantizer under the router, the exact bug frozen-index
     semantics exist to prevent."""
-    cent, seeds = _inc_index_frames(spark, sf_dir)
+    old = (
+        _inc_tagged(spark, sf_dir)
+        .filter(~F.col("is_new"))
+        .select("vec_id", "label", "embedding")
+    )
+    cent, seeds = frozen_index_frames(old)
     return (cent.localCheckpoint(), seeds.localCheckpoint())
-
-
-@plan_aux("q_incremental_ann::index")
-def inc_index_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The data-touching training stage of q_incremental_ann, visible
-    to the plan guards even though the query consumes it through a
-    localCheckpoint (the q_pca_power::moments policy): one bounded
-    centroid reduce + one bounded seed-quantizer train, joined on the
-    label so both derivations sit in one fingerprinted plan."""
-    cent, seeds = _inc_index_frames(spark, sf_dir)
-    return cent.join(seeds, cent.cell == seeds.label)
 
 
 @query(
@@ -2209,7 +2191,6 @@ _CHURN_ORACLE = f"""
     """
 
 
-@plan_aux("q_rebuild_churn::chain")
 def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-side ANSWER CHURN across an index-generation roll (round
     13 — the deploy-gating metric of every production rebuild: the
@@ -2298,8 +2279,7 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The churn relation is consumed by TWO graded rows (the per-probe
 #: report and the promote verdict) — materialize once per (session,
-#: sf), |batch| rows; the lazy chain stays visible to the plan gate
-#: through the q_rebuild_churn::chain aux above.
+#: sf), |batch| rows.
 @session_cache("rebuild_churn")
 def rebuild_churn_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rebuild_churn_frame(spark, sf_dir).localCheckpoint()
@@ -3349,17 +3329,6 @@ def _pq_train(
     codebook, localCheckpoint'ed once per session — q_pq_codebook
     reports the census, q_pq_adc runs the query-time half on the same
     trained model. Plan rationale in q_pq_codebook's docstring."""
-    cent1, a2 = _pq_train_frames(spark, sf_dir)
-    return (cent1.localCheckpoint(), a2.localCheckpoint())
-
-
-def _pq_train_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The LAZY training plan behind :func:`_pq_train`'s checkpoint —
-    factored out so the plan-aux registration below keeps the
-    data-touching train under the plan guards (the
-    q_pca_power::moments policy)."""
     # the inline K-way argmin is ~n·M·K·SUBDIM interpreted lambda evals
     # in ONE map stage — widen the one-split toy scan so it uses every
     # core (the _signs_for lesson; measured 30 s -> ~3 s at sf0.1 with
@@ -3431,27 +3400,7 @@ def _pq_train_frames(
         )
     )
     a2 = assign(cent1).select("vec_id", "s", "c", "d2")
-    return cent1, a2
-
-
-@plan_aux("q_pq_codebook::train")
-def pq_train_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The data-touching PQ training stage, visible to the plan guards
-    even though every PQ consumer reads it through the session-cached
-    checkpoint (the q_pca_power::moments policy): both Lloyd passes +
-    the codebook reduce in one fingerprinted plan."""
-    cent1, a2 = _pq_train_frames(spark, sf_dir)
-    return a2.join(F.broadcast(cent1), ["s", "c"])
-
-
-@plan_aux("q_ivf_recall::cq_train")
-def cq_train_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The data-touching coarse-quantizer training stage (3 assignment
-    scans + 2 bounded centroid updates), visible to the plan guards
-    even though the IVF family reads it through the _CQ_* checkpoints
-    (the q_pca_power::moments policy)."""
-    e = table(spark, sf_dir, "embeddings")
-    return cq_assign(e, cq_centroids_train(e))
+    return (cent1.localCheckpoint(), a2.localCheckpoint())
 
 
 @query(
@@ -3852,15 +3801,13 @@ def _pca_power_oracle() -> str:
     return "".join(ctes)
 
 
-@plan_aux("q_pca_power::moments")
 def pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAZY data-touching stage of q_pca_power: one scan computing
     every sufficient statistic — first moments AND the d(d+1)/2
     pairwise second moments ride a single inline upper-triangle explode
-    (map-side partial avg, one shuffle of 2,144 groups). Registered as
-    a plan-aux relation (ADVICE r08) so the plan-regression fingerprint
-    and the no-Python-eval guard keep sight of the scan even though
-    q_pca_power's returned frame is the post-collect LocalTableScan."""
+    (map-side partial avg, one shuffle of 2,144 groups). q_pca_power
+    collects it, so its returned frame is a LocalTableScan; the plan
+    gate sees this scan as the key's side execution."""
     # d(d+3)/2 inline products per vector — widen the one-split toy
     # scan so the moment pass uses every core (no-op at scale)
     emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
@@ -3925,8 +3872,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     ITERATION — the iterative EIGENSOLVER class the engine was missing
     (the dense-linear-algebra sibling of the CC family's Pregel loop
     and q_kmeans' Lloyd rounds): distributed covariance in one
-    pair-moment pass (``pca_moments``, kept under the plan guards as
-    the ``q_pca_power::moments`` plan-aux relation), then 8
+    pair-moment pass (``pca_moments``), then 8
     (``_PI_ITERS``) fixed matvec+normalize rounds on
     the BOUNDED d×d model. PCA's top component is the workhorse QC/
     preprocessing step for embedding pipelines — whitening before PQ
@@ -3948,8 +3894,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed per-stage overhead at every SF (VERDICT r07 item 7's A/B).
     The collect is cached per (session, sf), so repeated CONSTRUCTION
     (plan fingerprinting, dump_plans, the test suite) executes the
-    scan once per session, and the scan's plan itself stays under the
-    plan guards via the ``q_pca_power::moments`` aux registration.
+    scan once per session.
     The result is re-parallelized via createDataFrame only to hand
     the driver a DataFrame. Determinism: covariance entries and the
     normalized vector are ROUNDED to 9 dp every round with ``_r``
@@ -5664,13 +5609,10 @@ def q_serve_fbrute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame
 
 
-@plan_aux("q_filtered_sweep::stats")
 def _fsweep_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_filtered_sweep's ONE panel-flagged conditional-aggregate
     corpus scan (total + panel + per-tier corpus/panel survivor
-    counts). The query checkpoints this 1-row frame, which hides the
-    scan behind a LogicalRDD — registered here in lazy form under the
-    plan guards (the q_pca_power::moments rule)."""
+    counts), lazy; the query checkpoints this 1-row frame."""
     emb = table(spark, sf_dir, "embeddings")
     panel = _recall_panel(spark, sf_dir)
     inp = F.col("_inp").isNotNull()
@@ -5784,9 +5726,7 @@ def q_filtered_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-EXECUTED per crossJoin reference — without the checkpoint the
     # 4 tiers re-scanned embeddings 8× for numbers that never change
     # (round-12 self-review). The frame is F.broadcast-forced at every
-    # use, so the checkpoint stats hazard cannot bite. The scan itself
-    # is plan-aux-registered (q_filtered_sweep::stats) — the
-    # checkpoint hides it behind a LogicalRDD in the returned plan.
+    # use, so the checkpoint stats hazard cannot bite.
     stats = F.broadcast(_fsweep_stats_frame(spark, sf_dir).localCheckpoint())
 
     # NESTED-TIER derivation (round 13, VERDICT r12 item 6): the tiers
@@ -7103,14 +7043,10 @@ _FROUTE_MATRIX_REQ_SQL = " UNION ALL ".join(
 )
 
 
-@plan_aux("q_filtered_route_matrix::counts")
 def _froute_counts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The filtered matrix's ONE conditional-aggregate corpus scan
-    (n_total + the 4 nested tier survivor counts). q_filtered_route_
-    matrix checkpoints this 1-row frame, which hides the scan behind a
-    LogicalRDD in the returned plan — so the scan is registered here
-    under the plan guards in its lazy form (the q_pca_power::moments
-    rule)."""
+    (n_total + the 4 nested tier survivor counts), lazy;
+    q_filtered_route_matrix checkpoints this 1-row frame."""
     return table(spark, sf_dir, "embeddings").agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
         *[
@@ -7192,11 +7128,7 @@ def q_filtered_route_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE conditional-aggregate scan, like the docstring says: the
     # 1-row counts frame is referenced by both eligibility branches
     # AND the final join — left lazy each reference re-runs the scan
-    # (self-review; the q_filtered_sweep checkpointed-stats
-    # discipline). The scan itself is plan-aux-registered below: the
-    # checkpoint hides it behind a LogicalRDD, and a corpus-touching
-    # stage the returned frame cannot show belongs under the plan
-    # guards (the ADVICE-r08 q_pca_power rule).
+    # (the q_filtered_sweep checkpointed-stats discipline).
     counts = _froute_counts_frame(spark, sf_dir).localCheckpoint()
     req = spark.createDataFrame(
         list(_FROUTE_MATRIX_REQUESTS),

@@ -4,6 +4,12 @@ Every operator registers a ``(spark, sf_dir) -> DataFrame`` callable and
 (unless marked rows-only) a DuckDB oracle SQL string with IDENTICAL
 column names and deterministic values. ``__spark_entry__.py`` re-exports
 these dicts to the driver.
+
+A query registers only what it returns. The relations it materializes
+while it is built (checkpoints, driver-side collects) need no separate
+registration to stay under the plan gate: ``tools/plan_fingerprints.py``
+reads every SQL execution from Spark's event log and charges it to the
+key whose job group ran it.
 """
 
 from __future__ import annotations
@@ -24,26 +30,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-#: Auxiliary PLAN-ONLY relations (ADVICE r08): lazy DataFrames whose
-#: plans must stay under the plan guards even though the owning query's
-#: RETURNED frame hides them behind a licensed driver-side collect
-#: (q_pca_power's bounded-model matvec returns a LocalTableScan, so its
-#: own fingerprint is blind to the data-touching moments scan). Keys are
-#: ``"<query>::<stage>"``; never graded by the driver, never part of
-#: ``queries()`` — consumed by tools/plan_fingerprints.py (baseline +
-#: drift gate) and tests/test_plans.py (live no-Python-eval guard).
-PLAN_AUX: dict[str, QueryFn] = {}
-
-
-def plan_aux(name: str) -> Callable[[QueryFn], QueryFn]:
-    """Register a plan-only auxiliary relation under the plan guards."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        PLAN_AUX[name] = fn
-        return fn
-
-    return deco
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -1,34 +1,27 @@
-"""Full-surface plan-regression gate (VERDICT r07 item 9).
+"""Full-surface plan-regression gate.
 
-tests/test_plans.py pins the plans rounds explicitly engineered; this
-module covers the whole registry: every query's physical plan is
-reduced to scale-relevant node counts (shuffles by kind, join
-strategies, agg kinds, windows, Python-eval nodes, scans) and compared
-against the committed tests/plan_baseline.json. A lost broadcast, an
-extra Exchange, or a Python UDF appearing on a previously-JVM-only path
-fails here naming the query and the feature that moved — even when no
-hand-written assertion covers that query.
+tests/test_plans.py pins individual plans by hand; this module covers
+the whole registry. ``tools/plan_fingerprints.py`` reduces the plans
+each key makes Spark execute (its returned frame's plan plus every SQL
+execution its build ran, read from Spark's event log) and each shared
+cache's build to scale-relevant node counts: shuffles by kind, join
+strategies and types, aggregate kinds, windows, Python-eval nodes,
+scans. The counts are compared with the committed
+tests/plan_baseline.json. A lost broadcast, an extra Exchange, or a
+Python UDF on a JVM-only path fails here, naming the key and the
+feature that moved, even when the change sits behind a checkpoint or a
+driver-side collect.
 
 When a plan change is INTENTIONAL, regenerate the baseline and commit
 the diff alongside the code change:
 
     python tools/plan_fingerprints.py --update
 
-The fingerprint counts node kinds only (no expression ids, paths, or
-partition counts), so it is stable across sessions; the two-fresh-
-session determinism check was recorded when the baseline landed.
-
-Isolation (VERDICT r08's one defect): fingerprints DO depend on
-session-level cache/persist state — mid-suite, earlier tests
-unpersist/rebuild the shared session relations, so the contracted-
-grain subtree inlines at every consumer and ~14 queries' node counts
-double vs a fresh session. The live collection therefore runs in a
-SUBPROCESS with its own SparkSession (the exact standalone path
-``tools/plan_fingerprints.py`` uses, and the state the committed
-baseline was recorded in), making the gate order-independent: it
-passes or fails identically alone and mid-suite. Seeded-regression
-proof: breaking a broadcast hint makes the subprocess exit 1 naming
-the query and the moved feature (recorded in SURVEY §6).
+The live collection runs in a SUBPROCESS with its own SparkSession:
+node counts depend on which relations the session holds cached, and
+earlier tests unpersist and rebuild the shared relations, so only a
+fresh session that pre-builds the caches in a fixed order gives counts
+that do not depend on test order.
 """
 
 from __future__ import annotations
@@ -38,8 +31,16 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 BASELINE = Path(__file__).resolve().parent / "plan_baseline.json"
 REPO = Path(__file__).resolve().parent.parent
+
+sys.path.insert(0, str(REPO / "tools"))
+import plan_fingerprints as pf  # noqa: E402
+
+#: the fingerprint features of the plan nodes that run Python
+PYTHON_EVAL = ("python_row_udf", "python_arrow_udf", "pandas_map", "python_udtf")
 
 
 def test_all_query_plans_match_baseline():
@@ -59,33 +60,89 @@ def test_all_query_plans_match_baseline():
 
 
 def test_baseline_has_no_python_eval_on_oracled_paths():
-    """The baseline itself is an auditable artifact: assert the invariant
-    test_plans.py checks live also holds over the committed snapshot, so
-    a bad `--update` cannot quietly bless a UDF on an oracled path."""
+    """No oracled key and no shared cache executes a Python-eval node.
+    Together with the drift gate above, which holds the live counts to
+    this baseline, this covers every plan those keys execute, the
+    checkpointed and collected chains included, and keeps a bad
+    `--update` from quietly blessing a UDF on an oracled path. A shared
+    cache is held to the same bar because its consumers, oracled ones
+    among them, read it through a checkpoint."""
     from kafka_flink_exactlyonce_example_spark import registry
 
     registry.load_all()
     base = json.loads(BASELINE.read_text())
-    offenders = {
-        name: feats
-        for name, feats in base.items()
-        # "<query>::<stage>" plan-aux entries inherit the owning
-        # query's oracled status (ADVICE r08)
-        if name.split("::")[0] in registry.ORACLES
-        and (feats.get("python_row_udf") or feats.get("python_udtf"))
+    offenders = {}
+    for name, feats in base.items():
+        found = {f: feats[f] for f in PYTHON_EVAL if feats.get(f)}
+        if found and (name in registry.ORACLES or name.startswith("cache:")):
+            offenders[name] = found
+    assert not offenders, f"Python eval on oracled paths in baseline: {offenders}"
+
+
+def _execution_start(exec_id: int, group: str | None, *nodes: str) -> str:
+    """One event-log line: a SQL execution whose plan is a chain of
+    ``nodes``, root first."""
+    info = None
+    for text in reversed(nodes):
+        info = {
+            "nodeName": text.split()[0],
+            "simpleString": text,
+            "children": [info] if info else [],
+        }
+    return json.dumps({
+        "Event": pf._SQL_START,
+        "executionId": exec_id,
+        "jobGroupId": group,
+        "sparkPlanInfo": info,
+    })
+
+
+def test_fold_charges_executions_to_their_job_group():
+    """The event-log fold, without Spark: a key's side execution adds to
+    the key's entry (its returned-plan counts included), a ``cache:``
+    group's execution fills the cache's own entry, other events are
+    skipped, and an execution outside every known group raises, naming
+    its execution id."""
+    events = [
+        json.dumps({"Event": "SparkListenerJobStart", "Job ID": 0}),
+        _execution_start(
+            0, "cache:shingles",
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "HashAggregate(keys=[w#1], functions=[])",
+            "Exchange hashpartitioning(w#1, 8), ENSURE_REQUIREMENTS",
+            "FileScan parquet [text#0] Batched: true",
+        ),
+        _execution_start(
+            1, "q_a",
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "BroadcastHashJoin [k#2], [k#3], LeftSemi, BuildRight, false",
+            "Scan ExistingRDD[k#2]",
+        ),
+    ]
+    entries = {"q_a": {"cache_scan": 1}, "cache:shingles": {}}
+    pf.fold_executions(events, entries)
+    assert entries == {
+        "q_a": {
+            "cache_scan": 2,
+            "broadcast_hash_join": 1,
+            "broadcast_hash_join:LeftSemi": 1,
+        },
+        "cache:shingles": {
+            "hash_agg": 1,
+            "exchange_hash": 1,
+            "parquet_scan": 1,
+        },
     }
-    assert not offenders, f"row-Python on oracled paths in baseline: {offenders}"
+
+    stray = [_execution_start(7, None, "LocalTableScan [x#0]")]
+    with pytest.raises(ValueError, match=r"\b7 \(job group None\)"):
+        pf.fold_executions(stray, {"q_a": {}})
 
 
 def test_join_type_flip_moves_fingerprint():
-    """Seeded red-test for VERDICT r12 item 2: two plans identical
-    except for a join TYPE must produce different fingerprints, and
-    the diff must NAME the typed feature — the round-12 inner→left
-    flip on frozen_top1 was invisible to the untyped counts and had to
-    be hand-pinned; this pins the guard hole closed."""
-    sys.path.insert(0, str(REPO / "tools"))
-    import plan_fingerprints as pf
-
+    """Two plans identical except for a join TYPE must produce different
+    fingerprints, and the diff must NAME the typed feature: the untyped
+    counts alone cannot see an inner→left flip."""
     inner = (
         "AdaptiveSparkPlan\n"
         "+- SortMergeJoin [icell#5L], [icell#9L], Inner\n"
@@ -93,7 +150,7 @@ def test_join_type_flip_moves_fingerprint():
     )
     left = inner.replace(", Inner", ", LeftOuter")
     fp_i, fp_l = pf.fingerprint(inner), pf.fingerprint(left)
-    # untyped counts are blind to the flip — the r12 hole, reproduced
+    # the untyped counts are blind to the flip
     assert fp_i["sort_merge_join"] == fp_l["sort_merge_join"] == 1
     assert fp_i != fp_l
     assert fp_i.get("sort_merge_join:Inner") == 1
@@ -106,15 +163,12 @@ def test_join_type_flip_moves_fingerprint():
 
 def test_baseline_typed_join_counts_are_consistent():
     """Every typed-join node in the committed baseline must carry a
-    join-type tag: per query and strategy, the untyped count equals
+    join-type tag: per entry and strategy, the untyped count equals
     the sum of its typed counts — a plan line the type regex failed to
     parse would silently re-open the join-type blind spot."""
-    sys.path.insert(0, str(REPO / "tools"))
-    from plan_fingerprints import _JOIN_STRATEGY_SNAKE
-
     base = json.loads(BASELINE.read_text())
     for name, feats in base.items():
-        for snake in _JOIN_STRATEGY_SNAKE.values():
+        for snake in pf._JOIN_STRATEGY_SNAKE.values():
             typed = sum(
                 v for k, v in feats.items() if k.startswith(f"{snake}:")
             )

@@ -1,6 +1,8 @@
 """Physical-plan assertions (SURVEY.md §4.2): verify Catalyst picked
 the plans we'd want at 100 TB — pushdown reaches the scan, dims
-broadcast, top-k avoids a global sort, hot paths stay Python-free."""
+broadcast, top-k avoids a global sort. That oracled paths stay
+Python-free is checked over every executed plan by
+tests/test_plan_regression.py."""
 
 from __future__ import annotations
 
@@ -43,25 +45,6 @@ def test_partial_aggregation_present(spark, registry_loaded):
     # partial → final HashAggregate pair = map-side combine before shuffle
     plan = plan_string(registry_loaded.QUERIES["q_agg_multi"](spark, SMOKE_SF))
     assert plan.count("HashAggregate") >= 2
-
-
-def test_no_python_eval_in_oracled_queries(spark, registry_loaded):
-    """Every hash-graded query must stay JVM-side (no Python UDF nodes).
-    Plan-aux relations whose owning query is oracled are held to the
-    same bar (ADVICE r08: q_pca_power's moments scan would otherwise
-    escape this guard behind the licensed collect)."""
-    for qname in registry_loaded.ORACLES:
-        df = registry_loaded.QUERIES[qname](spark, SMOKE_SF)
-        assert_not_in_plan(
-            df, "BatchEvalPython", "ArrowEvalPython", "MapInPandas", mode="extended"
-        )
-    for aux, fn in registry_loaded.PLAN_AUX.items():
-        if aux.split("::")[0] in registry_loaded.ORACLES:
-            assert_not_in_plan(
-                fn(spark, SMOKE_SF),
-                "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                mode="extended",
-            )
 
 
 def test_wholestage_codegen_in_flagship(spark, registry_loaded):
