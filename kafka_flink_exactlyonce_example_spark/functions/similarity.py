@@ -1,22 +1,32 @@
 """Embedding similarity as native Catalyst higher-order functions.
 
-No Python UDFs: ``zip_with`` + ``aggregate`` run inside the JVM, so the
-cosine scan stays in whole-stage codegen and scales linearly with
-partitions — the property we need for 100 TB brute-force scoring.
-Elements are cast to double before multiply so both engines accumulate
-in float64; scores are bounded by 1 so ``round(sim, 6)`` is safely
-inside cross-engine float error (~1e-14).
+Each formula is spelled once per engine, as SQL text over operand SQL
+text: ``dot_spark_sql``/``cosine_spark_sql`` for Spark, with
+``dot_sql``/``cosine_sql`` for the DuckDB oracles beside them
+(``dist2_spark_sql``, the squared L2 distance, has no shared mirror).
+A caller that needs a ``Column`` gets one from :func:`dot`,
+:func:`l2_norm`, :func:`cosine` or :func:`dist2`, each a single
+``F.expr`` call; a caller whose operand is a lambda variable, a struct
+field or a literal array writes that operand into the text and embeds
+the formula in its own expression.
 
-Round-8 A/B (don't "optimize" this into a flat expression): unrolling
-the dot as a 64-term ``element_at(a,i)*element_at(b,i)`` sum measured
-4× SLOWER than the HOF form on a 249k-pair scoring scan at sf0.1
-(5.3 s vs 1.4 s warm, identical sums bit-for-bit) — per-term array
-element access re-validates and boxes, and the mega-expression
-compiles worse than the interpreted-but-tight fold. The HOF dot is
-the right JVM-side form; the only faster lane is an Arrow-batched
-pandas_udf matmul, which is banned on oracled paths (the
-no-PythonEval plan guard) and reserved for the rows-only multimodal
-stages.
+Why this shape:
+
+- No Python UDFs. ``zip_with`` + ``aggregate`` run inside the JVM, so
+  the cosine scan stays in whole-stage codegen and scales with
+  partitions, and no ``PythonEval`` node lands on an oracled path.
+- Elements are cast to double before the multiply, so both engines
+  accumulate in float64, left to right. Scores are bounded by 1, so
+  ``round(sim, 6)`` is well inside the cross-engine float error
+  (~1e-14).
+- The dot stays a higher-order fold. Unrolled into a 64-term
+  ``element_at(a, i) * element_at(b, i)`` sum it measured 4x slower on
+  a 249k-pair scoring scan at sf0.1 (5.3 s vs 1.4 s warm, identical
+  sums): per-term element access re-validates and boxes, and the large
+  expression compiles worse than the tight fold.
+- One text, one call. Built from Python ``Column`` operators and
+  lambdas, one cosine cost about 340 py4j round trips in the Spark client;
+  ``F.expr`` parses the same tree on the JVM side in three.
 """
 
 from __future__ import annotations
@@ -25,22 +35,37 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ a_i*b_i in float64, left-to-right (deterministic)."""
-    products = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
+def dot_spark_sql(a: str, b: str) -> str:
+    """Spark SQL text of Σ a_i*b_i in float64, left to right."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0D, (acc, v) -> acc + v)"
+    )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def l2_norm_spark_sql(a: str) -> str:
+    return f"sqrt({dot_spark_sql(a, a)})"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine_spark_sql(a: str, b: str) -> str:
+    return (
+        f"({dot_spark_sql(a, b)} / "
+        f"({l2_norm_spark_sql(a)} * {l2_norm_spark_sql(b)}))"
+    )
+
+
+def dist2_spark_sql(a: str, b: str) -> str:
+    """Spark SQL text of Σ (a_i - b_i)² in float64, left to right."""
+    d = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {d} * {d}), "
+        f"0D, (acc, v) -> acc + v)"
+    )
 
 
 def dot_sql(a: str, b: str) -> str:
-    """DuckDB mirror of :func:`dot` (list_zip + lambda, float64)."""
+    """DuckDB mirror of :func:`dot_spark_sql` (list_zip + lambda, float64)."""
     return (
         f"list_sum(list_transform(list_zip({a}, {b}), "
         f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
@@ -48,7 +73,24 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> str:
+    """DuckDB mirror of :func:`cosine_spark_sql`."""
     return f"({dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)})))"
 
 
 COSINE_SQL = cosine_sql
+
+
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_spark_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(l2_norm_spark_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(cosine_spark_sql(a, b))
+
+
+def dist2(a: str, b: str) -> Column:
+    return F.expr(dist2_spark_sql(a, b))

@@ -128,7 +128,7 @@ def _self_excluded_top1(routed: DataFrame, indexed: DataFrame) -> DataFrame:
         .select(
             "vec_id",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("rn", F.row_number().over(nb_w))
         .filter(F.col("rn") == 1)
@@ -291,7 +291,7 @@ def derive_generation_table(
         .select(
             "pid",
             "label",
-            F.round(cosine(F.col("pe"), F.col("centroid")), 6).alias("rsim"),
+            F.round(cosine("pe", "centroid"), 6).alias("rsim"),
         )
         .withColumn("rnk", F.row_number().over(rank_w))
         .filter(F.col("rnk") <= max(nprobes))
@@ -310,7 +310,7 @@ def derive_generation_table(
         .select(
             "pid",
             "vec_id",
-            cosine(F.col("embedding"), F.col("pe")).alias("tsim"),
+            cosine("embedding", "pe").alias("tsim"),
         )
         .withColumn("trn", F.row_number().over(truth_w))
         .filter(F.col("trn") <= _RECALL_K)
@@ -1185,7 +1185,7 @@ def _dc_core(members: DataFrame, centn: DataFrame):
         .select(
             "pid",
             "label",
-            F.round(cosine(F.col("pe"), F.col("centroid")), 6).alias("rsim"),
+            F.round(cosine("pe", "centroid"), 6).alias("rsim"),
         )
         .withColumn("rnk", F.row_number().over(rank_w))
         .filter(F.col("rnk") <= max(_DC_NPROBES))
@@ -1199,7 +1199,7 @@ def _dc_core(members: DataFrame, centn: DataFrame):
         .select(
             "pid",
             "vec_id",
-            cosine(F.col("embedding"), F.col("pe")).alias("tsim"),
+            cosine("embedding", "pe").alias("tsim"),
         )
         .withColumn("trn", F.row_number().over(truth_w))
         .filter(F.col("trn") <= _RECALL_K)

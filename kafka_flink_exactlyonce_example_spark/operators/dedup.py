@@ -17,15 +17,15 @@ no Python UDFs, so every stage is shuffle-parallel and codegen'd:
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
+    cosine_spark_sql,
     cosine_sql,
-    dot,
+    dot_spark_sql,
+    l2_norm,
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
@@ -822,12 +822,12 @@ def _ivf_cells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # centroid-scored corpus shared by q_semdedup's three consumers AND
-# reused across invocations in one session. Round-5 verdict: putting
-# this in the drainable _PERSISTED list meant bench.unpersist_all()
-# (run after q_embed_dup) drained it mid-session and q_semdedup paid a
-# full rebuild (+1.0 s at sf0.1). A session-cached localCheckpoint
-# gives both consumers reuse AND leaks nothing. Not shared: the
-# embed_pairs build consumes it, so it builds inside that line item.
+# reused across invocations in one session. A session-cached
+# localCheckpoint rather than a persist: the bench drains the
+# _PERSISTED list after each key, which would force the next consumer
+# into a full rebuild (+1.0 s at sf0.1), and a checkpoint leaks
+# nothing. Not shared: the embed_pairs build consumes it, so it builds
+# inside that line item.
 @session_cache("semdedup_scored")
 def _semdedup_scored_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = table(spark, sf_dir, "embeddings")
@@ -848,7 +848,7 @@ def _semdedup_scored_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "cell",
         "embedding",
-        F.round(cosine(F.col("embedding"), F.col("c")), 6).alias("cosc"),
+        F.round(cosine("embedding", "c"), 6).alias("cosc"),
     )
     return scored.localCheckpoint()
 
@@ -857,12 +857,12 @@ def _embed_pairs_build(scored: DataFrame) -> DataFrame:
     """UNDIRECTED (va < vb) near-dup pair relation over the scored
     corpus: (label, cell)-blocked equi-join, raw cosine ≥ 0.3, with
     both sides' rounded centroid cosines attached. The sim
-    expression is exactly q_embed_dup's historical one — dot(ea, eb) /
-    (na · nb) with per-row norms — and it is direction-symmetric bit
+    expression is dot(ea, eb) / (na · nb) with per-row norms — the
+    q_embed_dup oracle's cosine — and it is direction-symmetric bit
     for bit (per-element float multiply commutes, the zip_with sum
     order is the index order on both directions), which is what makes
     ONE undirected evaluation exact for both consumers."""
-    norm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+    norm = l2_norm("embedding")
     a = scored.select(
         F.col("vec_id").alias("va"),
         "label",
@@ -879,7 +879,7 @@ def _embed_pairs_build(scored: DataFrame) -> DataFrame:
         norm.alias("nb"),
         F.col("cosc").alias("cb"),
     )
-    sim = dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    sim = F.expr(f"{dot_spark_sql('ea', 'eb')} / (na * nb)")
     return (
         a.join(
             b,
@@ -1002,20 +1002,14 @@ def _assign_to_seeds(e: DataFrame, seeds: DataFrame) -> DataFrame:
     of ``e`` and pick each row's nearest seed inline. Inner join on
     label — callers route only labels the quantizer was trained on."""
     # nearest-seed argmax inline: struct comparison orders by cosine,
-    # then -cell (ties -> smallest cell id) — identical to the old
-    # max_by(cell, struct(_cs, -cell)) but with zero extra shuffle
-    best = F.array_max(
-        F.transform(
-            F.col("_seeds"),
-            lambda s: F.struct(
-                cosine(F.col("embedding"), s["seed"]).alias("_cs"),
-                (-s["cell"]).alias("_nc"),
-                s["cell"].alias("cell"),
-            ),
-        )
+    # then -cell (ties -> smallest cell id), with no extra shuffle
+    best = F.expr(
+        "array_max(transform(_seeds, s -> struct("
+        f"{cosine_spark_sql('embedding', 's.seed')} AS _cs, "
+        "-s.cell AS _nc, s.cell AS cell))).cell AS cell"
     )
     return e.join(F.broadcast(seeds), "label").select(
-        "vec_id", "label", best["cell"].alias("cell"), "embedding"
+        "vec_id", "label", best, "embedding"
     )
 
 
@@ -1258,29 +1252,19 @@ def _signatures_frame(shingled: DataFrame) -> DataFrame:
     # numeric order at fixed width).
     if hash_lane() == "xxhash64":
 
-        def lane(i: int):
-            h = F.xxhash64(F.lit(f"{i // 2}:"), F.col("shingle"))
-            half = (
-                F.shiftrightunsigned(h, 32)
-                if i % 2 == 0
-                else h.bitwiseAND(F.lit(0xFFFFFFFF))
-            )
-            return F.format_string("%08x", half)
+        def lane(i: int) -> str:
+            h = f"xxhash64('{i // 2}:', shingle)"
+            if i % 2 == 0:
+                return f"format_string('%08x', shiftrightunsigned({h}, 32))"
+            return f"format_string('%08x', {h} & {0xFFFFFFFF})"
 
-        return shingled.groupBy("doc_id").agg(
-            *[F.min(lane(i)).alias(f"mh{i}") for i in range(_N_HASHES)]
-        )
+    else:
+
+        def lane(i: int) -> str:
+            return f"substring(md5(concat('{i // 4}:', shingle)), {1 + 8 * (i % 4)}, 8)"
+
     return shingled.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{i // 4}:"), F.col("shingle"))),
-                    1 + 8 * (i % 4),
-                    8,
-                )
-            ).alias(f"mh{i}")
-            for i in range(_N_HASHES)
-        ]
+        *[F.expr(f"min({lane(i)}) AS mh{i}") for i in range(_N_HASHES)]
     )
 
 
@@ -1342,25 +1326,18 @@ def _capped_bands(minhashes: DataFrame) -> DataFrame:
 
 def _bands_rel(minhashes: DataFrame) -> DataFrame:
     """The UNCAPPED band relation (doc_id, band_idx, band_key) — the
-    storable form of the text near-dup index (round 13): the fold path
+    storable form of the text near-dup index: the fold path
     appends to this relation and re-derives the cap per rebuild, so a
     boilerplate bucket that crosses _MAX_BUCKET only after admitted
     docs fold in is dropped exactly as a cold build would drop it."""
-    return minhashes.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(
-                        *[
-                            F.col(f"mh{b * _ROWS_PER_BAND + r}")
-                            for r in range(_ROWS_PER_BAND)
-                        ]
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
+    keys = ", ".join(
+        "concat("
+        + ", ".join(f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND))
+        + ")"
+        for b in range(_BANDS)
+    )
+    return minhashes.selectExpr(
+        "doc_id", f"posexplode(array({keys})) AS (band_idx, band_key)"
     )
 
 
@@ -2271,25 +2248,15 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    a = minhashes.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_N_HASHES)],
-    )
-    b = minhashes.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_N_HASHES)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1.0).otherwise(0.0)
-        for i in range(_N_HASHES)
-    )
+    lanes = range(_N_HASHES)
+    a = minhashes.selectExpr("doc_id AS doc_a", *[f"mh{i} AS a{i}" for i in lanes])
+    b = minhashes.selectExpr("doc_id AS doc_b", *[f"mh{i} AS b{i}" for i in lanes])
+    agree = " + ".join(f"CASE WHEN a{i} = b{i} THEN 1D ELSE 0D END" for i in lanes)
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(agree / float(_N_HASHES), 6).alias("est_jaccard"),
+        .selectExpr(
+            "doc_a", "doc_b", f"round(({agree}) / {_N_HASHES}D, 6) AS est_jaccard"
         )
     )
 
@@ -2300,13 +2267,26 @@ _HEX_TO_INT_SQL = " + ".join(
     f"(strpos('0123456789abcdef', substring(m, {j + 1}, 1)) - 1) * {16 ** (7 - j)}"
     for j in range(8)
 )
-_SIMHASH_VOTES_SQL = ",\n           ".join(
+_SIMHASH_VOTES = [
     f"SUM(CASE WHEN (h >> {k}) & 1 = 1 THEN 1 ELSE -1 END) AS bit{k}"
     for k in range(32)
-)
+]
+_SIMHASH_VOTES_SQL = ",\n           ".join(_SIMHASH_VOTES)
 _SIMHASH_SIG_SQL = " + ".join(
     f"CASE WHEN bit{k} > 0 THEN {2 ** k} ELSE 0 END" for k in range(32)
 )
+
+
+def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, simhash) from the oracle's own vote and signature SQL."""
+    words = _doc_words(spark, sf_dir).withColumn(
+        "h", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
+    )
+    return (
+        words.groupBy("doc_id")
+        .agg(*map(F.expr, _SIMHASH_VOTES))
+        .selectExpr("doc_id", f"CAST({_SIMHASH_SIG_SQL} AS BIGINT) AS simhash")
+    )
 
 
 @query(
@@ -2343,26 +2323,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``conv(hex, 16, 10)``, DuckDB via a digit polynomial), so the
     full sketch is DuckDB-verified. xxhash64 is the drop-in at 100 TB.
     """
-    words = _doc_words(spark, sf_dir).withColumn(
-        "h", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
-    )
-    votes = words.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                    -1
-                )
-            ).alias(f"bit{k}")
-            for k in range(32)
-        ]
-    )
-    sig = reduce(
-        lambda acc, k: acc
-        + F.when(F.col(f"bit{k}") > 0, F.lit(2**k)).otherwise(F.lit(0)),
-        range(32),
-        F.lit(0).cast("long"),
-    )
-    sigs = votes.select("doc_id", sig.alias("simhash"))
+    sigs = _simhash_sigs(spark, sf_dir)
     counts = sigs.groupBy("simhash").agg(F.count(F.lit(1)).alias("bucket_size"))
     return sigs.join(counts, "simhash").select("doc_id", "simhash", "bucket_size")
 
@@ -3427,42 +3388,15 @@ def q_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify is integer popcount on two longs — no text, no arrays, the
     cheapest verifier in the whole dedup family. Signature build is
     one scan + 32 conditional sums (shared logic with q_simhash)."""
-    words = _doc_words(spark, sf_dir).withColumn(
-        "h", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
+    sigs = _simhash_sigs(spark, sf_dir)
+    # shiftright(), not >>: after ``array(``/``struct(`` Spark's lexer
+    # reads >> as two closing angle brackets of a type
+    bb = ", ".join(
+        f"struct({b} AS band_idx, shiftright(simhash, {8 * b}) & 255 AS band_val)"
+        for b in range(_SH_BANDS)
     )
-    votes = words.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), k).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"bit{k}")
-            for k in range(32)
-        ]
-    )
-    sig = reduce(
-        lambda acc, k: acc
-        + F.when(F.col(f"bit{k}") > 0, F.lit(2**k)).otherwise(F.lit(0)),
-        range(32),
-        F.lit(0).cast("long"),
-    )
-    sigs = votes.select("doc_id", sig.alias("simhash"))
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright(F.col("simhash"), 8 * b)
-                        .bitwiseAND(F.lit(255))
-                        .alias("band_val"),
-                    )
-                    for b in range(_SH_BANDS)
-                ]
-            )
-        ).alias("bb"),
+    bands = sigs.selectExpr(
+        "doc_id", "simhash", f"explode(array({bb})) AS bb"
     ).select("doc_id", "simhash", "bb.band_idx", "bb.band_val")
     wcap = Window.partitionBy("band_idx", "band_val").orderBy(
         F.md5(F.concat(F.lit("shc:"), F.col("doc_id").cast("string"))), "doc_id"

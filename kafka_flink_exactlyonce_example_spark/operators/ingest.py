@@ -38,7 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_flink_exactlyonce_example_spark.functions.similarity import cosine_sql
+from kafka_flink_exactlyonce_example_spark.functions.similarity import (
+    cosine,
+    cosine_spark_sql,
+    cosine_sql,
+)
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _CELL_TARGET,
     _LSH_SCORED_CTES,
@@ -331,10 +335,6 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_vec = tagged.filter(F.col("is_new")).select("vec_id", "embedding")
     from pyspark.sql import Window
 
-    from kafka_flink_exactlyonce_example_spark.functions.similarity import (
-        cosine,
-    )
-
     x = _assign_to_seeds(old_vec, seeds).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cell").alias("icell"),
@@ -347,7 +347,7 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "cell",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
             _del_tag_col("neighbor_id").cast("int").alias("_tb"),
         )
     )
@@ -877,29 +877,18 @@ def _route_inline(
     (no Exchange, no per-(probe, cell) row explosion). Same (vec_id,
     cell, icell, embedding) output, value-identical by construction;
     q_gate_post_takedown's oracle grades the values at every SF."""
-    from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        cosine,
-    )
-
     cent_arr = cent.agg(
         F.collect_list(
             F.struct(F.col("cell").alias("cell"), F.col("centroid").alias("centroid"))
         ).alias("_cents")
     )
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                F.round(cosine(F.col("embedding"), c["centroid"]), 6).alias(
-                    "_cs"
-                ),
-                (-c["cell"]).alias("_nc"),
-                c["cell"].alias("cell"),
-            ),
-        )
+    best = F.expr(
+        "array_max(transform(_cents, c -> struct("
+        f"round({cosine_spark_sql('embedding', 'c.centroid')}, 6) AS _cs, "
+        "-c.cell AS _nc, c.cell AS cell))).cell AS cell"
     )
     coarse = new_vec.crossJoin(F.broadcast(cent_arr)).select(
-        "vec_id", best["cell"].alias("cell"), "embedding"
+        "vec_id", best, "embedding"
     )
     return _assign_to_seeds(
         coarse.withColumnRenamed("cell", "label"), seeds
@@ -917,10 +906,6 @@ def _gpt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     each neighbor carrying its tombstone flag. The caller checkpoints
     the bounded |batch| × posting-list relation once for BOTH top-1
     windows."""
-    from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        cosine,
-    )
-
     cent, seeds = inc_index_build(spark, sf_dir)
     tagged = _inc_tagged(spark, sf_dir)
     old_vec = tagged.filter(~F.col("is_new")).select(
@@ -945,7 +930,7 @@ def _gpt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
             F.coalesce("_tb", F.lit(0)).alias("_tb"),
         )
     )

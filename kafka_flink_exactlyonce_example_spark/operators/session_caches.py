@@ -49,6 +49,7 @@ BUILD_ORDER = (
     "unit_norms",
     "recall_brute",
     "inc_ann_index",
+    "rebuild_churn",
     "inc_indexed1",
     "embed_pairs",
     "gate_flags",

@@ -12,16 +12,22 @@ from __future__ import annotations
 
 import decimal
 import math as _math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
+    cosine_spark_sql,
     cosine_sql,
+    dist2,
+    dist2_spark_sql,
     dot,
+    dot_spark_sql,
     dot_sql,
     l2_norm,
+    l2_norm_spark_sql,
 )
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _assign_to_seeds,
@@ -74,7 +80,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(cosine(F.col("embedding"), F.col("a")), 6).alias("sim"),
+            F.round(cosine("embedding", "a"), 6).alias("sim"),
         )
         .orderBy(F.desc("sim"), "vec_id")
         .limit(10)
@@ -109,9 +115,10 @@ def q_label_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     nrm = emb.select(
         "label",
-        F.transform(
-            "embedding", lambda x: x.cast("double") / l2_norm(F.col("embedding"))
-        ).alias("u"),
+        F.expr(
+            "transform(embedding, el -> CAST(el AS DOUBLE) / "
+            f"{l2_norm_spark_sql('embedding')}) AS u"
+        ),
     )
     # per-(label, dim) component sums of û, then ‖Σû‖² per label
     comp = (
@@ -192,7 +199,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("a"))
     top_cells = (
         cent.crossJoin(F.broadcast(anchor))
-        .select("label", cosine(F.col("centroid"), F.col("a")).alias("cell_sim"))
+        .select("label", cosine("centroid", "a").alias("cell_sim"))
         .orderBy(F.desc("cell_sim"), "label")
         .limit(2)
         .select("label", "cell_sim")
@@ -204,7 +211,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(cosine(F.col("embedding"), F.col("a")), 6).alias("sim"),
+            F.round(cosine("embedding", "a"), 6).alias("sim"),
         )
         .orderBy(F.desc("sim"), "vec_id")
         .limit(10)
@@ -255,11 +262,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("probe_id"), F.col("ne").alias("p")
         )
     )
-    sim = F.aggregate(
-        F.zip_with("ne", "p", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ne", "p")
     scored = (
         nrm.crossJoin(probes)
         .filter(F.col("vec_id") != F.col("probe_id"))
@@ -400,6 +403,13 @@ def _lsh_planes(tbl: int, bits: int = _LSH_BITS) -> list[list[float]]:
     ]
 
 
+def _probe_buckets_sql(bits: int) -> str:
+    """Multi-probe ``explode`` text: each row's own bucket and its
+    ``bits`` one-bit flips, as rows named ``bucket``."""
+    flips = ", ".join(f"bucket ^ {1 << p}" for p in range(bits))
+    return f"explode(array(bucket, {flips})) AS bucket"
+
+
 def _lsh_bucket_sql(col: str, tbl: int, bits: int = _LSH_BITS) -> str:
     terms = []
     for p, w in enumerate(_lsh_planes(tbl, bits)):
@@ -474,23 +484,28 @@ def _lsh_bucket_frame(emb: DataFrame, bits: int = _LSH_BITS) -> DataFrame:
     spark = emb.sparkSession
     flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, bits)]
     pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
-    ds = F.transform(
-        F.col("planes"), lambda w: dot(F.col("embedding"), w)
+    ds = f"transform(planes, w -> {dot_spark_sql('embedding', 'w')}) AS ds"
+    tables = _bucket_tables_sql(
+        bits, lambda t, p: f"CASE WHEN ds[{t * bits + p}] > 0 THEN {1 << p} ELSE 0 END"
     )
-    scored = emb.crossJoin(F.broadcast(pdf)).select("vec_id", ds.alias("ds"))
-    tables = []
-    for t in range(_LSH_TABLES):
-        bucket = None
-        for p in range(bits):
-            bit = (
-                F.when(F.col("ds").getItem(t * bits + p) > 0, 1 << p)
-                .otherwise(0)
-            )
-            bucket = bit if bucket is None else bucket + bit
-        tables.append(F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket")))
-    return scored.select(
-        "vec_id", F.explode(F.array(*tables)).alias("tb")
-    ).select("vec_id", "tb.tbl", "tb.bucket")
+    return (
+        emb.crossJoin(F.broadcast(pdf))
+        .selectExpr("vec_id", ds)
+        .selectExpr("vec_id", tables)
+        .select("vec_id", "tb.tbl", "tb.bucket")
+    )
+
+
+def _bucket_tables_sql(bits: int, bit_sql: Callable[[int, int], str]) -> str:
+    """``explode`` text of the per-table bucket structs (tbl, bucket),
+    bucket = Σ_{p<bits} bit_sql(t, p), folded left to right."""
+    tables = ", ".join(
+        f"struct({t} AS tbl, "
+        + " + ".join(bit_sql(t, p) for p in range(bits))
+        + " AS bucket)"
+        for t in range(_LSH_TABLES)
+    )
+    return f"explode(array({tables})) AS tb"
 
 
 # Full-width plane-sign relation: plane p's
@@ -514,15 +529,11 @@ def _signs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
     flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, _LSH_MAX_BITS)]
     pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
-    sg = F.transform(
-        F.col("planes"),
-        lambda w: F.when(dot(F.col("embedding"), w) > 0, 1).otherwise(0),
+    sg = (
+        "transform(planes, w -> "
+        f"CASE WHEN {dot_spark_sql('embedding', 'w')} > 0 THEN 1 ELSE 0 END) AS sg"
     )
-    return (
-        emb.crossJoin(F.broadcast(pdf))
-        .select("vec_id", sg.alias("sg"))
-        .localCheckpoint()
-    )
+    return emb.crossJoin(F.broadcast(pdf)).selectExpr("vec_id", sg).localCheckpoint()
 
 
 def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
@@ -530,19 +541,14 @@ def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
     sign cache: bucket = Σ_{p<k} sg[t·MAX+p] << p — bit-identical to
     :func:`_lsh_bucket_frame` (same planes, same sign test), verified
     by the unchanged oracle hashes and recall pins."""
-    signs = _signs_for(spark, sf_dir)
-    tables = []
-    for t in range(_LSH_TABLES):
-        bucket = None
-        for p in range(bits):
-            bit = (
-                F.col("sg").getItem(t * _LSH_MAX_BITS + p) * (1 << p)
-            )
-            bucket = bit if bucket is None else bucket + bit
-        tables.append(F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket")))
-    return signs.select(
-        "vec_id", F.explode(F.array(*tables)).alias("tb")
-    ).select("vec_id", "tb.tbl", "tb.bucket")
+    tables = _bucket_tables_sql(
+        bits, lambda t, p: f"sg[{t * _LSH_MAX_BITS + p}] * {1 << p}"
+    )
+    return (
+        _signs_for(spark, sf_dir)
+        .selectExpr("vec_id", tables)
+        .select("vec_id", "tb.tbl", "tb.bucket")
+    )
 
 
 #: Materialized bucket relation per k: three queries consume buckets
@@ -583,10 +589,9 @@ def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         F.expr(
-            "transform(embedding, v -> CAST(v AS DOUBLE) / sqrt("
-            "aggregate(transform(embedding, u -> CAST(u AS DOUBLE)"
-            " * CAST(u AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, u) -> a + u)))"
-        ).alias("ne"),
+            "transform(embedding, el -> CAST(el AS DOUBLE) / "
+            f"{l2_norm_spark_sql('embedding')}) AS ne"
+        ),
     ).localCheckpoint()
 
 
@@ -607,11 +612,7 @@ def _top1_by_cosine(cand: DataFrame, nrm: DataFrame) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("ne").alias("eb")
     )
     pairs = cand.join(ex, "vec_id").join(ey, "neighbor_id")
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     return (
         pairs.select("vec_id", "neighbor_id", sim.alias("sim_raw"))
         .groupBy("vec_id")
@@ -873,11 +874,7 @@ def brute_topk_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     result instead of re-scoring |panel| × corpus pairs."""
     nrm = _normalized(spark, sf_dir)
     panel = _recall_panel(spark, sf_dir)
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     probes = F.broadcast(
         nrm.join(panel, "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -929,11 +926,7 @@ def _recall_audit(
     construction (their candidate generators start from the panel);
     tests/test_parity.py::test_recall_audit_drops_nonpanel_probes pins
     the drop semantics so new callers find the contract."""
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     # cand.vec_id is ALWAYS a panel member (every caller generates
     # candidates for panel probes only), so the probe-vector side is
     # the bounded panel — broadcast it instead of shuffling the whole
@@ -1112,19 +1105,7 @@ def _mp_recall_frame(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     panel = _recall_panel(spark, sf_dir)
     xp = (
         b.join(panel, "vec_id", "left_semi")
-        .select(
-            "vec_id",
-            "tbl",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                        for p in range(k)
-                    ],
-                )
-            ).alias("bucket"),
-        )
+        .selectExpr("vec_id", "tbl", _probe_buckets_sql(k))
     )
     y = _capped_index(b).select(
         F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"
@@ -1725,9 +1706,7 @@ def frozen_route(new: DataFrame, cent: DataFrame, seeds: DataFrame) -> DataFrame
             "vec_id",
             "embedding",
             "cell",
-            F.round(
-                cosine(F.col("embedding"), F.col("centroid")), 6
-            ).alias("cell_sim"),
+            F.round(cosine("embedding", "centroid"), 6).alias("cell_sim"),
         )
         .withColumn("rn", F.row_number().over(cell_w))
         .filter(F.col("rn") == 1)
@@ -1843,7 +1822,7 @@ def frozen_top1(
             "vec_id",
             "cell",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("rn", F.row_number().over(nb_w))
         .filter(F.col("rn") == 1)
@@ -1890,7 +1869,7 @@ def frozen_topk(
             "vec_id",
             "cell",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("nb_rank", F.row_number().over(nb_w))
         .filter(F.col("nb_rank") <= k)
@@ -2255,7 +2234,7 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("rn", F.row_number().over(nb_w))
         .filter(F.col("rn") == 1)
@@ -2279,8 +2258,9 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The churn relation is consumed by TWO graded rows (the per-probe
 #: report and the promote verdict) — materialize once per (session,
-#: sf), |batch| rows.
-@session_cache("rebuild_churn")
+#: sf), |batch| rows. Shared, so its build is its own line item rather
+#: than part of whichever consumer runs first.
+@session_cache("rebuild_churn", shared=True)
 def rebuild_churn_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rebuild_churn_frame(spark, sf_dir).localCheckpoint()
 
@@ -2422,19 +2402,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     table per query vector."""
     k = _adaptive_bits(_emb_count(spark, sf_dir), _MP_BITS, _MP_TARGET_BUCKET)
     b = _buckets_cached(spark, sf_dir, k)
-    probes = b.select(
-        "vec_id",
-        "tbl",
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                    for p in range(k)
-                ],
-            )
-        ).alias("bucket"),
-    )
+    probes = b.selectExpr("vec_id", "tbl", _probe_buckets_sql(k))
     y = _capped_index(b).select(
         F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"
     )
@@ -2541,7 +2509,7 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "clabel",
-        F.round(cosine(F.col("embedding"), F.col("c")), 6).alias("sim"),
+        F.round(cosine("embedding", "c"), 6).alias("sim"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), "clabel")
     return (
@@ -2634,7 +2602,7 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_label",
         "vec_id",
         "label",
-        F.round(cosine(F.col("embedding"), F.col("p_emb")), 6).alias("sim"),
+        F.round(cosine("embedding", "p_emb"), 6).alias("sim"),
     )
     w = Window.partitionBy("p_id").orderBy(F.col("sim").desc(), "vec_id")
     dcg = (
@@ -2727,17 +2695,8 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    dist2 = F.aggregate(
-        F.zip_with(
-            "embedding",
-            "c",
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     scored = emb.join(F.broadcast(cent), "label").select(
-        "vec_id", "label", F.round(dist2, 6).alias("dist2")
+        "vec_id", "label", F.round(dist2("embedding", "c"), 6).alias("dist2")
     )
     w = Window.partitionBy("label").orderBy(F.col("dist2").desc(), "vec_id")
     return (
@@ -2818,17 +2777,15 @@ def q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(2 * _JL_PROBES)
     )
     w = Window.orderBy("_h", "vec_id")  # 32-row relation — bounded
-    proj_arr = F.array(
-        *[
-            dot(F.col("embedding"), F.array(*[F.lit(x) for x in plane]))
-            for plane in _jl_planes()
-        ]
-    )
+    planes = [
+        "array(" + ", ".join(f"{x!r}D" for x in plane) + ")" for plane in _jl_planes()
+    ]
+    proj_arr = ", ".join(dot_spark_sql("embedding", p) for p in planes)
     proj = probes.select(
         "vec_id",
         "embedding",
         F.row_number().over(w).alias("rn"),
-        proj_arr.alias("p"),
+        F.expr(f"array({proj_arr}) AS p"),
     )
     a = proj.filter(F.col("rn") <= _JL_PROBES).select(
         F.col("rn").alias("rn"),
@@ -2842,8 +2799,8 @@ def q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("eb"),
         F.col("p").alias("pb"),
     )
-    co = cosine(F.col("ea"), F.col("eb"))
-    cp = cosine(F.col("pa"), F.col("pb"))
+    co = cosine("ea", "eb")
+    cp = cosine("pa", "pb")
     return a.join(b, "rn").select(
         "vec_a",
         "vec_b",
@@ -2944,19 +2901,12 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"), F.row_number().over(w).alias("c")
     )
 
-    def dist2(a, b):
-        diffs = F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        )
-        return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
     def assign(centroids: DataFrame) -> DataFrame:
         scored = emb.crossJoin(F.broadcast(centroids)).select(
             "vec_id",
             "embedding",
             "c",
-            dist2(F.col("embedding"), F.col("cv")).alias("d2"),
+            dist2("embedding", "cv").alias("d2"),
         )
         # argmin as one map-side-combining aggregate: min(struct) is
         # lexicographic (d2 first, c tie-break); every row of a vec_id
@@ -3053,7 +3003,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_label",
             "vec_id",
             F.col("label").alias("neg_label"),
-            F.round(cosine(F.col("embedding"), F.col("p")), 6).alias("sim"),
+            F.round(cosine("embedding", "p"), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
@@ -3100,7 +3050,7 @@ def q_embed_norm_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     run it first, always. Norms accumulate in float64 on both engines
     (elements cast before multiply) so round(·, 6) is stable."""
     e = table(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+    nrm = l2_norm("embedding")
     scored = e.select(
         "label",
         F.size("embedding").cast("long").alias("dim"),
@@ -3184,7 +3134,7 @@ def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "probe_id",
-            F.round(cosine(F.col("embedding"), F.col("p")), 6).alias("sim"),
+            F.round(cosine("embedding", "p"), 6).alias("sim"),
         )
         .groupBy("label", "probe_id")
         .agg(F.max("sim").alias("maxsim"))
@@ -3264,18 +3214,19 @@ def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(8)
         .drop("_h")
     )
-    trunc = F.slice(F.col("embedding"), 1, _MRL_DIMS)
-    trunc_p = F.slice(F.col("p"), 1, _MRL_DIMS)
     scored = (
         emb.crossJoin(F.broadcast(probes))
         .filter(F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
             "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("p")), 6).alias(
-                "sim_full"
-            ),
-            F.round(cosine(trunc, trunc_p), 6).alias("sim_trunc"),
+            F.round(cosine("embedding", "p"), 6).alias("sim_full"),
+            F.round(
+                cosine(
+                    f"slice(embedding, 1, {_MRL_DIMS})", f"slice(p, 1, {_MRL_DIMS})"
+                ),
+                6,
+            ).alias("sim_trunc"),
         )
     )
     wf = Window.partitionBy("probe_id").orderBy(F.desc("sim_full"), "vec_id")
@@ -3310,14 +3261,6 @@ def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 8          # subspaces
 _PQ_SUBDIM = 8     # dims per subspace (8 × 8 = 64)
 _PQ_K = 256        # codewords per subspace → 1 byte/subspace, 8 B/vector
-
-
-def _pq_dist2(a, b):
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
 @session_cache("pq_codebook", shared=True)
@@ -3369,21 +3312,12 @@ def _pq_train(
         cb = codebook.groupBy("s").agg(
             F.collect_list(F.struct("c", "cv")).alias("_cbs")
         )
-        best = F.array_min(
-            F.transform(
-                F.col("_cbs"),
-                lambda x: F.struct(
-                    _pq_dist2(F.col("sub"), x["cv"]).alias("d2"),
-                    x["c"].alias("c"),
-                ),
-            )
+        best = (
+            "array_min(transform(_cbs, cw -> struct("
+            f"{dist2_spark_sql('sub', 'cw.cv')} AS d2, cw.c AS c)))"
         )
-        return subs.join(F.broadcast(cb), "s").select(
-            "vec_id",
-            "s",
-            "sub",
-            best["c"].alias("c"),
-            best["d2"].alias("d2"),
+        return subs.join(F.broadcast(cb), "s").selectExpr(
+            "vec_id", "s", "sub", f"{best}.c AS c", f"{best}.d2 AS d2"
         )
 
     a1 = assign(subseeds)
@@ -3617,12 +3551,12 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_PQ_PROBES)
         .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p"))
     )
-    psub = F.expr(f"slice(p, (s - 1) * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
+    psub = f"slice(p, (s - 1) * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})"
     lut = probes.crossJoin(F.broadcast(cent1)).select(
         "probe_id",
         "s",
         "c",
-        _pq_dist2(psub, F.col("cv")).alias("pd2"),
+        dist2(psub, "cv").alias("pd2"),
     )
     probe_ids = probes.select(F.col("probe_id").alias("vec_id"))
     adc = (
@@ -3638,9 +3572,7 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "vec_id",
-            F.round(_pq_dist2(F.col("embedding"), F.col("p")), 6).alias(
-                "ex_d2"
-            ),
+            F.round(dist2("embedding", "p"), 6).alias("ex_d2"),
         )
     )
     wa = Window.partitionBy("probe_id").orderBy("adc_d2", "vec_id")
@@ -4062,18 +3994,19 @@ def cq_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
     cosine, -c, c) — max cosine, ties → smallest cell id. Zero
     shuffles; nothing data-scaled leaves the scan."""
     cents = cent.agg(F.collect_list(F.struct("c", "cv")).alias("_cents"))
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda s: F.struct(
-                F.round(cosine(F.col("embedding"), s["cv"]), 6).alias("_cs"),
-                (-s["c"]).alias("_nc"),
-                s["c"].alias("ccell"),
-            ),
-        )
+    return e.crossJoin(F.broadcast(cents)).selectExpr(
+        "vec_id", f"{_cq_best_sql('_cents')}.ccell AS ccell", "embedding"
     )
-    return e.crossJoin(F.broadcast(cents)).select(
-        "vec_id", best["ccell"].alias("ccell"), "embedding"
+
+
+def _cq_best_sql(cents: str) -> str:
+    """Nearest centroid of ``embedding`` in the array column ``cents``
+    of struct(c, cv): struct(round(cos, 6), -c, c) orders by rounded
+    cosine, then smallest cell id."""
+    return (
+        f"array_max(transform({cents}, s -> struct("
+        f"round({cosine_spark_sql('embedding', 's.cv')}, 6) AS _cs, "
+        "-s.c AS _nc, s.c AS ccell)))"
     )
 
 
@@ -4082,20 +4015,9 @@ def _cq_assign_scored(e: DataFrame, cent: DataFrame) -> DataFrame:
     (vec_id, ccell, cs). Same inline array_max, zero shuffles; the QC
     queries (q_cq_census, q_cq_train_curve) read the score column."""
     cents = cent.agg(F.collect_list(F.struct("c", "cv")).alias("_cents"))
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda s: F.struct(
-                F.round(cosine(F.col("embedding"), s["cv"]), 6).alias("_cs"),
-                (-s["c"]).alias("_nc"),
-                s["c"].alias("ccell"),
-            ),
-        )
-    )
-    return e.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        best["ccell"].alias("ccell"),
-        best["_cs"].alias("cs"),
+    best = _cq_best_sql("_cents")
+    return e.crossJoin(F.broadcast(cents)).selectExpr(
+        "vec_id", f"{best}.ccell AS ccell", f"{best}._cs AS cs"
     )
 
 
@@ -4284,9 +4206,7 @@ def _ivf_route_frames(
         .select(
             "vec_id",
             F.col("c").alias("ccell"),
-            F.round(
-                cosine(F.col("cv"), F.col("embedding")), 6
-            ).alias("cell_sim"),
+            F.round(cosine("cv", "embedding"), 6).alias("cell_sim"),
         )
         .withColumn("rn", F.row_number().over(rank_w))
         .filter(F.col("rn") <= nprobe)
@@ -4337,7 +4257,7 @@ def q_cq_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "ccell",
             "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("cv")), 6).alias("cs"),
+            F.round(cosine("embedding", "cv"), 6).alias("cs"),
         )
     )
     return scored.groupBy("ccell").agg(
@@ -4439,25 +4359,11 @@ def q_cq_train_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct("c", "cv")).alias(f"_cents{i}")
         )
         wide = wide.crossJoin(F.broadcast(cents))
-    best = [
-        F.array_max(
-            F.transform(
-                F.col(f"_cents{i}"),
-                lambda s: F.struct(
-                    F.round(cosine(F.col("embedding"), s["cv"]), 6).alias(
-                        "_cs"
-                    ),
-                    (-s["c"]).alias("_nc"),
-                    s["c"].alias("ccell"),
-                ),
-            )
-        )
-        for i in range(len(chain))
-    ]
-    wide = wide.select(
+    best = [_cq_best_sql(f"_cents{i}") for i in range(len(chain))]
+    wide = wide.selectExpr(
         "vec_id",
-        *[b["ccell"].alias(f"c{i}") for i, b in enumerate(best)],
-        *[b["_cs"].alias(f"cs{i}") for i, b in enumerate(best)],
+        *[f"{b}.ccell AS c{i}" for i, b in enumerate(best)],
+        *[f"{b}._cs AS cs{i}" for i, b in enumerate(best)],
     )
     agg = wide.agg(
         F.count(F.lit(1)).alias("n"),
@@ -4602,19 +4508,13 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.col("c").alias("ccell"),
-            F.round(
-                cosine(F.col("cv"), F.col("embedding")), 6
-            ).alias("cell_sim"),
+            F.round(cosine("cv", "embedding"), 6).alias("cell_sim"),
         )
         .withColumn("cell_rank", F.row_number().over(rank_w))
         .filter(F.col("cell_rank") <= max(_SWEEP_DEPTHS))
         .select("vec_id", "ccell", "cell_rank")
     )
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     ex = F.broadcast(
         nrm.join(_recall_panel(spark, sf_dir), "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -4781,11 +4681,7 @@ def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # filtered ground truth: the brute_topk_for pattern with the
     # predicate pushed onto the neighbor side of the one corpus scan
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     probes = F.broadcast(
         nrm.join(panel, "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -4916,11 +4812,7 @@ def _filtered_topk_frame(
     nrm = _normalized(spark, sf_dir)
     panel = _recall_panel(spark, sf_dir)
     allowed = emb.filter(predicate).select("vec_id")
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     probes = F.broadcast(
         nrm.join(panel, "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -5105,11 +4997,7 @@ def q_ann_filtered_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     nivf = fpass.groupBy("vec_id").agg(F.count(F.lit(1)).alias("ivf_pass"))
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     probes = F.broadcast(
         nrm.join(panel, "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -5378,7 +5266,7 @@ def brute_serve_topk(
         .select(
             "vec_id",
             "neighbor_id",
-            cosine(F.col("embedding"), F.col("xe")).alias("sim_raw"),
+            cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("nb_rank", F.row_number().over(w))
         .filter(F.col("nb_rank") <= k)
@@ -5706,11 +5594,7 @@ def q_filtered_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
     )
-    sim = F.aggregate(
-        F.zip_with("ea", "eb", lambda a, b_: a * b_),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    sim = dot("ea", "eb")
     probes = F.broadcast(
         nrm.join(panel, "vec_id", "left_semi").select(
             "vec_id", F.col("ne").alias("ea")
@@ -6017,9 +5901,9 @@ def _adc_frames(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p")
     )
     scanned = ivf_adc_scan(fine, _cq_subcells_for(spark, sf_dir))
-    psub = F.expr(f"slice(p, (s - 1) * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})")
+    psub = f"slice(p, (s - 1) * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})"
     lut = probes.crossJoin(F.broadcast(cent1)).select(
-        "probe_id", "s", "c", _pq_dist2(psub, F.col("cv")).alias("pd2")
+        "probe_id", "s", "c", dist2(psub, "cv").alias("pd2")
     )
     adc = (
         scanned.join(
@@ -6220,7 +6104,7 @@ def q_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "neighbor_id",
-            F.round(cosine(F.col("embedding"), F.col("p")), 6).alias("sim"),
+            F.round(cosine("embedding", "p"), 6).alias("sim"),
         )
     )
     wt = Window.partitionBy("probe_id").orderBy(

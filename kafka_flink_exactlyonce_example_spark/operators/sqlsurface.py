@@ -452,7 +452,7 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(anchor))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), F.col("a")), 6).alias("sim"),
+            F.round(cosine("embedding", "a"), 6).alias("sim"),
         )
     )
     cos_top = (

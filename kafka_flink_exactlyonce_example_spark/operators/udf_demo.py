@@ -49,7 +49,7 @@ def q_udf_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         F.round(pd_norm("embedding"), 6).alias("norm_pandas"),
-        F.round(l2_norm(F.col("embedding")), 6).alias("norm_native"),
+        F.round(l2_norm("embedding"), 6).alias("norm_native"),
         F.round(py_tax(F.lit(100.0)), 6).alias("udf_const"),
     ).withColumn(
         "udf_vs_native_maxdiff",

@@ -110,7 +110,12 @@ def graded_before(round_no: int | None = None) -> set[str]:
 #: window so the new plan earns a fresh driver row. The one per-round
 #: hand edit. Only the round being derived is looked up, so an entry
 #: goes inert once the driver's artifact advances ``rotation_round()``.
-_CHANGED_IN_ROUND: dict[int, frozenset[str]] = {}
+_CHANGED_IN_ROUND: dict[int, frozenset[str]] = {
+    # q_fired_rebuild: routes its first generation through the cent1
+    # cache, a swap no graded row covers yet; q_minhash_est:
+    # signature lanes and agreement sum rewritten as SQL text
+    19: frozenset({"q_fired_rebuild", "q_minhash_est"}),
+}
 
 
 def changed_in(round_no: int | None = None) -> frozenset[str]:

@@ -77,10 +77,10 @@ def test_embed_dup_pairs_stay_within_cells(spark, monkeypatch):
     e = _toy_embeddings(spark, 200)
     cells = {r["vec_id"]: r["cell"] for r in dedup._ivf_cells(e).collect()}
 
-    from kafka_flink_exactlyonce_example_spark.functions.similarity import dot
+    from kafka_flink_exactlyonce_example_spark.functions.similarity import l2_norm
 
     blocked = dedup._ivf_cells(e)
-    norm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+    norm = l2_norm("embedding")
     a = blocked.select(
         F.col("vec_id").alias("vec_a"), "label", "cell",
         F.col("embedding").alias("ea"), norm.alias("na"),
@@ -272,9 +272,7 @@ def test_ivf_adc_scan_restricts_to_subcells(spark, monkeypatch):
         .select(
             "vec_id",
             "label",
-            F.round(
-                cosine(F.col("centroid"), F.col("embedding")), 6
-            ).alias("cell_sim"),
+            F.round(cosine("centroid", "embedding"), 6).alias("cell_sim"),
         )
         .withColumn("rn", F.row_number().over(rank_w))
         .filter(F.col("rn") <= simsearch._IVF_NPROBE)
@@ -1222,9 +1220,7 @@ def test_serve_topk_label_grain_equals_subcell_topk(spark, sf_dir):
             "vec_id",
             "cell",
             "neighbor_id",
-            simsearch.cosine(F.col("embedding"), F.col("xe")).alias(
-                "sim_raw"
-            ),
+            simsearch.cosine("embedding", "xe").alias("sim_raw"),
         )
         .withColumn("nb_rank", F.row_number().over(w))
         .filter(F.col("nb_rank") <= simsearch._SERVE_K)

@@ -809,9 +809,7 @@ def main() -> None:
                 "vec_id",
                 "embedding",
                 "cell",
-                F.round(_cos(F.col("embedding"), F.col("centroid")), 6).alias(
-                    "cell_sim"
-                ),
+                F.round(_cos("embedding", "centroid"), 6).alias("cell_sim"),
             )
             .withColumn("rn", F.row_number().over(cell_w))
             .filter(F.col("rn") == 1)
@@ -893,9 +891,7 @@ def main() -> None:
             .select(
                 "vec_id",
                 F.col("c").alias("label"),
-                F.round(_cos(F.col("cv"), F.col("embedding")), 6).alias(
-                    "cell_sim"
-                ),
+                F.round(_cos("cv", "embedding"), 6).alias("cell_sim"),
             )
             .withColumn("rn", F.row_number().over(rank_w))
             .filter(F.col("rn") <= sim._IVF_NPROBE)
@@ -966,9 +962,7 @@ def main() -> None:
             .select(
                 "vec_id",
                 F.col("c").alias("ccell"),
-                F.round(_cos(F.col("cv"), F.col("embedding")), 6).alias(
-                    "cell_sim"
-                ),
+                F.round(_cos("cv", "embedding"), 6).alias("cell_sim"),
             )
             .withColumn("rn", F.row_number().over(rank_w3))
             .filter(F.col("rn") <= sim._IVF_NPROBE)
