@@ -279,7 +279,7 @@ _NGRAM = 16  # characters per shingle — spans 2-3 word boundaries
 # distinct (doc_id, lang, gram-hash) relation: q_char_ngram and
 # q_dup_span consume the identical shingle explode — materialize once
 # per session.
-@session_cache("char_grams", shared=True)
+@session_cache("char_grams")
 def _char_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     # position explode + xxhash64 per char — widen the one-split toy
     # scan so the gram build uses every core (no-op at scale)

@@ -30,7 +30,6 @@ from kafka_flink_exactlyonce_example_spark.functions.similarity import (
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
 from kafka_flink_exactlyonce_example_spark.registry import query
-from kafka_flink_exactlyonce_example_spark.session import hash_lane
 from kafka_flink_exactlyonce_example_spark.sources import table
 
 _N_HASHES = 16
@@ -458,11 +457,11 @@ def _jaccard_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     within lang — the small-N ground truth, one localCheckpoint'ed
     materialization per session. Audit-time only (q_lsh_recall: the
     audit that measures what the LSH candidate route misses), so it is
-    not shared: its build lands on that one consumer's row."""
+    not pre-built: its build lands on that one consumer's row."""
     return _jaccard_edges(spark, sf_dir).localCheckpoint()
 
 
-@session_cache("lsh_edges", shared=True)
+@session_cache("lsh_edges")
 def _lsh_verified_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) near-dup edges from the SCALE path: capped LSH
     band candidates scored by exact word-set Jaccard ≥ 0.8
@@ -809,14 +808,14 @@ _SEED_OVERSAMPLE = 64
 # seeds derivation is fully deterministic (md5/xxhash ranks over
 # values), so the two independently-derived relations embody the SAME
 # quantizer.
-@session_cache("ivf_seeds", shared=True)
+@session_cache("ivf_seeds")
 def _ivf_seeds_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_seeds(table(spark, sf_dir, "embeddings")).localCheckpoint()
 
 
 # cell assignment: q_embed_dup and q_semdedup share the same blocking
 # relation.
-@session_cache("ivf_cells", shared=True)
+@session_cache("ivf_cells")
 def _ivf_cells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_cells(table(spark, sf_dir, "embeddings")).localCheckpoint()
 
@@ -904,7 +903,7 @@ def _embed_pairs_build(scored: DataFrame) -> DataFrame:
 #: per undirected pair (va iff cb < ca, else vb — the tie drops the
 #: higher id, which the va < vb orientation encodes). Shared-cache
 #: policy: 2 consumers.
-@session_cache("embed_pairs", shared=True)
+@session_cache("embed_pairs")
 def _embed_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _embed_pairs_build(_semdedup_scored_for(spark, sf_dir)).localCheckpoint()
 
@@ -1224,7 +1223,7 @@ def q_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@session_cache("minhash_sigs", shared=True)
+@session_cache("minhash_sigs")
 def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, mh0..mh15): the MinHash signature relation shared by
     q_near_dup (banding) and q_minhash_est (lane-agreement estimate).
@@ -1240,35 +1239,20 @@ def _build_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _signatures_frame(shingled: DataFrame) -> DataFrame:
-    # md5 lane (default, oracle-parity): 4 independent 8-hex-char
-    # lanes per md5 digest → 16 minhashes from only 4 md5 calls per
-    # shingle (Spark's codegen subexpression elimination computes each
-    # seeded digest once across the 16 aggs).
-    # xxhash64 lane (production flag, ~2.2× cheaper per hash_ab.py):
-    # 8 seeded xxhash64 calls per shingle, each 64-bit value split
-    # into hi/lo 32-bit lanes rendered as fixed-width hex so the
-    # string min / band concat downstream is byte-for-byte the same
-    # shape as the md5 lane (lexicographic hex order == unsigned
-    # numeric order at fixed width).
-    if hash_lane() == "xxhash64":
-
-        def lane(i: int) -> str:
-            h = f"xxhash64('{i // 2}:', shingle)"
-            if i % 2 == 0:
-                return f"format_string('%08x', shiftrightunsigned({h}, 32))"
-            return f"format_string('%08x', {h} & {0xFFFFFFFF})"
-
-    else:
-
-        def lane(i: int) -> str:
-            return f"substring(md5(concat('{i // 4}:', shingle)), {1 + 8 * (i % 4)}, 8)"
+    # 4 independent 8-hex-char lanes per md5 digest → 16 minhashes from
+    # only 4 md5 calls per shingle (Spark's codegen subexpression
+    # elimination computes each seeded digest once across the 16
+    # aggs). md5, because the DuckDB oracle must compute identical
+    # values and has no xxhash64.
+    def lane(i: int) -> str:
+        return f"substring(md5(concat('{i // 4}:', shingle)), {1 + 8 * (i % 4)}, 8)"
 
     return shingled.groupBy("doc_id").agg(
         *[F.expr(f"min({lane(i)}) AS mh{i}") for i in range(_N_HASHES)]
     )
 
 
-@session_cache("shingles", shared=True)
+@session_cache("shingles")
 def shingles_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle) word-2-gram relation, materialized
     once per (session, sf). Shared by the MinHash signature build and
@@ -1306,7 +1290,7 @@ def _shingles_frame(d: DataFrame) -> DataFrame:
     )
 
 
-@session_cache("capped_bands", shared=True)
+@session_cache("capped_bands")
 def _capped_bands_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capped band relation, materialized once per (session, sf).
     Round-3 ADVICE: the per-call ``persist`` here leaked one

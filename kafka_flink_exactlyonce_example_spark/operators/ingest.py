@@ -460,7 +460,7 @@ def _gate_frame(
 #: policy's threshold (VERDICT r08 item 3: multi-consumer relations are
 #: pre-built, timed cache line items; single-consumer ones stay on
 #: their query's row).
-@session_cache("gate_flags", shared=True)
+@session_cache("gate_flags")
 def _gate_flags_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _gate_frame_dual(spark, sf_dir).localCheckpoint()
 

@@ -21,13 +21,11 @@ sites follow:
 
 Session caches. Relations that several queries consume (shingles,
 MinHash signatures, IVF cells, the frozen ingest index, the catalog's
-table plans, ...) are built once per (Spark application, sf_dir, hash
-lane) by a :func:`session_cache` function. Keyed on applicationId, not
+table plans, ...) are built once per (Spark application, sf_dir) by a
+:func:`session_cache` function. Keyed on applicationId, not
 ``id(spark)``: CPython reuses ids after GC, so an id-keyed cache could
-hand a checkpoint bound to a stopped context to a new session. The
-hash lane is in the key so flipping ``SPARK_GRAFT_HASH_LANE``
-mid-session never serves a relation built under the other hash
-family. Checkpoint blocks die with their session, so nothing leaks.
+hand a checkpoint bound to a stopped context to a new session.
+Checkpoint blocks die with their session, so nothing leaks.
 
 One REENTRANT lock is shared by every cache on purpose: builds read
 other caches (gate_flags → inc_index_build → table), and a per-cache
@@ -51,8 +49,6 @@ from typing import Any, TypeVar
 from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
-from kafka_flink_exactlyonce_example_spark.session import hash_lane
-
 T = TypeVar("T")
 
 log = logging.getLogger(__name__)
@@ -64,9 +60,9 @@ MEMO_LOCK = threading.RLock()
 SESSION_CACHES: dict[str, Callable[..., Any]] = {}
 
 
-def session_cache(name: str, *, shared: bool = False):
+def session_cache(name: str):
     """Memoize a ``build(spark, sf_dir, *args)`` per (applicationId,
-    sf_dir, hash lane, *args) and register it under ``name``.
+    sf_dir, *args) and register it under ``name``.
 
     Hits are a plain dict read (no lock). A miss takes
     :data:`MEMO_LOCK`, re-checks, and runs ``build`` at most once per
@@ -75,10 +71,8 @@ def session_cache(name: str, *, shared: bool = False):
     than briefly serializing them. Each build is logged at DEBUG with
     its seconds, or at WARNING when it runs off the main thread.
 
-    ``shared`` marks a relation that several queries consume: the bench
-    pre-builds it as its own timed line item
-    (``session_caches.CACHE_BUILDERS``), so its cost does not land on
-    whichever consumer happens to run first."""
+    Which caches the bench pre-builds as their own timed line items is
+    declared once, in ``session_caches.BUILD_ORDER``."""
 
     def decorate(build: Callable[..., T]) -> Callable[..., T]:
         cache: dict[tuple, T] = {}
@@ -99,7 +93,7 @@ def session_cache(name: str, *, shared: bool = False):
 
         @functools.wraps(build)
         def get(spark, sf_dir: str, *args) -> T:
-            key = (spark.sparkContext.applicationId, sf_dir, hash_lane(), *args)
+            key = (spark.sparkContext.applicationId, sf_dir, *args)
             if key in cache:
                 return cache[key]
             with MEMO_LOCK:
@@ -109,7 +103,6 @@ def session_cache(name: str, *, shared: bool = False):
 
         if name in SESSION_CACHES:
             raise ValueError(f"session cache {name!r} is registered twice")
-        get.shared = shared
         SESSION_CACHES[name] = get
         return get
 

@@ -1,18 +1,21 @@
-"""The per-session SHARED caches in build order, so the bench harness
-can time each build as its own line item (VERDICT r08 item 3).
+"""The session caches the bench pre-builds, in build order, so each
+build is timed as its own line item.
 
 Several expensive relations (shingles, MinHash signatures, band
-buckets, verified edges, IVF cells, hyperplane signs, char-grams, the
-PQ codebook, the LM model tables) are built ONCE per session by a
-``@session_cache(name, shared=True)`` function and shared across
-queries. In a bench loop, whichever consumer the iteration order hits
-first would absorb the whole build cost; pre-building every shared
-cache as a named, timed step separates amortized infrastructure cost
-from each query's marginal cost.
+buckets, verified edges and their connected-component labels, IVF
+cells, hyperplane signs, char-grams, the PQ codebook, the LM model
+tables) are built ONCE per session by a ``@session_cache(name)``
+function and read by several queries. In a bench loop, whichever
+consumer the iteration order hits first would absorb the whole build
+cost; pre-building each such cache as a named, timed step separates
+amortized infrastructure cost from each query's marginal cost.
 
-Single-consumer caches (``shared=False``, e.g. ``jaccard_pairs`` for
-q_lsh_recall, ``pca_model`` for q_pca_power) are deliberately not
-pre-built: their build cost belongs on their one consumer's row.
+:data:`BUILD_ORDER` is the one declaration of which caches are
+pre-built: ``bench.py``, ``tools/plan_fingerprints.py`` and perfbench
+read it (through :data:`CACHE_BUILDERS`). A cache with one consumer
+(e.g. ``jaccard_pairs`` for q_lsh_recall, ``pca_model`` for
+q_pca_power) stays out of it: its build cost belongs on that
+consumer's row.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-# the modules whose imports register the shared caches
+# the modules whose imports register the pre-built caches
 from kafka_flink_exactlyonce_example_spark.operators import (  # noqa: F401
     datamgmt,
     dedup,
@@ -40,6 +43,7 @@ BUILD_ORDER = (
     "minhash_sigs",
     "capped_bands",
     "lsh_edges",
+    "dup_labels",
     # embedding-side caches
     "ivf_seeds",
     "ivf_cells",
@@ -71,7 +75,8 @@ CACHE_BUILDERS = {name: SESSION_CACHES[name] for name in BUILD_ORDER}
 
 
 def build_all(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Build every shared cache, returning per-cache wall seconds."""
+    """Build every :data:`BUILD_ORDER` cache, returning per-cache wall
+    seconds."""
     out: dict[str, float] = {}
     for name, fn in CACHE_BUILDERS.items():
         t0 = time.perf_counter()

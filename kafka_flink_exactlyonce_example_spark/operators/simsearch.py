@@ -470,32 +470,6 @@ def _capped_index(b: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_bucket_frame(emb: DataFrame, bits: int = _LSH_BITS) -> DataFrame:
-    """(vec_id, tbl, bucket): one scan, ``bits`` sign dots per table —
-    the Spark twin of :func:`_lsh_buckets_union_sql`.
-
-    The plane matrix rides as a broadcast ONE-ROW DataFrame (L·k
-    64-double arrays) instead of L·k separate 64-literal expression
-    trees: per-plane dots still fold left-to-right exactly like the
-    oracle's ``dot_sql`` (verified bit-identical buckets), but the
-    Catalyst tree shrinks from ~3k literal nodes to one ``transform``
-    — measured ~2 s of driver-side analysis/codegen per query at
-    k = 6, the dominant cost of these queries at toy scale."""
-    spark = emb.sparkSession
-    flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, bits)]
-    pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
-    ds = f"transform(planes, w -> {dot_spark_sql('embedding', 'w')}) AS ds"
-    tables = _bucket_tables_sql(
-        bits, lambda t, p: f"CASE WHEN ds[{t * bits + p}] > 0 THEN {1 << p} ELSE 0 END"
-    )
-    return (
-        emb.crossJoin(F.broadcast(pdf))
-        .selectExpr("vec_id", ds)
-        .selectExpr("vec_id", tables)
-        .select("vec_id", "tb.tbl", "tb.bucket")
-    )
-
-
 def _bucket_tables_sql(bits: int, bit_sql: Callable[[int, int], str]) -> str:
     """``explode`` text of the per-table bucket structs (tbl, bucket),
     bucket = Σ_{p<bits} bit_sql(t, p), folded left to right."""
@@ -508,61 +482,72 @@ def _bucket_tables_sql(bits: int, bit_sql: Callable[[int, int], str]) -> str:
     return f"explode(array({tables})) AS tb"
 
 
-# Full-width plane-sign relation: plane p's
-# literal depends only on (table, p), so the sign bit for (vec, t, p)
-# is the SAME no matter which adaptive k a query resolved to. Both ANN
-# queries (and any future k) therefore share ONE scan that evaluates
-# all L × _LSH_MAX_BITS sign dots; a k-bit bucket is then a pure
-# integer fold over the low k signs — no re-dotting per query. This is
-# the Spark-side mirror of what the oracle already does (compute the
-# 12-bit code, mask low k bits), and it removed the second ~4.5 s
-# bucket build the round-4 bench showed q_ann_multiprobe paying after
-# q_ann_lsh had already scanned the same vectors at a different k.
-@session_cache("ann_signs", shared=True)
-def _signs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Full-width plane-sign relation: plane p's literal depends only on
+# (table, p), so the sign bit for (vec, t, p) is the SAME whatever
+# adaptive k a query resolved to. Every k therefore shares ONE scan
+# that evaluates all L × _LSH_MAX_BITS sign dots, and a k-bit bucket is
+# a pure integer fold over the low k signs — the Spark mirror of the
+# oracle's 12-bit code masked to its low k bits.
+def _signs_frame(emb: DataFrame) -> DataFrame:
     """(vec_id, sg): sg[t*_LSH_MAX_BITS + p] = 1 if plane (t, p) dot
-    embedding > 0 else 0 — localCheckpoint'ed once per (session, sf)."""
+    embedding > 0 else 0, for an (vec_id, embedding) frame.
+
+    The plane matrix rides as a broadcast ONE-ROW DataFrame (L·MAX
+    64-double arrays) instead of L·MAX separate 64-literal expression
+    trees: each plane dot still folds left to right exactly like the
+    oracle's ``dot_sql`` (bit-identical signs), but the Catalyst tree
+    is one ``transform`` instead of thousands of literal nodes, whose
+    Catalyst analysis and codegen would dominate at toy scale."""
+    flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, _LSH_MAX_BITS)]
+    pdf = emb.sparkSession.createDataFrame(
+        [(flat,)], "planes: array<array<double>>"
+    )
+    sg = (
+        "transform(planes, w -> "
+        f"CASE WHEN {dot_spark_sql('embedding', 'w')} > 0 THEN 1 ELSE 0 END) AS sg"
+    )
+    return emb.crossJoin(F.broadcast(pdf)).selectExpr("vec_id", sg)
+
+
+@session_cache("ann_signs")
+def _signs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's :func:`_signs_frame`, localCheckpoint'ed once per
+    (session, sf)."""
     # The L·MAX_BITS sign dots are interpreted higher-order-function
     # work (~6k lambda evals/row) — widen the one-split toy scan so
     # the build uses every core (measured 8.7 s -> 0.8 s at sf0.1;
     # no-op at scale where the scan already has many splits).
     emb = widen_small_scan(table(spark, sf_dir, "embeddings"))
-    flat = [p for t in range(_LSH_TABLES) for p in _lsh_planes(t, _LSH_MAX_BITS)]
-    pdf = spark.createDataFrame([(flat,)], "planes: array<array<double>>")
-    sg = (
-        "transform(planes, w -> "
-        f"CASE WHEN {dot_spark_sql('embedding', 'w')} > 0 THEN 1 ELSE 0 END) AS sg"
-    )
-    return emb.crossJoin(F.broadcast(pdf)).selectExpr("vec_id", sg).localCheckpoint()
+    return _signs_frame(emb).localCheckpoint()
 
 
-def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
-    """(vec_id, tbl, bucket) at the given k, derived from the shared
-    sign cache: bucket = Σ_{p<k} sg[t·MAX+p] << p — bit-identical to
-    :func:`_lsh_bucket_frame` (same planes, same sign test), verified
-    by the unchanged oracle hashes and recall pins."""
+def _buckets_frame(signs: DataFrame, bits: int) -> DataFrame:
+    """(vec_id, tbl, bucket) at k = ``bits`` from a :func:`_signs_frame`
+    relation: bucket = Σ_{p<k} sg[t·MAX+p] << p, bit-identical to the
+    oracle's masked code (:func:`_lsh_buckets_union_sql`)."""
     tables = _bucket_tables_sql(
         bits, lambda t, p: f"sg[{t * _LSH_MAX_BITS + p}] * {1 << p}"
     )
-    return (
-        _signs_for(spark, sf_dir)
-        .selectExpr("vec_id", tables)
-        .select("vec_id", "tb.tbl", "tb.bucket")
-    )
+    return signs.selectExpr("vec_id", tables).select("vec_id", "tb.tbl", "tb.bucket")
+
+
+def _buckets_for(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """The corpus's :func:`_buckets_frame` at k = ``bits``, read from
+    the shared sign cache so no k re-dots the vectors."""
+    return _buckets_frame(_signs_for(spark, sf_dir), bits)
 
 
 #: Materialized bucket relation per k: three queries consume buckets
 #: (q_ann_lsh + q_ann_recall share the same adaptive k; q_ann_multiprobe
-#: uses its finer ladder) and each used to pay its own localCheckpoint
-#: of the identical relation per query (round-9 bench: the two k-sharers
-#: ~1 s each, multiprobe's 5.8 s row was mostly its own build). The two
-#: bench line items below resolve k and read this cache.
+#: uses its finer ladder), so each k is checkpointed once per session
+#: rather than once per consuming query. The two pre-built caches below
+#: resolve k and read this cache.
 @session_cache("ann_buckets")
 def _buckets_cached(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
     return _buckets_for(spark, sf_dir, bits).localCheckpoint()
 
 
-@session_cache("lsh_buckets", shared=True)
+@session_cache("lsh_buckets")
 def lsh_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q_ann_lsh/q_ann_recall bucket relation at the
     corpus-adaptive k (bench line item)."""
@@ -570,7 +555,7 @@ def lsh_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _buckets_cached(spark, sf_dir, k)
 
 
-@session_cache("mp_buckets", shared=True)
+@session_cache("mp_buckets")
 def mp_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_ann_multiprobe's finer-table bucket relation (bench line
     item)."""
@@ -581,7 +566,7 @@ def mp_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # normalized-embedding relation: every ANN query's exact-scoring stage
 # needs û = v/‖v‖ for the whole corpus, and bench runs the ANN family
 # in one session — materialize once.
-@session_cache("unit_norms", shared=True)
+@session_cache("unit_norms")
 def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, ne): unit-normalized embeddings, localCheckpoint'ed
     once per (session, sf)."""
@@ -865,7 +850,7 @@ def _recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |panel|·K-row relation; without the cache each one re-runs the
 # |panel| × corpus brute-force scan, the expensive half of the eval
 # harness at any scale (round 10).
-@session_cache("recall_brute", shared=True)
+@session_cache("recall_brute")
 def brute_topk_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, neighbor_id): the exact cosine top-_RECALL_K corpus
     neighbors of each probe in the shared absolute panel — ONE linear
@@ -1178,7 +1163,7 @@ def _inc_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: production this relation is LOADED from the generation's parquet —
 #: already materialized — so the shared checkpoint is the honest
 #: in-session stand-in, not a cheat.
-@session_cache("inc_indexed1", shared=True)
+@session_cache("inc_indexed1")
 def inc_indexed1_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached checkpoint of the frozen gen-1 posting relation."""
     _cent1, seeds1 = inc_index_build(spark, sf_dir)
@@ -1883,7 +1868,7 @@ def frozen_topk(
     )
 
 
-@session_cache("inc_ann_index", shared=True)
+@session_cache("inc_ann_index")
 def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, seeds) trained on the OLD split only,
     localCheckpoint'ed once per (session, sf): the frozen coarse + fine
@@ -2260,7 +2245,7 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: report and the promote verdict) — materialize once per (session,
 #: sf), |batch| rows. Shared, so its build is its own line item rather
 #: than part of whichever consumer runs first.
-@session_cache("rebuild_churn", shared=True)
+@session_cache("rebuild_churn")
 def rebuild_churn_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rebuild_churn_frame(spark, sf_dir).localCheckpoint()
 
@@ -3263,7 +3248,7 @@ _PQ_SUBDIM = 8     # dims per subspace (8 × 8 = 64)
 _PQ_K = 256        # codewords per subspace → 1 byte/subspace, 8 B/vector
 
 
-@session_cache("pq_codebook", shared=True)
+@session_cache("pq_codebook")
 def _pq_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -4010,17 +3995,6 @@ def _cq_best_sql(cents: str) -> str:
     )
 
 
-def _cq_assign_scored(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """:func:`cq_assign` plus the winning 6-dp cosine itself —
-    (vec_id, ccell, cs). Same inline array_max, zero shuffles; the QC
-    queries (q_cq_census, q_cq_train_curve) read the score column."""
-    cents = cent.agg(F.collect_list(F.struct("c", "cv")).alias("_cents"))
-    best = _cq_best_sql("_cents")
-    return e.crossJoin(F.broadcast(cents)).selectExpr(
-        "vec_id", f"{best}.ccell AS ccell", f"{best}._cs AS cs"
-    )
-
-
 def _cq_train_sql(final_cent: str) -> str:
     """The k-means training chain as oracle CTEs: cqseeds → (assign →
     update) × _CQ_UPDATES, naming the final codebook CTE
@@ -4125,14 +4099,14 @@ def _cq_chain_for(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     )
 
 
-@session_cache("cq_centroids", shared=True)
+@session_cache("cq_centroids")
 def _cq_centroids_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained coarse codebook (c, cv) — ≤ _CQ_K rows, bounded;
     the cached chain's final stage."""
     return _cq_chain_for(spark, sf_dir)[-1]
 
 
-@session_cache("cq_cells", shared=True)
+@session_cache("cq_cells")
 def _cq_cells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus coarse assignment (vec_id, ccell, embedding) — one
     assignment pass against the cached codebook (cq_assign broadcasts
@@ -4160,7 +4134,7 @@ def _cq_cells_as_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@session_cache("cq_subseeds", shared=True)
+@session_cache("cq_subseeds")
 def _cq_subseeds_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fine-stage sub-cell quantizer WITHIN each coarse cell —
     dedup._ivf_seeds (k = max(1, ⌊√(n_cell/_CELL_TARGET)⌋) hash-sampled
@@ -4172,7 +4146,7 @@ def _cq_subseeds_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_seeds(_cq_cells_as_label(spark, sf_dir)).localCheckpoint()
 
 
-@session_cache("cq_subcells", shared=True)
+@session_cache("cq_subcells")
 def _cq_subcells_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus fine assignment (vec_id, label=ccell, cell, embedding) —
     the (coarse cell, sub-cell) posting-list key q_ivf_adc scans."""

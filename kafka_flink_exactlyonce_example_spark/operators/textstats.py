@@ -1425,7 +1425,7 @@ _BIGRAM_CE_CTE = """
 # CE relation: one narrow row per doc, consumed by q_bigram_ppl AND
 # q_ppl_bucket — same localCheckpoint policy as the dedup-side
 # shingle/signature caches
-@session_cache("bigram_ce", shared=True)
+@session_cache("bigram_ce")
 def _bigram_ce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, n_bigrams, ce): per-doc add-1 bigram CE under the
     corpus's own LM, localCheckpoint'ed once per (session, sf). Plan

@@ -53,30 +53,6 @@ _SESSION_CONFS = {
 #: just applied every entry of _SESSION_CONFS.
 _CONFS_ENFORCED: set[str] = set()
 
-# Hash-lane production flag (VERDICT r04 item 8 / r05 item 9). The
-# graded engine keeps md5 lanes because the DuckDB oracle must compute
-# IDENTICAL values cross-engine (DuckDB has no xxhash64); but in a
-# production deployment with no oracle in the loop, the signature
-# build — the hot stage of the whole dedup family — is ~2.2× cheaper
-# on xxhash64 lanes (measured: tools/hash_ab.py). Flip with
-# SPARK_GRAFT_HASH_LANE=xxhash64; default md5. Oracle-checked VALUES
-# (q_near_dup/q_minhash_est signatures) diverge under xxhash64 — only
-# the dedup DECISIONS are contract-stable (exact-Jaccard verification
-# makes the hash family a candidate-generation detail; pinned by
-# tests/test_hash_lane.py which asserts identical verified edge sets
-# and keep sets under both lanes at sf0.01). The lane is part of every
-# session-cache key (operators/overlap.py).
-HASH_LANE_ENV = "SPARK_GRAFT_HASH_LANE"
-
-
-def hash_lane() -> str:
-    lane = os.environ.get(HASH_LANE_ENV, "md5")
-    if lane not in ("md5", "xxhash64"):
-        raise ValueError(
-            f"{HASH_LANE_ENV} must be 'md5' or 'xxhash64', got {lane!r}"
-        )
-    return lane
-
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Set the confs graded queries depend on; safe on a live session."""

@@ -119,21 +119,6 @@ class IdempotentBatchSink(CommitMarkers):
         )
 
 
-def kafka_transactional_writer_options(
-    bootstrap_servers: str, topic: str, checkpoint_dir: str
-) -> dict[str, str]:
-    """writeStream options for the Kafka sink path (documented contract;
-    no broker in this environment). Spark's Kafka sink is at-least-once;
-    end-to-end exactly-once needs either downstream read-side dedup on a
-    record key or the IdempotentBatchSink pattern above feeding a
-    transactional producer inside foreachBatch."""
-    return {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "topic": topic,
-        "checkpointLocation": checkpoint_dir,
-    }
-
-
 class FanOutSink:
     """Exactly-once fan-out to MULTIPLE destinations from one stream.
 

@@ -11,6 +11,8 @@ logical plan, incrementalized by Structured Streaming.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -515,7 +517,7 @@ def cdc_apply(
 
 def run_exactly_once(
     result: DataFrame,
-    sink: IdempotentBatchSink,
+    sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     trigger_once: bool = True,
     output_mode: str = "complete",
@@ -704,7 +706,6 @@ def streaming_ingest_gate(
     sink: IdempotentBatchSink,
     checkpoint_dir: str,
     near_threshold: float = 0.9,
-    trigger_once: bool = True,
     text_index: tuple[DataFrame, DataFrame] | None = None,
     takedowns: DataFrame | None = None,
 ) -> StreamingQuery:
@@ -774,14 +775,7 @@ def streaming_ingest_gate(
             batch_id,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_exactly_once(stream, process, checkpoint_dir, output_mode="append")
 
 
 def ann_serve_results(
@@ -865,7 +859,6 @@ def streaming_ann_serve(
     sink: IdempotentBatchSink,
     checkpoint_dir: str,
     tombstones: DataFrame | None = None,
-    trigger_once: bool = True,
     k: int = 1,
     predicate=None,
     recall_target: float | None = None,
@@ -962,11 +955,4 @@ def streaming_ann_serve(
             batch_id,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_exactly_once(stream, process, checkpoint_dir, output_mode="append")

@@ -1,12 +1,12 @@
-"""The bench cache-instrumentation registry (round 9, VERDICT r08
-item 3): every shared session cache must be buildable through the
-named registry, idempotent (second build ~free — it is the SAME cache
-the queries consume, not a parallel one), and the registry's ordered
-name tuple must name exactly the caches registered as shared."""
+"""The bench cache-instrumentation registry: every pre-built session
+cache must be buildable through the named registry, idempotent (second
+build ~free — it is the SAME cache the queries consume, not a parallel
+one), and built in the order ``BUILD_ORDER`` declares."""
 
 from __future__ import annotations
 
 import logging
+import re
 import time
 
 from tests.conftest import SMOKE_SF
@@ -16,7 +16,7 @@ def test_cache_builders_build_and_are_idempotent(spark, registry_loaded):
     from kafka_flink_exactlyonce_example_spark.operators import session_caches
 
     t = session_caches.build_all(spark, SMOKE_SF)
-    assert set(t) == set(session_caches.CACHE_BUILDERS)
+    assert list(t) == list(session_caches.BUILD_ORDER)
     assert all(v >= 0 for v in t.values())
 
     # second pass hits the session caches: near-zero total
@@ -56,28 +56,30 @@ def test_cache_builders_front_the_real_caches(spark, registry_loaded, caplog):
         assert named["ivf_seeds"](spark, SMOKE_SF) is dedup._ivf_seeds_for(
             spark, SMOKE_SF
         )
+        sig = named["minhash_sigs"](spark, SMOKE_SF)
+        assert sig is dedup._minhash_signatures(spark, SMOKE_SF)
     # every getter above was a hit on what build_all built
     assert not [r for r in caplog.records if r.name == overlap.__name__]
-    # single-consumer caches are deliberately NOT pre-built (round-12
-    # budget audit): their cost belongs to their one consumer's row
+    # 16 fixed-width lowercase-hex string lanes per doc: the band concat
+    # and the string min downstream rely on this shape
+    assert sig.columns == ["doc_id"] + [f"mh{i}" for i in range(16)]
+    row = sig.first()
+    for i in range(16):
+        assert re.fullmatch(r"[0-9a-f]{8}", row[f"mh{i}"]), (i, row[f"mh{i}"])
+    # single-consumer caches are deliberately NOT pre-built: their
+    # cost belongs to their one consumer's row
     assert simsearch.pca_model_for.__name__  # still exists, not listed
     assert "pca_model" not in named
     assert "jaccard_pairs" not in named
     assert "semdedup_scored" not in named
 
 
-def test_build_order_names_every_shared_cache(registry_loaded):
-    """A cache registered with ``shared=True`` and missing from the
-    ordered tuple would silently drop out of the bench's line items; a
-    single-consumer cache in the tuple would move its one consumer's
-    cost into the bench's infrastructure section."""
+def test_build_order_is_the_builders_order(registry_loaded):
+    """``BUILD_ORDER`` names each pre-built cache once, and
+    ``CACHE_BUILDERS`` builds them in that order, so each line item
+    reads its own marginal build cost."""
     from kafka_flink_exactlyonce_example_spark.operators import session_caches
-    from kafka_flink_exactlyonce_example_spark.operators.overlap import (
-        SESSION_CACHES,
-    )
 
-    shared = {name for name, get in SESSION_CACHES.items() if get.shared}
     order = session_caches.BUILD_ORDER
     assert len(order) == len(set(order))
-    assert set(order) == shared
     assert list(session_caches.CACHE_BUILDERS) == list(order)

@@ -27,7 +27,7 @@ One run of the tool:
 
 The baseline, tests/plan_baseline.json, holds one entry per key (the
 returned plan plus that key's side executions) and one ``cache:<name>``
-entry per shared cache. An execution whose job group is neither a key
+entry per pre-built cache. An execution whose job group is neither a key
 nor a cache (for example, a thread that did not inherit its caller's
 group) fails the run, naming its execution id.
 

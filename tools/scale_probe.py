@@ -265,7 +265,8 @@ def main() -> None:
     # vectors (md5-derived components — uniform over buckets) isolate
     # the index behavior from the fixture's cluster structure. Healthy
     # = cand/vec roughly flat (it saturates near target·L once the
-    # ladder engages); a FIXED K would grow it ∝ mult.
+    # ladder engages); a FIXED K would grow it ∝ mult. The buckets come
+    # from the same sign and bucket frames the lsh_buckets cache builds.
     from kafka_flink_exactlyonce_example_spark.operators import simsearch as sim
 
     base_n_emb = table(spark, sf_dir, "embeddings").count()
@@ -301,7 +302,7 @@ def main() -> None:
         )
         k = sim._adaptive_bits(n, sim._LSH_BITS, sim._LSH_TARGET_BUCKET)
         t0 = time.perf_counter()
-        b = sim._lsh_bucket_frame(emb, k).localCheckpoint()
+        b = sim._buckets_frame(sim._signs_frame(emb), k).localCheckpoint()
         x = b.select("vec_id", "tbl", "bucket")
         y = sim._capped_index(b).select(
             F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"
