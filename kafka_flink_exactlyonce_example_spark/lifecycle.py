@@ -59,6 +59,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _assign_to_seeds,
     load_text_index,
@@ -675,16 +676,11 @@ def corpus_generation_roll(
 # q_generation_roll — the roll's bookkeeping, driver-graded
 # --------------------------------------------------------------------------
 
-from kafka_flink_exactlyonce_example_spark.operators.dedup import (  # noqa: E402
-    _md5_mod_col,
-)
 from kafka_flink_exactlyonce_example_spark.operators.overlap import (  # noqa: E402
     run_overlapped,
 )
 from kafka_flink_exactlyonce_example_spark.operators.ingest import (  # noqa: E402
-    _DEL_TAG_SQL,
     _GATE_POST_CTES,
-    _is_del_col,
     gate_flags_for,
 )
 from kafka_flink_exactlyonce_example_spark.operators.simsearch import (  # noqa: E402
@@ -702,10 +698,6 @@ from kafka_flink_exactlyonce_example_spark.sources import table  # noqa: E402
 #: never desynchronize from q_gen_promote's.
 _ROLL_BARS = _PROMOTE_THRESHOLDS
 
-#: ONE definition of the 'del:' tag SQL twin (round 15): the roll's
-#: oracle formats the shared ingest fragment instead of re-inlining it.
-_DEL_VEC_SQL = _DEL_TAG_SQL
-
 #: The roll-state CTEs shared by q_generation_roll's oracle and
 #: q_derived_catalog2's (round 16): the window's admitted set, the
 #: takedown wave, both digest views, the admitted-vector slice, the
@@ -717,11 +709,11 @@ _ROLL_STATE_CTES = f"""
         SELECT doc_id FROM verdict_s WHERE admitted = 1
     ), takedown AS (
         SELECT doc_id FROM dsplit
-        WHERE is_new = 0 AND {_DEL_VEC_SQL.format(col='doc_id')}
+        WHERE is_new = 0 AND {hashing.is_del_sql('doc_id')}
     ), dig2 AS (
         SELECT DISTINCT h FROM dsplit d
         WHERE (d.is_new = 0
-               AND NOT {_DEL_VEC_SQL.format(col='d.doc_id')})
+               AND NOT {hashing.is_del_sql('d.doc_id')})
            OR (d.is_new = 1
                AND d.doc_id IN (SELECT doc_id FROM admitted))
     ), adm_vec AS (
@@ -733,7 +725,7 @@ _ROLL_STATE_CTES = f"""
         WHERE v.admitted = 1 AND v.cell IS NOT NULL
     ), surv AS (
         SELECT vec_id, label, embedding FROM esplit
-        WHERE is_new = 0 AND NOT {_DEL_VEC_SQL.format(col='vec_id')}
+        WHERE is_new = 0 AND NOT {hashing.is_del_sql('vec_id')}
     ), x2 AS (
         -- generation-2 posting members at label grain (k=1 collapse):
         -- survivors at their lake label ∪ admits at their routed cell
@@ -784,7 +776,7 @@ _ROLL_ORACLE = (
             FROM eassign a
             LEFT JOIN esplit x
               ON x.is_new = 0 AND x.label = a.cell
-             AND NOT {_DEL_VEC_SQL.format(col='x.vec_id')}
+             AND NOT {hashing.is_del_sql('x.vec_id')}
         ) WHERE rn = 1
     ), nn2 AS (
         -- what the rolled generation answers (self excluded: an
@@ -837,17 +829,17 @@ _ROLL_ORACLE = (
 @query("q_generation_roll", oracle=_ROLL_ORACLE)
 def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generation roll's BOOKKEEPING, driver-graded in one row
-    (round 14, VERDICT r13 item 3 — the orchestrator
-    :func:`corpus_generation_roll` is runtime-tested end-to-end in
-    tests/test_lifecycle.py with both verdict branches driving the
-    serving pointer; this row grades the same window's arithmetic on
-    the graded fixtures against an independent DuckDB derivation):
+    (the orchestrator :func:`corpus_generation_roll` is runtime-tested
+    end-to-end in tests/test_lifecycle.py with both verdict branches
+    driving the serving pointer; this row grades the same window's
+    arithmetic on the graded fixtures against an independent DuckDB
+    derivation):
     the standing 'inc:' batch is gated against gen-1 SURVIVORS of the
-    'del:' wave — round 15, VERDICT r14 item 1: the q_ingest_gate
-    chain with the SAME window's takedowns threaded through all three
-    checks (digest anti-join at doc grain, surviving-endpoint edges,
-    tombstone-filtered posting scan — the verdict_s oracle CTE /
-    ``_gate_frame(survivors_only=True)``, the census twin of
+    'del:' wave — the q_ingest_gate chain with the SAME window's
+    takedowns threaded through all three checks (digest anti-join at
+    doc grain, surviving-endpoint edges, tombstone-filtered posting
+    scan — the verdict_s oracle CTE /
+    ``gate_flags_for(survivors_only=True)``, the census twin of
     ``ingest_gate_decisions(takedowns=...)``), so a fresh doc
     duplicating a same-window-deleted doc is admitted, never
     ghost-rejected — the 'del:' wave (~20% of the OLD corpus) is
@@ -902,7 +894,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = tagged.filter(F.col("is_new")).select(
         "vec_id", "label", "embedding"
     )
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     admitted = flags.filter(F.col("admitted") == 1).select("doc_id")
 
     adm_vecs = new.join(
@@ -922,7 +914,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_old")
     )
     delcells = (
-        old.select("label", _is_del_col().cast("int").alias("is_del"))
+        old.select("label", hashing.is_del("vec_id").cast("int").alias("is_del"))
         .groupBy(F.col("label").alias("cell"))
         .agg(
             F.count(F.lit(1)).alias("n_before"),
@@ -999,10 +991,8 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     dsplit = d.select(
         "doc_id",
-        (_md5_mod_col("inc:", "doc_id", 10) == 0)
-        .cast("int")
-        .alias("is_new"),
-        _is_del_doc().cast("int").alias("is_del"),
+        hashing.is_new("doc_id").cast("int").alias("is_new"),
+        hashing.is_del("doc_id").cast("int").alias("is_del"),
         F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
     )
     batch_agg = flags.agg(
@@ -1081,14 +1071,6 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _is_del_doc():
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import (
-        _del_tag_col,
-    )
-
-    return _del_tag_col("doc_id")
-
-
 # --------------------------------------------------------------------------
 # q_derived_catalog — the generation-catalog derivation, driver-graded
 # --------------------------------------------------------------------------
@@ -1096,9 +1078,7 @@ def _is_del_doc():
 _DC_ORACLE = f"""
     WITH esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), members AS (
@@ -1337,16 +1317,14 @@ def _dc_rows(
 _RDO_ORACLE = f"""
     WITH esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), old AS (
         SELECT vec_id, label, embedding FROM esplit WHERE is_new = 0
     ), surv AS (
         SELECT vec_id, label, embedding FROM old
-        WHERE NOT {_DEL_TAG_SQL.format(col='vec_id')}
+        WHERE NOT {hashing.is_del_sql('vec_id')}
     ), cent1 AS (
         SELECT label, list(m ORDER BY i) AS centroid
         FROM (
@@ -1422,7 +1400,7 @@ _RDO_ORACLE = f"""
                      <= {{B1}} THEN 1 ELSE 0 END AS promote_lenient
     FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n_old FROM old) o
     CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n_takedowns
-                FROM old WHERE {_DEL_TAG_SQL.format(col='vec_id')}) t
+                FROM old WHERE {hashing.is_del_sql('vec_id')}) t
     CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n_survivors FROM surv) s
     CROSS JOIN churn c
 """
@@ -1476,12 +1454,12 @@ def q_roll_delete_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = _inc_tagged(spark, sf_dir).filter(~F.col("is_new")).select(
         "vec_id", "label", "embedding"
     )
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     indexed1 = inc_indexed1_for(spark, sf_dir)  # shared session cache
     surv = tombstone_filter(old, tomb).localCheckpoint()
 
     delcells = (
-        old.select("label", _is_del_col().cast("int").alias("is_del"))
+        old.select("label", hashing.is_del("vec_id").cast("int").alias("is_del"))
         .groupBy(F.col("label").alias("cell"))
         .agg(
             F.count(F.lit(1)).alias("n_before"),
@@ -1622,7 +1600,7 @@ def _dc2_frames(spark: SparkSession, sf_dir: str):
     new = tagged.filter(F.col("is_new")).select(
         "vec_id", "label", "embedding"
     )
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     adm_vecs = new.join(
         flags.filter(F.col("admitted") == 1)
         .select(F.col("doc_id").alias("vec_id")),

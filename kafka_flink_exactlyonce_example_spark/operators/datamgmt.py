@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
 from kafka_flink_exactlyonce_example_spark.registry import query
@@ -726,7 +727,7 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_table_checksum",
-    oracle="""
+    oracle=f"""
     WITH rows_ser AS (
         SELECT concat_ws('|',
                  CAST(l_orderkey AS VARCHAR), CAST(l_partkey AS VARCHAR),
@@ -738,8 +739,8 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
     )
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CAST(CAST(concat('0x', substring(md5(ser), 1, 12))
-                              AS UBIGINT) % 1000000007 AS BIGINT)) AS BIGINT)
+           CAST(sum(CAST({hashing.md5_hex_sql('ser', 1, 12)}
+                         % 1000000007 AS BIGINT)) AS BIGINT)
              AS checksum
     FROM rows_ser
     """,
@@ -772,6 +773,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linestatus"),
         F.date_format("l_shipdate", "yyyy-MM-dd"),
     )
+    # 12 hex digits (a 48-bit hash), not hashing.md5_u32's 8
     h = (
         F.conv(F.substring(F.md5(F.col("ser").cast("binary")), 1, 12), 16, 10).cast(
             "long"
@@ -953,24 +955,22 @@ def q_skew_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_bloom_prefilter",
-    oracle="""
+    oracle=f"""
     WITH build AS (
         SELECT DISTINCT c_custkey AS k FROM customer
         WHERE c_mktsegment = 'BUILDING'
     ), ks AS (SELECT unnest([1, 2, 3]) AS i),
     bits AS (
         SELECT DISTINCT
-               CAST(CAST(concat('0x', substring(
-                        md5(concat(CAST(i AS VARCHAR), ':',
-                                   CAST(k AS VARCHAR))), 1, 8))
-                    AS UBIGINT) % 4096 AS BIGINT) AS p
+               CAST({hashing.md5_u32_sql(
+                   "concat(CAST(i AS VARCHAR), ':', CAST(k AS VARCHAR))")}
+                    % 4096 AS BIGINT) AS p
         FROM build CROSS JOIN ks
     ), probe_pos AS (
         SELECT o_orderkey, o_custkey,
-               CAST(CAST(concat('0x', substring(
-                        md5(concat(CAST(i AS VARCHAR), ':',
-                                   CAST(o_custkey AS VARCHAR))), 1, 8))
-                    AS UBIGINT) % 4096 AS BIGINT) AS p
+               CAST({hashing.md5_u32_sql(
+                   "concat(CAST(i AS VARCHAR), ':', CAST(o_custkey AS VARCHAR))")}
+                    % 4096 AS BIGINT) AS p
         FROM orders CROSS JOIN ks
     ), hits AS (
         SELECT o_orderkey, o_custkey,
@@ -1021,21 +1021,9 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     ks = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("i")
 
-    def pos(i_col, key_col):
+    def pos(i: str, key: str):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            i_col.cast("string"), F.lit(":"), key_col.cast("string")
-                        ).cast("binary")
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hashing.md5_u32(f"concat(CAST({i} AS STRING), ':', CAST({key} AS STRING))")
             % 4096
         )
 
@@ -1046,13 +1034,13 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bits = (
         build.select("k", ks)
-        .select(pos(F.col("i"), F.col("k")).alias("p"))
+        .select(pos("i", "k").alias("p"))
         .distinct()
     )
     probe_pos = orders.select("o_orderkey", "o_custkey", ks).select(
         "o_orderkey",
         "o_custkey",
-        pos(F.col("i"), F.col("o_custkey")).alias("p"),
+        pos("i", "o_custkey").alias("p"),
     )
     hits = (
         probe_pos.join(F.broadcast(bits), "p")
@@ -1286,11 +1274,10 @@ def q_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_compaction_plan",
-    oracle="""
+    oracle=f"""
     WITH sharded AS (
         SELECT source, lang, n_chars,
-               CAST(CAST(concat('0x', substring(md5(text), 1, 8)) AS UBIGINT)
-                    % 16 AS BIGINT) AS shard
+               CAST({hashing.md5_u32_sql('text')} % 16 AS BIGINT) AS shard
         FROM documents
     )
     SELECT source, lang,
@@ -1319,11 +1306,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived shard is the same deterministic expression
     q_shard_assign writes with, so the plan audits the REAL layout."""
     d = table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 16
-    )
+    shard = hashing.md5_u32("text") % 16
     return (
         d.select("source", "lang", "n_chars", shard.alias("shard"))
         .groupBy("source", "lang")

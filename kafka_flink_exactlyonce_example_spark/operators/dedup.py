@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
     cosine_spark_sql,
@@ -118,50 +119,12 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _md5_mod_col(prefix: str, name: str, mod: int):
-    """The deterministic md5 split expression every engine-side
-    incremental/tombstone tag derives from — defined ONCE (round-13
-    self-review: four byte-equal inline copies meant a tweak to one
-    would silently desynchronize the others from their oracle twins,
-    which all inline the same CAST(concat('0x', substring(md5(prefix
-    || id), 1, 8)) ...) % mod SQL). Returns the LongType remainder;
-    callers compare against their tag value."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit(prefix), F.col(name).cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mod
-    )
-
-
-def _del_tag_col(name: str):
-    """The deterministic md5 'del:' takedown tag (~20% of ids, the
-    'inc:' convention at modulus 5) over an arbitrary id column —
-    shared by the embedding-side delete path (ingest._is_del_col over
-    vec_id: q_index_compact / q_ann_tombstone) and the text-side
-    keeper-churn report (q_dedup_tombstone over doc_id). SQL twin
-    inlined in each consumer's oracle."""
-    return _md5_mod_col("del:", name, 5) == 0
-
-
 @query(
     "q_dedup_tombstone",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
         SELECT md5(lower(trim(text))) AS text_hash, doc_id,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('del:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 5 AS BIGINT) = 0
+               CASE WHEN {hashing.is_del_sql('doc_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM documents
     ), g AS (
@@ -211,7 +174,7 @@ def q_dedup_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "text_hash"
             ),
             "doc_id",
-            _del_tag_col("doc_id").cast("int").alias("is_del"),
+            hashing.is_del("doc_id").cast("int").alias("is_del"),
         )
         .groupBy("text_hash")
         .agg(
@@ -275,13 +238,11 @@ def repoint_manifest(manifest: DataFrame, report: DataFrame) -> DataFrame:
 
 @query(
     "q_manifest_repoint",
-    oracle="""
+    oracle=f"""
     SELECT md5(lower(trim(text))) AS text_hash,
            CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id
     FROM documents
-    WHERE NOT CAST(CAST(concat('0x', substring(
-                   md5('del:' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS UBIGINT) % 5 AS BIGINT) = 0
+    WHERE NOT {hashing.is_del_sql('doc_id')}
     GROUP BY md5(lower(trim(text)))
     """,
 )
@@ -1592,14 +1553,6 @@ _TEXT_GEN_PLANT = 8
 _TEXT_GEN_PLANT_BASE = 1_000_000_000
 
 
-def _text_gen_g():
-    """Generation tag g ∈ [0, 10): the SAME 'inc:' md5 split the
-    whole incremental family keys on (q_ingest_gate's is_new is
-    g == 0), extended to a three-way split — g == 0 the admitted
-    batch, g == 1 the probe batch, g ≥ 2 the frozen corpus."""
-    return _md5_mod_col("inc:", "doc_id", 10)
-
-
 def _text_gen_verify(cand: DataFrame, qsets: DataFrame, isets: DataFrame) -> DataFrame:
     """Distinct probe doc_ids whose candidate verifies at same-lang
     exact word-set Jaccard ≥ 0.8 — the near_text_flags verifier over
@@ -1625,7 +1578,7 @@ def _text_gen_verify(cand: DataFrame, qsets: DataFrame, isets: DataFrame) -> Dat
 #: (not in ``documents``) get their own O(1)-row signature build.
 def _tg_base(spark: SparkSession, sf_dir: str):
     d = table(spark, sf_dir, "documents")
-    base = d.select("doc_id", "lang", "text", _text_gen_g().alias("g"))
+    base = d.select("doc_id", "lang", "text", hashing.inc_batch("doc_id").alias("g"))
     bands_all = _bands_rel(_minhash_signatures(spark, sf_dir))
     ws = _word_set_col()
     sets_all = d.select(
@@ -1767,9 +1720,7 @@ _TEXT_GEN_SHINGLE_SQL = """
     oracle=f"""
     WITH base AS (
         SELECT doc_id, lang, text,
-               CAST(CAST(concat('0x', substring(
-                         md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 10 AS BIGINT) AS g
+               {hashing.inc_batch_sql('doc_id')} AS g
         FROM documents
     ), arr AS (
         SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -1989,20 +1940,13 @@ def _tt_plant(
     return planted.localCheckpoint()
 
 
-_TT_DEL_SQL = """CAST(CAST(concat('0x', substring(
-                         md5('del:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 5 AS BIGINT) = 0"""
-
-
 @query(
     "q_text_tombstone",
     oracle=f"""
     WITH base AS (
         SELECT doc_id, lang, text,
-               CAST(CAST(concat('0x', substring(
-                         md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 10 AS BIGINT) AS g,
-               CASE WHEN {_TT_DEL_SQL} THEN 1 ELSE 0 END AS is_del
+               {hashing.inc_batch_sql('doc_id')} AS g,
+               CASE WHEN {hashing.is_del_sql('doc_id')} THEN 1 ELSE 0 END AS is_del
         FROM documents
     ), arr AS (
         SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -2103,12 +2047,11 @@ _TT_DEL_SQL = """CAST(CAST(concat('0x', substring(
     """,
 )
 def q_text_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TEXT index's delete path, driver-graded end-to-end (round
-    14, VERDICT r13 item 1 — the text twin of q_ann_tombstone: round
-    13 made a deleted VECTOR unservable between rebuilds; this row
-    makes a deleted DOCUMENT unable to block fresh admissions): the
-    'del:' takedown wave (~20% of ids, :func:`_del_tag_col` — the same
-    wave q_dedup_tombstone reports keeper churn for) is removed from
+    """The TEXT index's delete path, graded end-to-end (the text twin
+    of q_ann_tombstone: that row makes a deleted VECTOR unservable
+    between rebuilds; this one makes a deleted DOCUMENT unable to block
+    fresh admissions): the 'del:' takedown wave (``hashing.is_del``,
+    the same wave q_dedup_tombstone reports keeper churn for) is removed from
     the frozen text index ('inc:' g≥2 corpus), and every probe doc is
     near-text-checked against BOTH formulations — ``f_all`` the
     pre-takedown index (the bug the delete path fixes: a fresh doc
@@ -2145,15 +2088,15 @@ def q_text_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, bands_all, sets_all = _tg_base(spark, sf_dir)
     corpus_ids = base.filter(F.col("g") >= 2).select("doc_id")
     surv_ids = base.filter(
-        (F.col("g") >= 2) & ~_del_tag_col("doc_id")
+        (F.col("g") >= 2) & ~hashing.is_del("doc_id")
     ).select("doc_id")
     batch_ids = base.filter(F.col("g") == 0).select("doc_id")
 
     p_del = _tt_plant(
-        base, (F.col("g") >= 2) & _del_tag_col("doc_id"), _TT_DEL_PLANT_BASE
+        base, (F.col("g") >= 2) & hashing.is_del("doc_id"), _TT_DEL_PLANT_BASE
     )
     p_surv = _tt_plant(
-        base, (F.col("g") >= 2) & ~_del_tag_col("doc_id"), _TT_SURV_PLANT_BASE
+        base, (F.col("g") >= 2) & ~hashing.is_del("doc_id"), _TT_SURV_PLANT_BASE
     )
     plants = p_del.unionByName(p_surv)
     bands_p = _bands_rel(_signatures_frame(_shingles_frame(plants)))
@@ -2264,7 +2207,7 @@ _SIMHASH_SIG_SQL = " + ".join(
 def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) from the oracle's own vote and signature SQL."""
     words = _doc_words(spark, sf_dir).withColumn(
-        "h", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
+        "h", hashing.md5_u32("word")
     )
     return (
         words.groupBy("doc_id")
@@ -2646,15 +2589,13 @@ def q_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_incremental_dedup",
     oracle=_MINHASH_CTES.replace("WITH", "WITH RECURSIVE", 1)
     + _LSH_SCORED_CTES
-    + """
+    + f"""
     , edges AS (
         SELECT doc_a, doc_b FROM scored
         WHERE n_common / (n_sum - n_common) >= 0.8
     ), split AS (
         SELECT doc_id, lang,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('doc_id')}
                     THEN 1 ELSE 0 END AS is_new,
                md5(lower(trim(text))) AS h
         FROM documents
@@ -2706,11 +2647,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus. Everything here is semi-joins and keyed rollups;
     nothing rescans corpus text."""
     d = table(spark, sf_dir, "documents")
-    is_new = _md5_mod_col("inc:", "doc_id", 10) == 0
     split = d.select(
         "doc_id",
         "lang",
-        is_new.cast("int").alias("is_new"),
+        hashing.is_new("doc_id").cast("int").alias("is_new"),
         F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
     )
     new = split.filter(F.col("is_new") == 1)
@@ -2848,9 +2788,8 @@ _WIN_W = 4   # winnowing window (hashes per window); E[density] = 2/(w+1)
         SELECT doc_id,
                list_transform(
                    range(1, greatest(len(text) - {_WIN_K} + 1, 1) + 1),
-                   i -> CAST(CAST(concat('0x', substring(
-                            md5(substring(text, i, {_WIN_K})), 1, 8))
-                        AS UBIGINT) AS BIGINT)) AS h
+                   i -> CAST({hashing.md5_u32_sql(f'substring(text, i, {_WIN_K})')}
+                        AS BIGINT)) AS h
         FROM documents
     ), wins AS (
         SELECT doc_id, h,
@@ -2930,10 +2869,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = pos.select(
         "doc_id",
         "i",
-        F.expr(
-            f"cast(conv(substring(md5(cast(substring(text, i, {_WIN_K})"
-            f" as binary)), 1, 8), 16, 10) as bigint)"
-        ).alias("hv"),
+        hashing.md5_u32(f"substring(text, i, {_WIN_K})").alias("hv"),
     )
     cntw = Window.partitionBy("doc_id")
     slidew = (
@@ -3212,14 +3148,13 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_shard_dup_locality",
     oracle=_MINHASH_CTES
     + _LSH_SCORED_CTES
-    + """
+    + f"""
     , edges AS (
         SELECT doc_a, doc_b FROM scored
         WHERE n_common / (n_sum - n_common) >= 0.8
     ), shards AS (
         SELECT doc_id,
-               CAST(CAST(concat('0x', substring(md5(text), 1, 8)) AS UBIGINT)
-                    % 16 AS BIGINT) AS shard,
+               CAST({hashing.md5_u32_sql('text')} % 16 AS BIGINT) AS shard,
                md5(lower(trim(text))) AS h
         FROM documents
     ), exact_groups AS (
@@ -3258,11 +3193,7 @@ def q_shard_dup_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Composes the session-cached LSH-verified edges with the
     q_shard_assign hash; two keyed joins, all counts bounded."""
     d = table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 16
-    )
+    shard = hashing.md5_u32("text") % 16
     shards = d.select(
         "doc_id",
         shard.alias("shard"),
@@ -3662,7 +3593,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_leakage_split",
     oracle=_LSH_CC_PREFIX
-    + """
+    + f"""
     , labels AS (
         SELECT d.doc_id,
                CAST(LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS BIGINT)
@@ -3671,12 +3602,10 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY d.doc_id
     ), flagged AS (
         SELECT doc_id, group_id,
-               CAST(CAST(concat('0x', substring(
-                        md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 10 = 0 AS INT) AS eval_naive,
-               CAST(CAST(concat('0x', substring(
-                        md5('split:' || CAST(group_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 10 = 0 AS INT) AS eval_grouped
+               CAST({hashing.tag_u32_sql('split:', 'doc_id')} % 10 = 0 AS INT)
+                   AS eval_naive,
+               CAST({hashing.tag_u32_sql('split:', 'group_id')} % 10 = 0 AS INT)
+                   AS eval_grouped
     FROM labels
     ), per_policy AS (
         SELECT 'naive_by_doc' AS policy, group_id,
@@ -3722,20 +3651,12 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines, runs, and cluster widths — the same determinism
     discipline as q_weighted_sample / q_train_split."""
     labels = q_dup_groups(spark, sf_dir)
-    u = lambda c: F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), c.cast("string")).cast("binary")),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    flagged = labels.select(
+    held_out = lambda c: f"CAST({hashing.tag_u32_spark_sql('split:', c)} % 10 = 0 AS INT)"
+    flagged = labels.selectExpr(
         "doc_id",
         "group_id",
-        (u(F.col("doc_id")) % 10 == 0).cast("int").alias("eval_naive"),
-        (u(F.col("group_id")) % 10 == 0).cast("int").alias("eval_grouped"),
+        f"{held_out('doc_id')} AS eval_naive",
+        f"{held_out('group_id')} AS eval_grouped",
     )
 
     def policy(name: str, flag: str) -> DataFrame:

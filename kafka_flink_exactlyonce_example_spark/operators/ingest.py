@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
     cosine_spark_sql,
@@ -54,9 +55,7 @@ from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _assign_to_seeds,
     _tt_plant,
     _bands_rel,
-    _del_tag_col,
     _lsh_verified_edges,
-    _md5_mod_col,
     _shingles_frame,
     _signatures_frame,
     _tg_base,
@@ -79,21 +78,6 @@ from kafka_flink_exactlyonce_example_spark.operators.overlap import (
 from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
 
-#: The deterministic md5 'del:' tombstone split (~20% of ids) shared by
-#: q_index_compact (the shrink trigger) and q_ann_tombstone (the
-#: tombstone-aware search it prices) — one definition
-#: (:func:`dedup._del_tag_col`) also serving the text-side keeper-churn
-#: report (q_dedup_tombstone). SQL twin inlined in each oracle.
-
-
-def _is_del_col():
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import (
-        _del_tag_col,
-    )
-
-    return _del_tag_col("vec_id")
-
-
 #: Admission threshold on the 6-dp-rounded frozen-index cosine. 0.35
 #: sits just above this synthetic corpus's intra-cluster sim peak
 #: (~0.47 max, q_embed_dup's docstring) so both outcomes occur; a real
@@ -113,9 +97,7 @@ _GATE_CTES = (
         WHERE n_common / (n_sum - n_common) >= 0.8
     ), dsplit AS (
         SELECT doc_id, lang,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('doc_id')}
                     THEN 1 ELSE 0 END AS is_new,
                md5(lower(trim(text))) AS h
         FROM documents
@@ -132,9 +114,7 @@ _GATE_CTES = (
         WHERE n.is_new = 1
     ), esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), ecent AS (
@@ -200,20 +180,14 @@ _GATE_CTES = (
 )
 
 
-#: The 'del:' takedown tag's SQL twin, formatable over any id column —
-#: ONE definition (round 15; lifecycle's _DEL_VEC_SQL now aliases it)
-#: mirroring :func:`dedup._del_tag_col`.
-_DEL_TAG_SQL = """CAST(CAST(concat('0x', substring(
-                         md5('del:' || CAST({col} AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 5 AS BIGINT) = 0"""
-
-#: _GATE_CTES + the SURVIVOR-gated verdict (round 15, VERDICT r14
-#: item 1): the same three checks decided against the corpus MINUS the
-#: graded 'del:' wave — digest anti-join at DOC grain before the
-#: distinct-h view (a digest shared by a deleted and a surviving doc
-#: still rejects), edges restricted to surviving corpus endpoints, the
-#: posting scan tombstone-filtered. ``verdict_s`` is the oracle twin
-#: of ``_gate_frame(survivors_only=True)`` /
+#: _GATE_CTES + the SURVIVOR-gated verdict: the same three checks
+#: decided against the corpus MINUS the graded 'del:' wave, so a doc
+#: is never rejected because of a doc that was taken down — digest
+#: anti-join at DOC grain before the distinct-h view (a digest shared
+#: by a deleted and a surviving doc still rejects), edges restricted
+#: to surviving corpus endpoints, the posting scan tombstone-filtered.
+#: ``verdict_s`` is the oracle twin of
+#: ``gate_flags_for(survivors_only=True)`` /
 #: ``ingest_gate_decisions(takedowns=...)``; q_generation_roll's
 #: census and q_gate_post_takedown grade against it.
 _GATE_POST_CTES = (
@@ -221,7 +195,7 @@ _GATE_POST_CTES = (
     + f"""
     , surv_doc AS (
         SELECT doc_id FROM dsplit
-        WHERE is_new = 0 AND NOT {_DEL_TAG_SQL.format(col='doc_id')}
+        WHERE is_new = 0 AND NOT {hashing.is_del_sql('doc_id')}
     ), surv_h AS (
         SELECT DISTINCT d.h FROM dsplit d
         JOIN surv_doc s ON s.doc_id = d.doc_id
@@ -243,7 +217,7 @@ _GATE_POST_CTES = (
             FROM eassign a
             LEFT JOIN esplit x
               ON x.is_new = 0 AND x.label = a.cell
-             AND NOT {_DEL_TAG_SQL.format(col='x.vec_id')}
+             AND NOT {hashing.is_del_sql('x.vec_id')}
         ) WHERE rn = 1
     ), verdict_s AS (
         SELECT d.doc_id,
@@ -301,7 +275,7 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``cell`` is shared.
     """
     d = table(spark, sf_dir, "documents")
-    is_new = _md5_mod_col("inc:", "doc_id", 10) == 0
+    is_new = hashing.is_new("doc_id")
     dsplit = d.select(
         "doc_id",
         is_new.cast("int").alias("is_new"),
@@ -309,7 +283,7 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     new_docs = dsplit.filter(F.col("is_new") == 1).select("doc_id", "h")
     corpus = dsplit.filter(F.col("is_new") == 0)
-    surv = (~_del_tag_col("doc_id")).cast("int")
+    surv = (~hashing.is_del("doc_id")).cast("int")
     h_both = corpus.select("h", surv.alias("_sv")).groupBy("h").agg(
         F.max("_sv").alias("_hsv")
     )
@@ -348,7 +322,7 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
             "neighbor_id",
             cosine("embedding", "xe").alias("sim_raw"),
-            _del_tag_col("neighbor_id").cast("int").alias("_tb"),
+            hashing.is_del("neighbor_id").cast("int").alias("_tb"),
         )
     )
     w1 = Window.partitionBy("vec_id").orderBy(
@@ -413,9 +387,9 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gate_variant(dual: DataFrame, survivors_only: bool) -> DataFrame:
-    """Project one verdict variant out of the dual frame — EXACTLY the
-    historical _gate_frame column set (doc_id, f_exact, f_near_text,
-    f_near_emb, cell, neighbor_id, sim, admitted)."""
+    """Project one verdict variant out of the dual frame: doc_id,
+    f_exact, f_near_text, f_near_emb, cell, neighbor_id, sim,
+    admitted — the oracle's ``verdict`` / ``verdict_s`` columns."""
     s = "_v2" if survivors_only else "_v1"
     nb, sim = ("nb2", "sim2") if survivors_only else ("nb1", "sim1")
     return dual.select(
@@ -428,25 +402,6 @@ def _gate_variant(dual: DataFrame, survivors_only: bool) -> DataFrame:
         F.col(sim).alias("sim"),
         F.col(f"admitted{s}").alias("admitted"),
     )
-
-
-def _gate_frame(
-    spark: SparkSession, sf_dir: str, survivors_only: bool = False
-) -> DataFrame:
-    """Per-new-doc admission verdict WITH the assigned routing cell —
-    the Spark twin of the oracle's ``verdict`` CTE. q_ingest_gate
-    drops the cell; q_index_refresh groups admitted docs by it.
-
-    ``survivors_only`` (round 15, VERDICT r14 item 1): all three
-    checks run against the corpus MINUS the graded 'del:' takedown
-    wave — the fixture twin of
-    :func:`streaming.jobs.ingest_gate_decisions`'s ``takedowns``
-    thread — the admission semantics q_generation_roll's census
-    grades. Since round 16 both variants are projections of ONE dual
-    chain (:func:`_gate_frame_dual` — one corpus pass, one scored
-    scan), so the lazy form here and the session-cached checkpoints
-    can never desynchronize."""
-    return _gate_variant(_gate_frame_dual(spark, sf_dir), survivors_only)
 
 
 #: The MATERIALIZED DUAL gate verdict (one build serves both variants;
@@ -616,13 +571,9 @@ def index_refresh_report(
     oracle=f"""
     WITH esplit AS (
         SELECT vec_id, label,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('del:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 5 AS BIGINT) = 0
+               CASE WHEN {hashing.is_del_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM embeddings
     ), oldcells AS (
@@ -687,7 +638,7 @@ def q_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = (
         _inc_tagged(spark, sf_dir)
         .filter(~F.col("is_new"))
-        .select("vec_id", "label", _is_del_col().cast("int").alias("is_del"))
+        .select("vec_id", "label", hashing.is_del("vec_id").cast("int").alias("is_del"))
     )
     cells = old.groupBy(F.col("label").alias("cell")).agg(
         F.count(F.lit(1)).alias("n_before"),
@@ -729,13 +680,9 @@ def index_compact_report(
     oracle=f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('del:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 5 AS BIGINT) = 0
+               CASE WHEN {hashing.is_del_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM embeddings
     ), cent AS (
@@ -778,10 +725,10 @@ def index_compact_report(
     """,
 )
 def q_ann_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tombstone-aware ingest-time ANN lookup (round 13, VERDICT r12
-    item 1a) — q_incremental_ann's exact machinery with the delete
-    path EXECUTED: the deterministic 'del:' takedown wave
-    (:func:`_is_del_col`, ~20% of the frozen corpus — the same wave
+    """Tombstone-aware ingest-time ANN lookup — q_incremental_ann's
+    exact machinery with the delete path EXECUTED: the deterministic
+    'del:' takedown wave (``hashing.is_del``, ~20% of the frozen
+    corpus — the same wave
     q_index_compact prices) is threaded through :func:`frozen_top1`'s
     ``tombstones`` anti-join, so a deleted vector can never surface as
     a neighbor BETWEEN rebuilds. The frozen index stays trained on the
@@ -805,7 +752,7 @@ def q_ann_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = _inc_tagged(spark, sf_dir)
     old = tagged.filter(~F.col("is_new")).select("vec_id", "label", "embedding")
     new = tagged.filter(F.col("is_new")).select("vec_id", "embedding")
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     return frozen_top1(
         frozen_route(new, cent, seeds),
         _assign_to_seeds(old, seeds),
@@ -833,8 +780,8 @@ def _gpt_plants(base: DataFrame) -> DataFrame:
     ``exact`` mode copies text verbatim so the plant shares its
     source's normalized digest — round-15 self-review folded the
     variant into the shared helper instead of duplicating it)."""
-    del_pop = (F.col("g") >= 1) & _del_tag_col("doc_id")
-    surv_pop = (F.col("g") >= 1) & ~_del_tag_col("doc_id")
+    del_pop = (F.col("g") >= 1) & hashing.is_del("doc_id")
+    surv_pop = (F.col("g") >= 1) & ~hashing.is_del("doc_id")
     return (
         _tt_plant(base, del_pop, _GPT_NEAR_DEL_BASE)
         .unionByName(_tt_plant(base, surv_pop, _GPT_NEAR_SURV_BASE))
@@ -917,7 +864,7 @@ def _gpt_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cell").alias("icell"),
         F.col("embedding").alias("xe"),
     )
-    tomb_vec = old_vec.filter(_is_del_col()).select("vec_id")
+    tomb_vec = old_vec.filter(hashing.is_del("vec_id")).select("vec_id")
     scored = (
         _route_inline(new_vec, cent, seeds)
         .join(x, "icell", "left")
@@ -955,10 +902,8 @@ _GPT_PLANT_EXACT_SQL = """
 _GPT_ORACLE = f"""
     WITH base AS (
         SELECT doc_id, lang, text,
-               CAST(CAST(concat('0x', substring(
-                         md5('inc:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % 10 AS BIGINT) AS g,
-               CASE WHEN {_DEL_TAG_SQL.format(col='doc_id')}
+               {hashing.inc_batch_sql('doc_id')} AS g,
+               CASE WHEN {hashing.is_del_sql('doc_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM documents
     ), arr AS (
@@ -1049,9 +994,7 @@ _GPT_ORACLE = f"""
         WHERE g >= 1 AND is_del = 0
     ), esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), ecent AS (
@@ -1094,7 +1037,7 @@ _GPT_ORACLE = f"""
                                 DESC, x.vec_id) AS rn
             FROM eassign a
             LEFT JOIN esplit x ON x.is_new = 0 AND x.label = a.cell
-             AND NOT {_DEL_TAG_SQL.format(col='x.vec_id')}
+             AND NOT {hashing.is_del_sql('x.vec_id')}
         ) WHERE rn = 1
     ), probes AS (
         SELECT doc_id FROM base WHERE g = 0
@@ -1236,7 +1179,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     cb = _tg_slice_bands(bands_all, corpus_ids).withColumn(
-        "_sv", (~_del_tag_col("doc_id")).cast("int")
+        "_sv", (~hashing.is_del("doc_id")).cast("int")
     )
     wsz = Window.partitionBy("band_idx", "band_key")
     capped_dual = (
@@ -1291,7 +1234,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from two to one
     h_both = (
         base.filter(F.col("g") >= 1)
-        .select(dig, (~_del_tag_col("doc_id")).cast("int").alias("_sv"))
+        .select(dig, (~hashing.is_del("doc_id")).cast("int").alias("_sv"))
         .groupBy("h")
         .agg(F.max("_sv").alias("_e2"))
         .withColumn("_e1", F.lit(1))
@@ -1440,9 +1383,7 @@ def _fr_frames(spark: SparkSession, sf_dir: str):
 _FR_ORACLE = f"""
     WITH esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), old AS (
@@ -1733,7 +1674,7 @@ def _fm_frames(spark: SparkSession, sf_dir: str):
         .filter(~F.col("is_new"))
         .select("vec_id", "label", "embedding")
     )
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     seeds1 = _fr_seeds(old, k=2).localCheckpoint()  # |labels| rows, 3 consumers
     indexed1 = _assign_to_seeds(old, seeds1)
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
@@ -1753,11 +1694,9 @@ def _fm_frames(spark: SparkSession, sf_dir: str):
 _FM_ORACLE = f"""
     WITH esplit AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new,
-               CASE WHEN {_DEL_TAG_SQL.format(col='vec_id')}
+               CASE WHEN {hashing.is_del_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM embeddings
     ), old AS (
@@ -1916,7 +1855,7 @@ def q_fired_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     old, tomb, seeds1, indexed1, surv = _fm_frames(spark, sf_dir)
     cells = old.select(
-        "label", _is_del_col().cast("int").alias("is_del")
+        "label", hashing.is_del("vec_id").cast("int").alias("is_del")
     ).groupBy(F.col("label").alias("cell")).agg(
         F.count(F.lit(1)).alias("n_before"),
         F.sum("is_del").cast("long").alias("n_deleted"),

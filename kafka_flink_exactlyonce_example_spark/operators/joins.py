@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.functions.money import cents, cents_sql
 from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
@@ -444,10 +445,8 @@ _SALTS = 8
     oracle=f"""
     WITH f AS (
         SELECT l_suppkey, l_extendedprice, l_discount,
-               CAST(CAST(concat('0x', substring(
-                        md5('salt:' || CAST(l_orderkey AS VARCHAR) || ':'
-                            || CAST(l_linenumber AS VARCHAR)), 1, 8))
-                    AS UBIGINT) % {_SALTS} AS BIGINT) AS salt
+               CAST({hashing.tag_u32_sql('salt:', 'l_orderkey', 'l_linenumber')}
+                    % {_SALTS} AS BIGINT) AS salt
         FROM lineitem
     ), dim AS (
         SELECT s_suppkey, s_nationkey, s.salt
@@ -486,22 +485,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier")
     salt = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("salt:"),
-                        F.col("l_orderkey").cast("string"),
-                        F.lit(":"),
-                        F.col("l_linenumber").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        F.expr(hashing.tag_u32_spark_sql("salt:", "l_orderkey", "l_linenumber"))
         % _SALTS
     )
     f = li.select(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.scale import (
     _PERSISTED,
     global_ntile,
@@ -2725,11 +2726,10 @@ def _pois_case_sql(u: str) -> str:
     oracle=f"""
     WITH reps AS (
         SELECT o.o_orderkey, o.o_totalprice, r.b,
-               CAST(CAST(concat('0x', substring(
-                       md5(concat('boot', CAST(r.b // 4 AS VARCHAR), ':',
-                                  CAST(o.o_orderkey AS VARCHAR))),
-                       (r.b % 4) * 8 + 1, 8))
-                    AS UBIGINT) AS DOUBLE) / 4294967296.0 AS u
+               CAST({hashing.md5_hex_sql(
+                   "concat('boot', CAST(r.b // 4 AS VARCHAR), ':', "
+                   "CAST(o.o_orderkey AS VARCHAR))", "(r.b % 4) * 8 + 1")}
+                    AS DOUBLE) / 4294967296.0 AS u
         FROM orders o
         CROSS JOIN (SELECT unnest(range({_B_REPS})) AS b) r
     ), weighted AS (
@@ -2788,6 +2788,7 @@ def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.explode(F.sequence(F.lit(0), F.lit(_B_REPS - 1))).alias("b"),
     )
+    # 8 hex digits at a per-row offset, not hashing.md5_u32's first 8
     u = (
         F.conv(
             F.substring(

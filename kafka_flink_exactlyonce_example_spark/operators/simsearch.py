@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
     cosine_spark_sql,
@@ -34,7 +35,6 @@ from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _ivf_cells_for,
     _ivf_seeds,
     _ivf_seeds_for,
-    _md5_mod_col,
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.operators.scale import widen_small_scan
@@ -1143,15 +1143,9 @@ def q_mp_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- q_incremental_ann frozen ingest index ------------------------
-def _inc_is_new_col():
-    """Deterministic ~10% md5 batch split (same 'inc:' convention as
-    q_incremental_dedup) — the 'new batch' vs 'indexed corpus' tag."""
-    return _md5_mod_col("inc:", "vec_id", 10) == 0
-
-
 def _inc_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", _inc_is_new_col().alias("is_new")
+        "vec_id", "label", "embedding", hashing.is_new("vec_id").alias("is_new")
     )
 
 
@@ -1753,68 +1747,11 @@ def frozen_top1(
     indexed: DataFrame,
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-1 existing neighbor for each routed vector, scanning ONLY
-    its assigned sub-cell's members. ``indexed`` is the frozen corpus
-    with its own sub-cell assignment (:func:`dedup._assign_to_seeds`
-    output). Returns (vec_id, cell, neighbor_id, sim) — one row per
-    ROUTED vector, totality by construction (LEFT join, see below).
-
-    ``tombstones`` (round 13): an optional id-set of deleted corpus
-    vectors, removed from the posting scan by
-    :func:`tombstone_filter`'s anti-join BEFORE scoring — the
-    between-rebuilds delete semantics q_index_compact prices. A
-    sub-cell fully emptied by deletes surfaces through the same LEFT
-    join as the FP-tie case below: an explicit NULL row, never a
-    silently-vanished probe. Default ``None`` leaves the plan
-    byte-identical to the historical two-argument form.
-
-    TOTALITY (VERDICT r10 item 6, claim narrowed + join hardened per
-    ADVICE r11): for sub-cells emptied by BIT-IDENTICAL duplicate
-    seeds, a routed vector provably cannot land there — every old
-    member ties to the smaller cell id, and a new vector facing the
-    same duplicate seeds computes bit-identical cosines (same input
-    arrays, same fold) and tie-breaks the same way; both routes share
-    one scoring function (:func:`dedup._assign_to_seeds`); pinned by
-    tests/test_ivf_cells.py::
-    test_frozen_route_total_even_with_empty_subcells on a fixture that
-    actually manufactures empty sub-cells via duplicate seeds. That
-    argument does NOT cover every empty-cell mechanism: two DISTINCT
-    seeds can tie FP-exactly for every member (e.g. colinear scaled
-    vectors, where cosine evaluates to exactly 1.0 against both) and
-    likewise empty the larger cell id — but a new vector's cosines
-    against such seeds come from DIFFERENT op chains and may round
-    apart, routing it into the empty cell. The scan join is therefore
-    a LEFT join: a routed vector whose sub-cell holds no members
-    surfaces as an explicit (vec_id, cell, NULL, NULL) row instead of
-    silently vanishing — the ingest gate reads NULL sim as
-    f_near = 0 through the same coalesce path as docs without
-    embedding rows, so a pathological corpus is VISIBLE in the output
-    rather than skipping the near-check invisibly. On any healthy
-    corpus (all graded SFs — guard-tested) no NULL row can occur and
-    the result is identical to the historical inner join."""
-    indexed = tombstone_filter(indexed, tombstones)
-    x = indexed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cell").alias("icell"),
-        F.col("embedding").alias("xe"),
-    )
-    nb_w = Window.partitionBy("vec_id").orderBy(
-        F.desc("sim_raw"), F.col("neighbor_id")
-    )
-    return (
-        routed.join(x, "icell", "left")
-        .select(
-            "vec_id",
-            "cell",
-            "neighbor_id",
-            cosine("embedding", "xe").alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(nb_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id", "cell", "neighbor_id", F.round("sim_raw", 6).alias("sim")
-        )
-    )
+    """Top-1 existing neighbor for each routed vector: (vec_id, cell,
+    neighbor_id, sim), one row per ROUTED vector. :func:`frozen_topk`
+    at k = 1; Spark plans its ``nb_rank <= 1`` filter as the same
+    ``WindowGroupLimit`` pair as ``= 1``."""
+    return frozen_topk(routed, indexed, 1, tombstones).drop("nb_rank")
 
 
 def frozen_topk(
@@ -1823,22 +1760,39 @@ def frozen_topk(
     k: int,
     tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-``k`` existing neighbors per routed vector — the serving
-    generalization of :func:`frozen_top1` (round 13: a production ANN
-    service returns a result LIST, not a single merge decision; this
-    is the same one-sub-cell posting scan with the rank filter widened
-    and the rank emitted). Returns (vec_id, cell, nb_rank, neighbor_id,
-    sim), ≤ k rows per routed vector — fewer when the sub-cell holds
-    fewer survivors, one explicit NULL row when it holds none (the
-    LEFT-join totality contract of frozen_top1, verbatim: an emptied
-    cell is visible, never a vanished probe). Rank-1 equality with
-    frozen_top1 under any tombstone set is drift-pinned by
-    tests/test_ivf_cells.py (kept as a TEST rather than delegation so
-    the three graded top-1 consumers' plans stay byte-identical).
+    """Top-``k`` existing neighbors per routed vector, scanning ONLY
+    its assigned sub-cell's members — a production ANN service returns
+    a result LIST, not a single merge decision. ``indexed`` is the
+    frozen corpus with its own sub-cell assignment
+    (:func:`dedup._assign_to_seeds` output). Returns (vec_id, cell,
+    nb_rank, neighbor_id, sim), ≤ k rows per routed vector — fewer
+    when the sub-cell holds fewer survivors.
 
-    Scale shape: identical to frozen_top1 — the widened filter changes
-    output rows (≤ k per probe), not scan cost (∝ √n posting rows per
-    probe either way)."""
+    ``tombstones``: an optional id-set of deleted corpus vectors,
+    removed from the posting scan by :func:`tombstone_filter`'s
+    anti-join BEFORE scoring — the between-rebuilds delete semantics
+    q_index_compact prices. ``None`` leaves the scan unfiltered.
+
+    TOTALITY: the scan join is a LEFT join, so a routed vector whose
+    sub-cell holds no members surfaces as one explicit (vec_id, cell,
+    1, NULL, NULL) row instead of silently vanishing. For sub-cells
+    emptied by BIT-IDENTICAL duplicate seeds a routed vector provably
+    cannot land there — every old member ties to the smaller cell id,
+    and a new vector facing the same seeds computes bit-identical
+    cosines and tie-breaks the same way (both routes share
+    :func:`dedup._assign_to_seeds`; pinned by tests/test_ivf_cells.py::
+    test_frozen_route_total_even_with_empty_subcells). That argument
+    does NOT cover two DISTINCT seeds tying FP-exactly for every
+    member (e.g. colinear scaled vectors): a new vector's cosines
+    against them come from different op chains and may round apart,
+    routing it into the empty cell. Deletes can empty a cell too. The
+    ingest gate reads a NULL sim as f_near = 0 through the same
+    coalesce path as docs without embedding rows, so a pathological
+    corpus is VISIBLE in the output; on every graded SF no NULL row
+    occurs (guard-tested).
+
+    Scale shape: the widened filter changes output rows (≤ k per
+    probe), not scan cost (∝ √n posting rows per probe)."""
     indexed = tombstone_filter(indexed, tombstones)
     x = indexed.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -1891,9 +1845,7 @@ def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     oracle=f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), cent AS (
@@ -2001,9 +1953,7 @@ _SERVE_K = 3
     oracle=f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), cent AS (
@@ -2077,9 +2027,7 @@ def q_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CHURN_ORACLE = f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), cent1 AS (
@@ -5302,13 +5250,9 @@ _SERVE_FILTERED_BUDGET = 1_000_000
     oracle=f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('del:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 5 AS BIGINT) = 0
+               CASE WHEN {hashing.is_del_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_del
         FROM embeddings
     ), cent AS (
@@ -5378,11 +5322,7 @@ def q_serve_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "embedding"
     )
     new = tagged.filter(F.col("is_new")).select("vec_id", "embedding")
-    from kafka_flink_exactlyonce_example_spark.operators.ingest import (
-        _is_del_col,
-    )
-
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     choice, frame = filtered_serve_topk(
         new,
         cent,
@@ -5405,9 +5345,7 @@ def q_serve_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH split AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN CAST(CAST(concat('0x', substring(
-                             md5('inc:' || CAST(vec_id AS VARCHAR)), 1, 8))
-                        AS UBIGINT) % 10 AS BIGINT) = 0
+               CASE WHEN {hashing.is_new_sql('vec_id')}
                     THEN 1 ELSE 0 END AS is_new
         FROM embeddings
     ), probes AS (

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
 from kafka_flink_exactlyonce_example_spark.registry import query
 from kafka_flink_exactlyonce_example_spark.sources import table
@@ -226,11 +227,10 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_shard_assign",
-    oracle="""
+    oracle=f"""
     WITH sharded AS (
         SELECT doc_id, n_chars,
-               CAST(CAST(concat('0x', substring(md5(text), 1, 8)) AS UBIGINT)
-                    % 16 AS BIGINT) AS shard
+               CAST({hashing.md5_u32_sql('text')} % 16 AS BIGINT) AS shard
         FROM documents
     )
     SELECT shard,
@@ -250,11 +250,7 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     write; the per-shard stats here are the skew check you'd run
     before committing the layout."""
     d = table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 16
-    )
+    shard = hashing.md5_u32("text") % 16
     return (
         d.select(shard.alias("shard"), "doc_id", "n_chars")
         .groupBy("shard")
@@ -268,12 +264,11 @@ def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH sampled AS (
         SELECT lang, n_chars
         FROM documents
-        WHERE CAST(CAST(concat('0x', substring(md5(text), 1, 8)) AS UBIGINT)
-                   % 100 AS BIGINT) < 20
+        WHERE CAST({hashing.md5_u32_sql('text')} % 100 AS BIGINT) < 20
     )
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_sampled,
@@ -290,11 +285,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash predicate pushes into the scan's residual filter, so the
     sample never materializes the rejected 80%."""
     d = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = hashing.md5_u32("text") % 100
     return (
         d.filter(bucket < 20)
         .groupBy("lang")
@@ -972,11 +963,11 @@ def q_keyphrase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_weighted_sample",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
         SELECT lang, doc_id, n_chars,
-               round(-ln((CAST(CAST(concat('0x', substring(md5(text), 1, 8))
-                                AS UBIGINT) AS DOUBLE) + 1.0) / 4294967296.0)
+               round(-ln((CAST({hashing.md5_u32_sql('text')} AS DOUBLE) + 1.0)
+                         / 4294967296.0)
                      / n_chars, 9) AS skey
         FROM documents
     )
@@ -1004,12 +995,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranking is on the 9-decimal rounded key + doc_id so cross-engine
     libm 1-ulp ln() differences cannot flip the order."""
     d = table(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10).cast(
-            "double"
-        )
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = (hashing.md5_u32("text").cast("double") + 1.0) / F.lit(4294967296.0)
     keyed = d.select(
         "lang",
         "doc_id",
@@ -1179,14 +1165,12 @@ def q_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_train_split",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
         SELECT lang, n_chars,
-               CASE WHEN CAST(CAST(concat('0x', substring(md5(text), 1, 8))
-                                   AS UBIGINT) % 100 AS BIGINT) < 90
+               CASE WHEN CAST({hashing.md5_u32_sql('text')} % 100 AS BIGINT) < 90
                         THEN 'train'
-                    WHEN CAST(CAST(concat('0x', substring(md5(text), 1, 8))
-                                   AS UBIGINT) % 100 AS BIGINT) < 95
+                    WHEN CAST({hashing.md5_u32_sql('text')} % 100 AS BIGINT) < 95
                         THEN 'val'
                     ELSE 'test' END AS split
         FROM documents
@@ -1213,11 +1197,7 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     share window runs on the (lang × split) grain — ≤15 rows, bounded.
     """
     d = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = hashing.md5_u32("text") % 100
     assigned = d.select(
         "lang",
         "n_chars",
@@ -1627,10 +1607,9 @@ def q_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_vocab_drift",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
-        SELECT CASE WHEN CAST(CAST(concat('0x', substring(md5(text), 1, 8))
-                                   AS UBIGINT) % 100 AS BIGINT) < 90
+        SELECT CASE WHEN CAST({hashing.md5_u32_sql('text')} % 100 AS BIGINT) < 90
                     THEN 'train' ELSE 'other' END AS split,
                text
         FROM documents
@@ -1675,11 +1654,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute statistic (+ word tie-break) so both engines rank
     identically."""
     d = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = hashing.md5_u32("text") % 100
     words = d.select(
         F.when(bucket < 90, "train").otherwise("other").alias("split"),
         F.explode(F.split("text", " ")).alias("word"),
@@ -1816,7 +1791,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dsir_weights",
-    oracle="""
+    oracle=f"""
     WITH words AS (
         SELECT doc_id, lang,
                unnest(list_filter(string_split(text, ' '), w -> w <> ''))
@@ -1824,8 +1799,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ), feats AS (
         SELECT doc_id, lang,
-               CAST(CAST(concat('0x', substring(md5(w), 1, 8)) AS UBIGINT)
-                    % 64 AS BIGINT) AS b
+               CAST({hashing.md5_u32_sql('w')} % 64 AS BIGINT) AS b
         FROM words
     ), tgt AS (
         SELECT b, CAST(COUNT(*) AS DOUBLE) AS ct FROM feats
@@ -1876,11 +1850,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = words.select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            % 64
-        ).alias("b"),
+        (hashing.md5_u32("w") % 64).alias("b"),
     )
     tgt = (
         feats.filter(F.col("lang") == "en")
@@ -2202,9 +2172,8 @@ _CMS_W = 256   # counters per row
     ), rows_ AS (SELECT unnest(range(0, {_CMS_D})) AS r),
     positions AS (
         SELECT w.word, r.r,
-               CAST(CAST(concat('0x', substring(
-                        md5(CAST(r.r AS VARCHAR) || ':' || w.word), 1, 8))
-                    AS UBIGINT) % {_CMS_W} AS BIGINT) AS b
+               CAST({hashing.md5_u32_sql("CAST(r.r AS VARCHAR) || ':' || w.word")}
+                    % {_CMS_W} AS BIGINT) AS b
         FROM words w CROSS JOIN rows_ r
     ), counters AS (
         SELECT r, b, CAST(COUNT(*) AS BIGINT) AS c
@@ -2251,22 +2220,7 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions = words.select("word", rows).select(
         "word",
         "r",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("r").cast("string"), F.lit(":"), F.col("word")
-                        ).cast("binary")
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _CMS_W
-        ).alias("b"),
+        (hashing.md5_u32("concat(CAST(r AS STRING), ':', word)") % _CMS_W).alias("b"),
     )
     counters = positions.groupBy("r", "b").agg(F.count(F.lit(1)).alias("c"))
     top = exact.orderBy(F.desc("exact_count"), "word").limit(20)
@@ -3749,8 +3703,7 @@ _KMV_K = 256  # bottom-k sketch size (per-source distinct-word sketch)
     oracle=f"""
     WITH words AS (
         SELECT DISTINCT source,
-               CAST(CAST(concat('0x', substring(md5(word), 1, 8))
-                    AS UBIGINT) AS BIGINT) AS h
+               CAST({hashing.md5_u32_sql('word')} AS BIGINT) AS h
         FROM (
             SELECT source,
                    unnest(list_filter(string_split(text, ' '),
@@ -3851,9 +3804,7 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "source",
-            F.conv(F.substring(F.md5(F.col("word").cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            .alias("h"),
+            hashing.md5_u32("word").alias("h"),
         )
         .distinct()
     )

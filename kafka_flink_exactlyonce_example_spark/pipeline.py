@@ -25,9 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _LSH_CC_PREFIX,
-    _del_tag_col,
     _keep_best_key,
     q_dedup_keep_best,
     q_dup_groups,
@@ -48,11 +48,7 @@ def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     kept = d.join(keepers, "doc_id")  # one row per group by construction
     toks = F.filter(F.split("text", " "), lambda w: w != "")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % N_SHARDS
-    )
+    shard = hashing.md5_u32("text") % N_SHARDS
     return (
         kept.filter(F.col("n_chars") >= MIN_CHARS)
         .select(
@@ -85,8 +81,7 @@ def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.doc_id, d.lang, d.source, k.n_dups_folded,
            CAST(len(list_filter(string_split(d.text, ' '), w -> w <> ''))
                 AS BIGINT) AS n_tokens,
-           CAST(CAST(concat('0x', substring(md5(d.text), 1, 8)) AS UBIGINT)
-                % {N_SHARDS} AS BIGINT) AS shard
+           CAST({hashing.md5_u32_sql('d.text')} % {N_SHARDS} AS BIGINT) AS shard
     FROM documents d
     JOIN keep k ON k.doc_id = d.doc_id
     WHERE d.n_chars >= {MIN_CHARS}
@@ -112,16 +107,13 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(first(doc_id ORDER BY n_chars DESC, doc_id) AS BIGINT) AS doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_survivors
         FROM groups
-        WHERE NOT CAST(CAST(concat('0x', substring(
-                       md5('del:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS UBIGINT) % 5 AS BIGINT) = 0
+        WHERE NOT {hashing.is_del_sql('doc_id')}
         GROUP BY group_id
     )
     SELECT d.doc_id, d.lang, d.source, k.n_survivors,
            CAST(len(list_filter(string_split(d.text, ' '), w -> w <> ''))
                 AS BIGINT) AS n_tokens,
-           CAST(CAST(concat('0x', substring(md5(d.text), 1, 8)) AS UBIGINT)
-                % {N_SHARDS} AS BIGINT) AS shard
+           CAST({hashing.md5_u32_sql('d.text')} % {N_SHARDS} AS BIGINT) AS shard
     FROM documents d
     JOIN keep k ON k.doc_id = d.doc_id
     WHERE d.n_chars >= {MIN_CHARS}
@@ -162,7 +154,7 @@ def q_curate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     keep = (
         labels.join(d.select("doc_id", "n_chars"), "doc_id")
-        .filter(~_del_tag_col("doc_id"))
+        .filter(~hashing.is_del("doc_id"))
         .groupBy("group_id")
         .agg(
             F.count(F.lit(1)).alias("n_survivors"),
@@ -170,11 +162,7 @@ def q_curate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     toks = F.filter(F.split("text", " "), lambda w: w != "")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % N_SHARDS
-    )
+    shard = hashing.md5_u32("text") % N_SHARDS
     return (
         d.join(keep.select("doc_id", "n_survivors"), "doc_id")
         .filter(F.col("n_chars") >= MIN_CHARS)

@@ -6,8 +6,8 @@ operator, alias, lambda and ``lit`` is one or more py4j calls, about
 of calls where its SQL text costs three (``F.expr`` parses it on the
 JVM side in one call). These tests count the calls by wrapping
 ``py4j.clientserver.ClientServerConnection.send_command`` and hold the
-similarity helpers and the ``llm_pipeline`` keys to a budget, so a lane
-loop cannot creep back unnoticed.
+similarity and hashing helpers and the ``llm_pipeline`` keys to a
+budget, so a lane loop cannot creep back unnoticed.
 
 The key test only builds: it calls ``QUERIES[key](spark, sf)``, which
 runs whatever side executions the key's build makes, but never
@@ -68,14 +68,17 @@ def round_trips():
         ClientServerConnection.send_command = send
 
 
-@pytest.mark.parametrize("helper", ["dot", "l2_norm", "cosine", "dist2"])
+@pytest.mark.parametrize("helper", ["dot", "l2_norm", "cosine", "dist2", "md5_u32"])
 def test_similarity_helpers_build_in_one_call(spark, helper):
-    from kafka_flink_exactlyonce_example_spark.functions import similarity
+    from kafka_flink_exactlyonce_example_spark.functions import hashing, similarity
 
-    args = ("embedding",) if helper == "l2_norm" else ("embedding", "a")
-    getattr(similarity, helper)(*args)  # first-use JVM view lookups
+    module = hashing if helper == "md5_u32" else similarity
+    args = {"l2_norm": ("embedding",), "md5_u32": ("text",)}.get(
+        helper, ("embedding", "a")
+    )
+    getattr(module, helper)(*args)  # first-use JVM view lookups
     with round_trips() as n:
-        getattr(similarity, helper)(*args)
+        getattr(module, helper)(*args)
     assert n[0] <= 5, f"{helper} took {n[0]} round trips"
 
 

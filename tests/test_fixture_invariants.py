@@ -21,10 +21,10 @@ import duckdb
 import pytest
 
 from tests.conftest import ORACLE_SF, SMOKE_SF
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 
 
 def _check_gate_preconditions(spark, sf_dir: str) -> None:
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import _md5_mod_col
     from kafka_flink_exactlyonce_example_spark.operators.ingest import gate_flags_for
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import _inc_tagged
     from kafka_flink_exactlyonce_example_spark.sources import table
@@ -41,7 +41,7 @@ def _check_gate_preconditions(spark, sf_dir: str) -> None:
 
     batch = {
         r.doc_id
-        for r in docs.filter(_md5_mod_col("inc:", "doc_id", 10) == 0)
+        for r in docs.filter(hashing.is_new("doc_id"))
         .select("doc_id")
         .collect()
     }
@@ -81,7 +81,7 @@ def _doctored_copy(tmp_path, table_name: str, sql: str) -> str:
 
 
 def _is_inc_new(i: int) -> bool:
-    """The 'inc:' split, as ``_md5_mod_col("inc:", id, 10) == 0``."""
+    """The 'inc:' split, as ``hashing.is_new``."""
     return int(hashlib.md5(f"inc:{i}".encode()).hexdigest()[:8], 16) % 10 == 0
 
 

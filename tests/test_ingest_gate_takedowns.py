@@ -9,9 +9,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _MAX_BUCKET,
-    _del_tag_col,
     _tg_base,
     near_text_flags,
     text_index_build,
@@ -102,7 +102,7 @@ def test_gate_post_takedown_text_side_matches_api(spark, registry_loaded):
     formulation honest (test_graded_fold_matches_api's discipline)."""
     base = _cap_precondition(spark)
     corpus = base.filter(F.col("g") >= 1).select("doc_id", "lang", "text")
-    wave = corpus.filter(_del_tag_col("doc_id")).select("doc_id")
+    wave = corpus.filter(hashing.is_del("doc_id")).select("doc_id")
     batch = (
         base.filter(F.col("g") == 0)
         .select("doc_id", "lang", "text")

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.operators import dedup
 
 
@@ -1107,10 +1108,9 @@ def test_bucketed_generation_tombstone_join_no_shuffle(
 
 
 def test_frozen_topk_rank1_equals_top1_and_list_contract(spark, monkeypatch):
-    """frozen_topk is frozen_top1 with the rank filter widened — kept
-    as a separate function so the three graded top-1 consumers' plans
-    stay byte-identical, with THIS test as the drift pin: rank-1 rows
-    equal frozen_top1 exactly (with and without a tombstone set), the
+    """frozen_top1 is frozen_topk at k = 1 with the rank dropped; this
+    test pins the list contract around it: rank-1 rows equal
+    frozen_top1 exactly (with and without a tombstone set), the
     list is rank-dense and sim-monotone per probe, a sub-cell with
     fewer than k survivors yields a SHORT list, and an emptied cell
     yields the explicit NULL row (the totality contract verbatim)."""
@@ -1348,7 +1348,6 @@ def test_fired_merge_keeps_surviving_seed(spark, registry_loaded):
 
     from kafka_flink_exactlyonce_example_spark.operators.ingest import (
         _fr_seeds,
-        _is_del_col,
     )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         _inc_tagged,
@@ -1380,7 +1379,7 @@ def test_fired_merge_keeps_surviving_seed(spark, registry_loaded):
     )
     deleted = {
         r["vec_id"]
-        for r in old.filter(_is_del_col()).select("vec_id").collect()
+        for r in old.filter(hashing.is_del("vec_id")).select("vec_id").collect()
     }
     planted = {
         r["label"]: [s["cell"] for s in r["_seeds"]]

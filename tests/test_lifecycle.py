@@ -12,6 +12,7 @@ import os
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 
 _SCHEMA = (
     "doc_id bigint, lang string, text string, "
@@ -207,9 +208,6 @@ def test_curate_post_takedown_invariants(spark, registry_loaded):
     did not touch keeps its pre-wave manifest row byte-for-byte
     (n_survivors == the pre-wave group_size — the incremental claim:
     only wave-touched groups can change)."""
-    from kafka_flink_exactlyonce_example_spark.operators.dedup import (
-        _del_tag_col,
-    )
     from kafka_flink_exactlyonce_example_spark.sources import table
 
     post = {
@@ -227,7 +225,7 @@ def test_curate_post_takedown_invariants(spark, registry_loaded):
     d = table(spark, SMOKE_SF, "documents")
     deleted = {
         r["doc_id"]
-        for r in d.filter(_del_tag_col("doc_id")).select("doc_id").collect()
+        for r in d.filter(hashing.is_del("doc_id")).select("doc_id").collect()
     }
     assert post, "post-wave manifest must not be empty"
     assert not deleted & set(post), "a tombstoned doc was named keeper"
@@ -579,9 +577,6 @@ def test_roll_delete_only_graded_row_invariants(spark, registry_loaded):
     auto_probe_panel derives), and both verdict branches are live
     (strict blocks, lenient promotes — the measured ~1/3 panel churn
     of the id-uniform wave's centroid drift)."""
-    from kafka_flink_exactlyonce_example_spark.operators.ingest import (
-        _is_del_col,
-    )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         _RECALL_PROBES,
         _inc_tagged,
@@ -600,7 +595,7 @@ def test_roll_delete_only_graded_row_invariants(spark, registry_loaded):
     surv = (
         _inc_tagged(spark, SMOKE_SF)
         .filter(~F.col("is_new"))
-        .filter(~_is_del_col())
+        .filter(~hashing.is_del("vec_id"))
         .select("vec_id", "embedding")
     )
     panel_ids = {r["vec_id"] for r in md5_panel(surv).collect()}
@@ -815,8 +810,7 @@ def test_derived_catalog2_graded_row_matches_api(spark, registry_loaded):
     x2, _p, _rankr, _truth = lc._dc2_frames(spark, SMOKE_SF)
     # rebuild the router the same way the frames builder did
     from kafka_flink_exactlyonce_example_spark.operators.ingest import (
-        _gate_frame,
-        _is_del_col,
+        gate_flags_for,
     )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         _inc_tagged,
@@ -826,7 +820,7 @@ def test_derived_catalog2_graded_row_matches_api(spark, registry_loaded):
         tombstone_filter,
     )
 
-    flags = _gate_frame(spark, SMOKE_SF, survivors_only=True)
+    flags = gate_flags_for(spark, SMOKE_SF, survivors_only=True)
     cent1, seeds1 = inc_index_build(spark, SMOKE_SF)
     tagged = _inc_tagged(spark, SMOKE_SF)
     old = tagged.filter(~F.col("is_new")).select(
@@ -835,7 +829,7 @@ def test_derived_catalog2_graded_row_matches_api(spark, registry_loaded):
     new = tagged.filter(F.col("is_new")).select(
         "vec_id", "label", "embedding"
     )
-    tomb = old.filter(_is_del_col()).select("vec_id")
+    tomb = old.filter(hashing.is_del("vec_id")).select("vec_id")
     adm = new.join(
         flags.filter(F.col("admitted") == 1)
         .select(F.col("doc_id").alias("vec_id")),

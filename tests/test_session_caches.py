@@ -5,9 +5,13 @@ one), and built in the order ``BUILD_ORDER`` declares."""
 
 from __future__ import annotations
 
+import ast
 import logging
 import re
 import time
+from pathlib import Path
+
+import kafka_flink_exactlyonce_example_spark as package
 
 from tests.conftest import SMOKE_SF
 
@@ -74,12 +78,117 @@ def test_cache_builders_front_the_real_caches(spark, registry_loaded, caplog):
     assert "semdedup_scored" not in named
 
 
+def _package_call_graph():
+    """Parse the package with ``ast``: return (edges, queries, caches).
+
+    ``edges`` maps each top-level function, as (module, name), to the
+    package functions its body names (calls, thunks and lambdas alike),
+    resolved through the module's own definitions and its imports
+    (``from m import f``, ``from pkg import m`` then ``m.f``), including
+    imports made inside functions. ``queries`` maps each ``@query``
+    function to its key; ``caches`` maps each ``@session_cache`` name
+    to its getter."""
+    root = Path(package.__file__).resolve().parent
+    trees = {
+        ".".join((package.__name__, *p.relative_to(root).with_suffix("").parts))
+        .removesuffix(".__init__"): ast.parse(p.read_text())
+        for p in sorted(root.rglob("*.py"))
+    }
+    defs = {
+        m: {n.name: n for n in t.body if isinstance(n, ast.FunctionDef)}
+        for m, t in trees.items()
+    }
+    names, modules = {}, {}  # per module: alias -> (module, name) / module
+    for m, t in trees.items():
+        names[m], modules[m] = {}, {}
+        for node in ast.walk(t):
+            if isinstance(node, ast.ImportFrom) and node.module in trees:
+                for a in node.names:
+                    sub = f"{node.module}.{a.name}"
+                    if sub in trees:
+                        modules[m][a.asname or a.name] = sub
+                    else:
+                        names[m][a.asname or a.name] = (node.module, a.name)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name in trees and a.asname:
+                        modules[m][a.asname] = a.name
+
+    def resolve(m, name, seen=()):
+        if name in defs[m]:
+            return (m, name)
+        if name in names[m] and (m, name) not in seen:
+            return resolve(*names[m][name], seen=(*seen, (m, name)))
+        return None
+
+    edges, queries, caches = {}, {}, {}
+    for m, fns in defs.items():
+        for name, fn in fns.items():
+            out = set()
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Name):
+                    target = resolve(m, node.id)
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in modules[m]
+                ):
+                    target = resolve(modules[m][node.value.id], node.attr)
+                else:
+                    continue
+                if target and target != (m, name):
+                    out.add(target)
+            edges[(m, name)] = out
+            for d in fn.decorator_list:
+                if (
+                    isinstance(d, ast.Call)
+                    and isinstance(d.func, ast.Name)
+                    and d.func.id in ("query", "session_cache")
+                ):
+                    label = d.args[0].value
+                    (queries if d.func.id == "query" else caches)[(m, name)] = label
+    return edges, queries, {v: k for k, v in caches.items()}
+
+
+def _reach(edges, start):
+    seen, todo = {start}, [start]
+    while todo:
+        for nxt in edges[todo.pop()] - seen:
+            seen.add(nxt)
+            todo.append(nxt)
+    return seen
+
+
 def test_build_order_is_the_builders_order(registry_loaded):
-    """``BUILD_ORDER`` names each pre-built cache once, and
-    ``CACHE_BUILDERS`` builds them in that order, so each line item
-    reads its own marginal build cost."""
+    """``BUILD_ORDER`` names each pre-built cache once, and every
+    session cache that two or more graded keys read is built by the
+    pre-build: either it is in ``BUILD_ORDER`` or a ``BUILD_ORDER``
+    builder's call graph reaches it. Otherwise its one build runs under
+    whichever consumer comes first, and that key's row, plan entry and
+    trace carry a cost that belongs to all of them.
+
+    The call graph is read statically from the package source, so the
+    check starts no Spark session and needs no fixture data."""
     from kafka_flink_exactlyonce_example_spark.operators import session_caches
+    from kafka_flink_exactlyonce_example_spark.operators.overlap import SESSION_CACHES
 
     order = session_caches.BUILD_ORDER
     assert len(order) == len(set(order))
     assert list(session_caches.CACHE_BUILDERS) == list(order)
+
+    edges, queries, caches = _package_call_graph()
+    assert set(queries.values()) == set(registry_loaded.QUERIES)
+    assert set(caches) == set(SESSION_CACHES)
+    pre_built = set().union(*(_reach(edges, caches[n]) for n in order))
+    reached_by = {fn: _reach(edges, fn) for fn in queries}
+    unbuilt = {}
+    for name, getter in caches.items():
+        if name in order or getter in pre_built:
+            continue
+        keys = sorted(queries[q] for q, r in reached_by.items() if getter in r)
+        if len(keys) > 1:
+            unbuilt[name] = keys
+    assert not unbuilt, (
+        "session caches read by several keys but built by no BUILD_ORDER "
+        f"builder (add them to BUILD_ORDER): {unbuilt}"
+    )

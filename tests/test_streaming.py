@@ -10,6 +10,7 @@ import os
 import pytest
 
 from tests.conftest import SMOKE_SF
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.streaming import (
     IdempotentBatchSink,
     file_stream,
@@ -1778,7 +1779,6 @@ def _ingest_gate_fixture(spark, tmp_path, n_files=4):
         _assign_to_seeds,
     )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        _inc_is_new_col,
         frozen_index_frames,
     )
 
@@ -1787,7 +1787,7 @@ def _ingest_gate_fixture(spark, tmp_path, n_files=4):
     )
     emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     tagged = emb.select(
-        "vec_id", "label", "embedding", _inc_is_new_col().alias("is_new")
+        "vec_id", "label", "embedding", hashing.is_new("vec_id").alias("is_new")
     )
     old = tagged.filter(~F.col("is_new")).select(
         "vec_id", "label", "embedding"
@@ -1976,7 +1976,6 @@ def test_ingest_gate_rebuild_restart_lifecycle(spark, tmp_path, rebuild_fires):
         _assign_to_seeds,
     )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        _inc_is_new_col,
         frozen_index_frames,
         frozen_route,
     )
@@ -2077,7 +2076,7 @@ def test_ingest_gate_rebuild_restart_lifecycle(spark, tmp_path, rebuild_fires):
     tagged = (
         spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
         .select("vec_id", "label", "embedding",
-                _inc_is_new_col().alias("is_new"))
+                hashing.is_new("vec_id").alias("is_new"))
     )
     adm_vec = spark.createDataFrame(
         [(int(i),) for i in admitted_ids], "vec_id bigint"
@@ -2644,13 +2643,12 @@ def _ann_serve_fixture(spark, tmp_path, n_files=4):
         _assign_to_seeds,
     )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        _inc_is_new_col,
         frozen_index_frames,
     )
 
     emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     tagged = emb.select(
-        "vec_id", "label", "embedding", _inc_is_new_col().alias("is_new")
+        "vec_id", "label", "embedding", hashing.is_new("vec_id").alias("is_new")
     )
     old = tagged.filter(~F.col("is_new")).select(
         "vec_id", "label", "embedding"
@@ -3061,9 +3059,6 @@ def test_streaming_ann_serve_filtered_routes(spark, tmp_path):
     committed answers equal the exact survivor scan."""
     from pyspark.sql import functions as F
 
-    from kafka_flink_exactlyonce_example_spark.operators.ingest import (
-        _is_del_col,
-    )
     from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
         _SEL_LABEL,
         serve_route,
@@ -3076,7 +3071,7 @@ def test_streaming_ann_serve_filtered_routes(spark, tmp_path):
     inp, cent, seeds, indexed = _ann_serve_fixture(spark, tmp_path)
     schema = "vec_id bigint, embedding array<float>"
     even = (F.col("label") % 2) == 0
-    wave = indexed.filter(_is_del_col()).select("vec_id").localCheckpoint()
+    wave = indexed.filter(hashing.is_del("vec_id")).select("vec_id").localCheckpoint()
 
     def build(sink, ckpt, predicate, recall_target, tombstones=None):
         return streaming_ann_serve(
@@ -3122,7 +3117,7 @@ def test_streaming_ann_serve_filtered_routes(spark, tmp_path):
     assert got == want, "replayed filtered answers differ from batch search"
     served = {g[3] for g in got if g[3] is not None}
     odd_or_dead = indexed.filter(
-        (F.col("label") % 2 == 1) | _is_del_col()
+        (F.col("label") % 2 == 1) | hashing.is_del("vec_id")
     ).select("vec_id")
     bad = {r["vec_id"] for r in odd_or_dead.collect()} & served
     assert not bad, f"served a predicate-failing or tombstoned id: {bad}"

@@ -171,6 +171,7 @@ def main() -> None:
     # total pairs), the round-2 weak flag this blocking replaced.
     # Measured at sf0.1: x1 → 99.8 pairs/vec, x10 → 206.6 (2.07×,
     # vs 10× under label blocking).
+    from kafka_flink_exactlyonce_example_spark.functions import hashing
     from kafka_flink_exactlyonce_example_spark.operators import dedup as ddp
 
     ddp._CELL_TARGET = 64
@@ -778,7 +779,7 @@ def main() -> None:
         for p_ in parts[1:]:
             big = big.unionByName(p_)
         tagged = big.select(
-            "vec_id", "label", "embedding", sim._inc_is_new_col().alias("is_new")
+            "vec_id", "label", "embedding", hashing.is_new("vec_id").alias("is_new")
         )
         old = tagged.filter(~F.col("is_new")).select(
             "vec_id", "label", "embedding"
@@ -1017,7 +1018,7 @@ def main() -> None:
         cent_f, seeds_f = sim.frozen_index_frames(big)
         cent_f, seeds_f = cent_f.localCheckpoint(), seeds_f.localCheckpoint()
         indexed_f = ddp._assign_to_seeds(big, seeds_f).localCheckpoint()
-        tomb = big.filter(ing._is_del_col()).select("vec_id").localCheckpoint()
+        tomb = big.filter(hashing.is_del("vec_id")).select("vec_id").localCheckpoint()
         probes = (
             big.orderBy(
                 F.md5(F.concat(F.lit("recall:"), F.col("vec_id").cast("string"))),
@@ -1183,7 +1184,7 @@ def main() -> None:
         bands, sets = ddp.text_index_build(bigd)
         bands = bands.localCheckpoint()
         sets = sets.localCheckpoint()
-        wave = bigd.filter(ddp._del_tag_col("doc_id")).select(
+        wave = bigd.filter(hashing.is_del("doc_id")).select(
             "doc_id"
         ).localCheckpoint()
         n_wave = wave.count()
