@@ -32,6 +32,11 @@ Why this shape:
     the text-generation probe batch, g ≥ 2 the frozen corpus;
   * ``'del:'`` mod 5 = 0 is the takedown wave, about 20% of ids,
     removed from the frozen corpus (``is_del``).
+
+:func:`text_digest` is the one content digest: the exact-duplicate key
+of a document's normalized text, which the exact-dedup keys, the
+ingest gate's digest check and every generation's ``digests`` relation
+compare.
 """
 
 from __future__ import annotations
@@ -102,3 +107,9 @@ def is_new(id_col: str) -> Column:
 
 def is_del(id_col: str) -> Column:
     return F.expr(f"({tag_u32_spark_sql('del:', id_col)} % 5) = 0")
+
+
+def text_digest() -> Column:
+    """The normalized-text digest: md5 of the trimmed, lower-cased
+    ``text`` column, as a 32-digit hex string."""
+    return F.md5(F.lower(F.trim(F.col("text"))).cast("binary"))

@@ -1,14 +1,15 @@
-"""Embedding similarity as native Catalyst higher-order functions.
+"""Embedding and word-set similarity as native Catalyst expressions.
 
 Each formula is spelled once per engine, as SQL text over operand SQL
 text: ``dot_spark_sql``/``cosine_spark_sql`` for Spark, with
 ``dot_sql``/``cosine_sql`` for the DuckDB oracles beside them
-(``dist2_spark_sql``, the squared L2 distance, has no shared mirror).
+(``dist2_spark_sql``, the squared L2 distance, and
+``jaccard_spark_sql``, the word-set Jaccard, have no shared mirror).
 A caller that needs a ``Column`` gets one from :func:`dot`,
-:func:`l2_norm`, :func:`cosine` or :func:`dist2`, each a single
-``F.expr`` call; a caller whose operand is a lambda variable, a struct
-field or a literal array writes that operand into the text and embeds
-the formula in its own expression.
+:func:`l2_norm`, :func:`cosine`, :func:`dist2` or :func:`jaccard`,
+each a single ``F.expr`` call; a caller whose operand is a lambda
+variable, a struct field or a literal array writes that operand into
+the text and embeds the formula in its own expression.
 
 Why this shape:
 
@@ -64,6 +65,14 @@ def dist2_spark_sql(a: str, b: str) -> str:
     )
 
 
+def jaccard_spark_sql(a: str, na: str, b: str, nb: str) -> str:
+    """Spark SQL text of the word-set Jaccard |A∩B| / |A∪B| of two
+    distinct-element arrays ``a``/``b`` with sizes ``na``/``nb``, in
+    float64."""
+    n = f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+    return f"({n} / ({na} + {nb} - {n}))"
+
+
 def dot_sql(a: str, b: str) -> str:
     """DuckDB mirror of :func:`dot_spark_sql` (list_zip + lambda, float64)."""
     return (
@@ -94,3 +103,7 @@ def cosine(a: str, b: str) -> Column:
 
 def dist2(a: str, b: str) -> Column:
     return F.expr(dist2_spark_sql(a, b))
+
+
+def jaccard(a: str, na: str, b: str, nb: str) -> Column:
+    return F.expr(jaccard_spark_sql(a, na, b, nb))

@@ -86,6 +86,7 @@ from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
     md5_panel,
     save_frozen_index,
     save_operating_table,
+    self_excluded_top1,
     tombstone_filter,
     warm_index_cycle,
 )
@@ -96,49 +97,6 @@ from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
 #: census's verdict columns, AND q_gen_promote in lockstep); a
 #: deployment passes its own.
 DEFAULT_MAX_CHURN = _PROMOTE_THRESHOLDS[0]
-
-
-def _self_excluded_top1(routed: DataFrame, indexed: DataFrame) -> DataFrame:
-    """frozen_top1 with the probe excluded from its own candidates —
-    the post-roll side of the churn comparison: an ADMITTED probe is a
-    member of generation 2, and "your nearest neighbor is yourself"
-    is not an answer (the q_rebuild_churn gen-2 convention; exclusion
-    lives IN the join condition so an all-self cell still surfaces as
-    a totality NULL row). Same tie-breaks as frozen_top1."""
-    from pyspark.sql import Window
-
-    from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        cosine,
-    )
-
-    x = indexed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cell").alias("icell2"),
-        F.col("embedding").alias("xe"),
-    )
-    nb_w = Window.partitionBy("vec_id").orderBy(
-        F.desc("sim_raw"), F.col("neighbor_id")
-    )
-    return (
-        routed.join(
-            x,
-            (F.col("icell") == F.col("icell2"))
-            & (F.col("neighbor_id") != F.col("vec_id")),
-            "left",
-        )
-        .select(
-            "vec_id",
-            "neighbor_id",
-            cosine("embedding", "xe").alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(nb_w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "neighbor_id")
-    )
-
-
-def _doc_digest():
-    return F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h")
 
 
 def init_generation(
@@ -153,9 +111,8 @@ def init_generation(
     embedding index, and the planner catalog (the shipped graded rows
     unless the deployment passes its own derivation)."""
     docs = corpus.select("doc_id", "lang", "text")
-    docs.select("doc_id", _doc_digest()).write.mode("overwrite").parquet(
-        f"{path}/digests"
-    )
+    digests = docs.select("doc_id", hashing.text_digest().alias("h"))
+    digests.write.mode("overwrite").parquet(f"{path}/digests")
     bands, sets = text_index_build(docs)
     save_text_index(f"{path}/text", bands, sets)
     vecs = corpus.select(
@@ -210,15 +167,13 @@ def _recall_3dp(hits: int, trials: int) -> float:
     """Σhits/trials at 3 dp, half-up, in exact integer arithmetic —
     float round() is banker's AND sits on an inexact double, so the
     half-way rows (e.g. 57/240) would drift between derivations. ONE
-    definition (round 15): tools/operating_table.py imports this."""
+    definition: tools/operating_table.py imports this."""
     return ((2 * hits * 1000 + trials) // (2 * trials)) / 1000
 
 
-#: The catalog derivation's probe depths — ONE definition consumed by
-#: :func:`derive_generation_table`'s signature default, the graded
-#: q_derived_catalog row AND its oracle, so the three can never drift
-#: (round-15 self-review: the signature previously re-declared the
-#: literal).
+#: The catalog derivation's probe depths — one definition read by
+#: :func:`_dc_core`/:func:`_dc_rows` (so by :func:`derive_generation_table`
+#: and the graded q_derived_catalog rows) and by their oracles.
 _DC_NPROBES = (1, 2, 4, 6)
 
 
@@ -227,16 +182,28 @@ def derive_generation_table(
     cent: DataFrame,
     seeds: DataFrame,
     indexed: DataFrame,
-    nprobes: tuple[int, ...] = _DC_NPROBES,
 ) -> tuple[tuple[str, int, float, int], ...]:
     """Derive a planner operating table from a GENERATION'S OWN
-    artifacts (round 15, VERDICT r14 item 4 — the derived branch made
-    real): for each coarse probe depth, the recall and scan cost of
-    searching the generation's posting relation at its top-``nprobe``
-    routed LABELS, measured against brute-force ground truth over the
+    artifacts — the (cent, seeds, indexed) triple of
+    :func:`simsearch.load_frozen_index`; ``seeds`` is unused, because
+    the derivation scans at label grain: for each coarse probe depth
+    in ``_DC_NPROBES``, the recall and scan cost of searching the
+    generation's posting relation at its top-``nprobe`` routed
+    LABELS, measured against brute-force ground truth over the
     generation's members on the deterministic md5-TakeOrdered panel
     (q_ann_recall's absolute-size recipe — _RECALL_PROBES probes,
     _RECALL_K truth depth, never corpus-scaled).
+
+    This runs the graded q_derived_catalog program itself —
+    :func:`_dc_core` then :func:`_dc_rows` — and only collects its
+    rows, sorted cheapest-first by (cand_per_probe, kind, param), so
+    the roll's ``catalog="derive"`` branch and the graded rows are one
+    program. A depth whose routed labels hold no candidates emits no
+    row (the candidate join is inner), so the menu never offers a
+    (recall 0.0, cost 0) route that would sort first; a generation
+    with at most one member has no self-excluded truth and no
+    candidates and derives the EMPTY table, on which ann_route
+    refuses or falls back to brute loudly.
 
     Row semantics vs the shipped catalog: `_ANN_OPERATING_TABLE`'s ivf
     rows measure the FIXTURE corpus's coarse-quantizer index;
@@ -247,8 +214,8 @@ def derive_generation_table(
     honest upper bound) with the frozen router's own tie-breaks
     (6-dp-rounded coarse cosine, label ascending). Derivation
     conventions are the shipped catalog's: recall = Σhits/Σtruth at
-    3 dp half-up in integer arithmetic (:func:`_recall_3dp`),
-    cand_per_probe = ⌈Σcand/|panel|⌉, rows sorted cheapest-first.
+    3 dp half-up in integer arithmetic, cand_per_probe =
+    ⌈Σcand/|panel|⌉.
 
     Why the roll does NOT run this every window by default (the
     carried-catalog rationale, recorded in ``catalog_source``): the
@@ -257,120 +224,12 @@ def derive_generation_table(
     per-window roll on a 100 TB corpus schedules as a periodic
     offline audit, not an every-window tax; provenance makes a stale
     carried catalog visible, and ``catalog="derive"`` opts a window
-    in. Scale shape: ONE broadcast of the bounded panel against one
-    member scan (truth), one |panel| × |labels| bounded cross join
-    (routing ranks), one broadcast rank join against the member scan
-    with conditional per-depth aggregates — no corpus × corpus
-    relation, no shuffle on a data-scaled key."""
-    from pyspark.sql import Window
-
-    from kafka_flink_exactlyonce_example_spark.operators.simsearch import (
-        cosine,
-    )
-
+    in."""
     members = indexed.select("vec_id", "label", "embedding")
-    # the persisted coarse-router relation names its key "cell"
-    # (frozen_centroids' convention); normalize to the member grain
-    ckey = "cell" if "cell" in cent.columns else "label"
-    cent = cent.select(F.col(ckey).alias("label"), "centroid")
-    probes = md5_panel(
-        members.select("vec_id", "embedding")
-    ).localCheckpoint()  # bounded; referenced by rank, truth, cand
-    # a generation smaller than the nominal panel yields a smaller
-    # panel — every per-probe average below divides by the ACTUAL
-    # size, not the constant (round-15 self-review: the constant
-    # understated cand_per_probe ~3x on sub-panel generations)
-    panel_n = probes.count()
-    p = probes.select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pe")
+    rows = _dc_rows(spark, *_dc_core(members, _label_router(cent))).collect()
+    return tuple(
+        sorted((tuple(r) for r in rows), key=lambda r: (r[3], r[0], r[1]))
     )
-    # coarse routing rank per (probe, label) — the frozen router's
-    # exact ordering (rounded cosine desc, label asc); |panel|·|labels|
-    rank_w = Window.partitionBy("pid").orderBy(F.desc("rsim"), "label")
-    route_rank = (
-        p.crossJoin(F.broadcast(cent))
-        .select(
-            "pid",
-            "label",
-            F.round(cosine("pe", "centroid"), 6).alias("rsim"),
-        )
-        .withColumn("rnk", F.row_number().over(rank_w))
-        .filter(F.col("rnk") <= max(nprobes))
-        .select("pid", "label", "rnk")
-        .localCheckpoint()  # bounded |panel|·max(nprobes)
-    )
-    # brute truth: exact top-K per probe over ALL members (self
-    # excluded) — the one linear pass the derivation pays for
-    truth_w = Window.partitionBy("pid").orderBy(
-        F.desc("tsim"), F.col("vec_id")
-    )
-    truth = (
-        members.join(
-            F.broadcast(p), F.col("vec_id") != F.col("pid")
-        )
-        .select(
-            "pid",
-            "vec_id",
-            cosine("embedding", "pe").alias("tsim"),
-        )
-        .withColumn("trn", F.row_number().over(truth_w))
-        .filter(F.col("trn") <= _RECALL_K)
-        .select("pid", "vec_id", F.lit(1).alias("is_true"))
-        # bounded |panel|·K rows, referenced by the hit join AND the
-        # trials count — checkpoint or the |panel|×n truth scan runs
-        # twice (the round-12 lazy re-execution lesson)
-        .localCheckpoint()
-    )
-    # candidates at every depth in ONE pass: members of each probe's
-    # ranked labels, tagged with the rank that admits them
-    cand = (
-        members.join(F.broadcast(route_rank), "label")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .select("pid", "vec_id", "rnk")
-        .join(truth, ["pid", "vec_id"], "left")
-    )
-    trials = truth.count()
-    if panel_n == 0 or trials == 0:
-        # a generation with <= 1 member offers no indexed route at
-        # all (self-excluded truth is empty): return the EMPTY table
-        # — ann_route then refuses or falls back to brute loudly,
-        # which is the honest menu (round-15 self-review: _recall_3dp
-        # would otherwise divide by zero after gen-2 was persisted
-        # but before the pointer was written)
-        return ()
-    agg = cand.agg(
-        *[
-            F.sum((F.col("rnk") <= np).cast("long")).alias(f"c{np}")
-            for np in nprobes
-        ],
-        *[
-            F.sum(
-                ((F.col("rnk") <= np) & F.col("is_true").isNotNull()).cast(
-                    "long"
-                )
-            ).alias(f"h{np}")
-            for np in nprobes
-        ],
-    ).first()
-    # a depth whose routed labels hold no candidates offers no route —
-    # drop it from the menu instead of shipping a (recall 0.0, cost 0)
-    # row, which would sort cheapest-first and could win a floor-0
-    # resolution with zero recall. Same honest-menu convention as the
-    # ≤1-member empty table above, and the SHAPE q_derived_catalog and
-    # its oracle produce (both inner-join candidates with the depth
-    # grid, so a zero-candidate depth emits no row) — ADVICE r15: the
-    # three formulations now agree at the edge by construction.
-    rows = [
-        (
-            "ivf",
-            np,
-            _recall_3dp(int(agg[f"h{np}"] or 0), trials),
-            -(-int(agg[f"c{np}"] or 0) // panel_n),
-        )
-        for np in nprobes
-        if int(agg[f"c{np}"] or 0) > 0
-    ]
-    return tuple(sorted(rows, key=lambda r: (r[3], r[0], r[1])))
 
 
 def corpus_generation_roll(
@@ -395,9 +254,8 @@ def corpus_generation_roll(
     (ids of GENERATION-1 corpus members; a doc admitted and taken
     down in the same window is out of scope here —
     :func:`simsearch.warm_index_cycle` handles it at the frame level).
-    The admission gate sees the SAME window's wave (round 15, VERDICT
-    r14 item 1): all three checks — digest, text, embedding — run
-    against gen-1 SURVIVORS via
+    The admission gate sees the SAME window's wave: all three checks
+    — digest, text, embedding — run against gen-1 SURVIVORS via
     :func:`streaming.jobs.ingest_gate_decisions`'s ``takedowns``
     thread, so a fresh doc that duplicates a doc deleted in this very
     window is admitted now, not one generation later.
@@ -408,29 +266,27 @@ def corpus_generation_roll(
     naming gen 1 and streams restart on the old state. ``probes``
     overrides the churn panel (default: the batch's own vectors).
 
-    DELETE-ONLY windows (round 15, VERDICT r14 item 3): an empty batch
-    leaves no default probes, and zero probes is zero churn EVIDENCE,
-    not zero churn. With ``auto_probe_panel=True`` (the default) the
-    roll derives a deterministic md5-TakeOrdered SURVIVOR panel
-    (q_ann_recall's absolute-size recipe) so a pure-takedown
-    compliance wave is still verdict-gated — both churn sides then
-    self-exclude, because a survivor probe is a member of both
-    generations; the census records ``probe_panel='auto_survivor'``.
-    ``auto_probe_panel=False`` restores the strict refusal: no probes,
-    no promote. A wave that deletes EVERY member leaves an empty
-    panel and refuses either way.
+    DELETE-ONLY windows: an empty batch leaves no default probes, and
+    zero probes is zero churn EVIDENCE, not zero churn. With
+    ``auto_probe_panel=True`` (the default) the roll derives a
+    deterministic md5-TakeOrdered SURVIVOR panel (q_ann_recall's
+    absolute-size recipe) so a pure-takedown compliance wave is still
+    verdict-gated — both churn sides then self-exclude, because a
+    survivor probe is a member of both generations; the census records
+    ``probe_panel='auto_survivor'``. ``auto_probe_panel=False``
+    restores the strict refusal: no probes, no promote. A wave that
+    deletes EVERY member leaves an empty panel and refuses either way.
 
-    ``probes_are_members`` (round 16, ADVICE r15): a CALLER-supplied
-    panel of generation MEMBERS (the pre-round-15 documented recipe
-    for delete-only windows) must get the same self-excluded v1 path
-    as the auto panel — without it every member probe reports ITSELF
-    as nb_v1 (sim 1.0) and counts as churned, a spurious ~100% churn
-    and a guaranteed promote refusal (fails closed, but silently).
-    Pass True when the panel's ids are (or may include) gen-1 corpus
-    members; self-exclusion is a no-op for non-member probes (no
-    posting row carries their id), so a MIXED panel is safe under the
-    flag. Setting it without supplying ``probes`` is a contradiction
-    and raises.
+    ``probes_are_members``: a CALLER-supplied panel of generation
+    MEMBERS (the delete-only recipe from before the auto panel) must
+    get the same self-excluded v1 path as the auto panel — without it
+    every member probe reports ITSELF as nb_v1 (sim 1.0) and counts as
+    churned, a spurious ~100% churn and a guaranteed promote refusal
+    (fails closed, but silently). Pass True when the panel's ids are
+    (or may include) gen-1 corpus members; self-exclusion is a no-op
+    for non-member probes (no posting row carries their id), so a
+    MIXED panel is safe under the flag. Setting it without supplying
+    ``probes`` is a contradiction and raises.
 
     ``catalog``: None carries gen-1's planner rows forward (recorded
     ``catalog_source='carried'`` — the production default: the derived
@@ -441,19 +297,19 @@ def corpus_generation_roll(
     (:func:`derive_generation_table`); any other value is stamped
     verbatim as externally-derived rows.
 
-    WAVE-MERGE CONTRACT for a rejected window (round 15, VERDICT r14
-    item 2): promote=0 leaves the pointer on generation N, and the
-    window's wave is then UNAPPLIED to serving even though the gen-N+1
-    artifacts exist on disk. The next window must roll from whatever
-    the pointer names (gen N) with the MERGED wave — ``batch`` =
-    union of the unapplied and the new batches (distinct on doc_id;
-    decisions for the replayed docs recompute identically against the
-    unchanged gen-N state, the same determinism argument the marker
-    sink uses), ``takedowns`` = union of the two id-sets (the roll
-    already distincts them). A doc admitted by the REJECTED roll and
-    taken down by the new wave is simply absent from the merged batch
-    — caller composition, since the rejected generation never served.
-    The retry path is runtime-tested in tests/test_lifecycle.py.
+    WAVE-MERGE CONTRACT for a rejected window: promote=0 leaves the
+    pointer on generation N, and the window's wave is then UNAPPLIED
+    to serving even though the gen-N+1 artifacts exist on disk. The
+    next window must roll from whatever the pointer names (gen N) with
+    the MERGED wave — ``batch`` = union of the unapplied and the new
+    batches (distinct on doc_id; decisions for the replayed docs
+    recompute identically against the unchanged gen-N state, the same
+    determinism argument the marker sink uses), ``takedowns`` = union
+    of the two id-sets (the roll already distincts them). A doc
+    admitted by the REJECTED roll and taken down by the new wave is
+    simply absent from the merged batch — caller composition, since
+    the rejected generation never served. The retry path is
+    runtime-tested in tests/test_lifecycle.py.
 
     Census (all counts from bounded aggregates): batch/admission,
     takedown, digest and posting deltas, fired cells, churn, verdict,
@@ -512,7 +368,7 @@ def corpus_generation_roll(
         g1["digests"]
         .join(tomb_docs, "doc_id", "left_anti")
         .unionByName(
-            admitted_docs.select("doc_id", _doc_digest())
+            admitted_docs.select("doc_id", hashing.text_digest().alias("h"))
         )
     )
 
@@ -614,7 +470,7 @@ def corpus_generation_roll(
             )
             probe_panel = "batch"
     if member_probes:
-        v1 = _self_excluded_top1(
+        v1 = self_excluded_top1(
             frozen_route(probes, g1["cent"], g1["seeds"]),
             tombstone_filter(g1["indexed"], tomb_vecs),
         ).select("vec_id", F.col("neighbor_id").alias("nb_v1"))
@@ -624,7 +480,7 @@ def corpus_generation_roll(
             g1["indexed"],
             tombstones=tomb_vecs,
         ).select("vec_id", F.col("neighbor_id").alias("nb_v1"))
-    v2 = _self_excluded_top1(
+    v2 = self_excluded_top1(
         frozen_route(probes, g2["cent"], g2["seeds"]), g2["indexed"]
     ).select("vec_id", F.col("neighbor_id").alias("nb_v2"))
     churn = v1.join(v2, "vec_id").agg(
@@ -978,7 +834,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("vec_id"),
         F.col("neighbor_id").alias("nb_v1"),
     )
-    v2 = _self_excluded_top1(
+    v2 = self_excluded_top1(
         frozen_route(probes, cent2, seeds2), indexed2
     ).select("vec_id", F.col("neighbor_id").alias("nb_v2"))
     churn = v1.join(v2, "vec_id").agg(
@@ -993,7 +849,7 @@ def q_generation_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         hashing.is_new("doc_id").cast("int").alias("is_new"),
         hashing.is_del("doc_id").cast("int").alias("is_del"),
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     batch_agg = flags.agg(
         F.count(F.lit(1)).cast("long").alias("n_batch"),
@@ -1194,28 +1050,32 @@ def _dc_core(members: DataFrame, centn: DataFrame):
     return members, p, rankr, truth
 
 
+def _label_router(cent: DataFrame) -> DataFrame:
+    """A coarse router as (label, centroid): the persisted relation
+    names its key "cell" (frozen_centroids' convention)."""
+    ckey = "cell" if "cell" in cent.columns else "label"
+    return cent.select(F.col(ckey).alias("label"), "centroid")
+
+
 def _dc_frames(spark: SparkSession, sf_dir: str):
     """q_derived_catalog's state: :func:`_dc_core` over the standing
     frozen gen-1 members and the incremental index's coarse router."""
     cent, _seeds = inc_index_build(spark, sf_dir)
-    ckey = "cell" if "cell" in cent.columns else "label"
-    centn = cent.select(F.col(ckey).alias("label"), "centroid")
     members = (
         _inc_tagged(spark, sf_dir)
         .filter(~F.col("is_new"))
         .select("vec_id", "label", "embedding")
     )
-    return _dc_core(members, centn)
+    return _dc_core(members, _label_router(cent))
 
 
 @query("q_derived_catalog", oracle=_DC_ORACLE)
 def q_derived_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generation-catalog DERIVATION, driver-graded end-to-end
-    (round 15, VERDICT r14 item 4's graded half — the lifecycle test
-    proves the roll stamps and follows the derived rows; this row
-    puts the derivation arithmetic itself under the DuckDB hash):
-    :func:`derive_generation_table`'s whole chain re-expressed as ONE
-    lazy DataFrame program over the standing frozen gen-1 fixtures
+    (the lifecycle test proves the roll stamps and follows the derived
+    rows; this row puts the derivation arithmetic itself under the
+    DuckDB hash): the program :func:`derive_generation_table` runs,
+    as ONE lazy DataFrame over the standing frozen gen-1 fixtures
     (the 'inc:' is_new = 0 members at their lake labels, the same
     generation every incremental-family row grades against) — the
     md5-TakeOrdered member panel, coarse routing ranks at the frozen
@@ -1228,17 +1088,14 @@ def q_derived_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_DC_NPROBES}: (kind, param, recall, cand_per_probe).
     tests/test_lifecycle.py pins that these rows equal
     :func:`derive_generation_table` run on the SAME frames through
-    the real API (modulo its cheapest-first sort), so the graded
-    arithmetic and the roll's ``catalog="derive"`` branch can never
-    diverge.
+    the real API (modulo its cheapest-first sort).
 
-    Scale shape: :func:`derive_generation_table`'s exactly — the
-    bounded panel broadcast against ONE member scan (truth), one
-    |panel| × |labels| bounded cross join (ranks), one broadcast rank
-    join against the member scan with a 4-row depth expansion, then
-    1-row aggregates composed via broadcast crossJoins (the census
-    idiom). The panel, ranks and truth are checkpointed (each is
-    consumed by 2–3 downstream stages; round-15 self-review — the
+    Scale shape: the bounded panel broadcast against ONE member scan
+    (truth), one |panel| × |labels| bounded cross join (ranks), one
+    broadcast rank join against the member scan with a 4-row depth
+    expansion, then 1-row aggregates composed via broadcast crossJoins
+    (the census idiom). The panel, ranks and truth are checkpointed
+    (each is consumed by 2–3 downstream stages, and the
     un-checkpointed row paid ~3 redundant member scans per run). No
     corpus × corpus relation, no data-scaled shuffle key, no
     collect."""
@@ -1411,18 +1268,17 @@ _RDO_ORACLE = f"""
 ).replace("{B1}", str(_PROMOTE_THRESHOLDS[1])))
 def q_roll_delete_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE-ONLY window's churn gate, driver-graded in one row
-    (round 15, VERDICT r14 item 3's graded half — the lifecycle test
-    proves both verdict branches drive the pointer with zero
-    hand-built probes; this row puts the auto-panel arithmetic under
-    the DuckDB hash): the 'del:' wave (~20% of the frozen gen-1
+    (the lifecycle test proves both verdict branches drive the
+    pointer with zero hand-built probes; this row puts the auto-panel
+    arithmetic under the DuckDB hash): the 'del:' wave (~20% of the frozen gen-1
     corpus, no batch) is taken down, the deterministic md5-TakeOrdered
     SURVIVOR panel (:func:`simsearch.md5_panel` — the q_ann_recall
     absolute-size recipe, exactly what :func:`corpus_generation_roll`
     derives when ``probes is None`` and the batch is empty) probes
     BOTH states, and — because a survivor probe is a member of both
     generations — BOTH churn sides self-exclude: v1 =
-    :func:`_self_excluded_top1` over the tombstone-filtered gen-1
-    postings routed by the FROZEN gen-1 router, v2 = the same over
+    :func:`simsearch.self_excluded_top1` over the tombstone-filtered
+    gen-1 postings routed by the FROZEN gen-1 router, v2 = the same over
     the warm-cycled generation (delete-only: ``adm_routed=None``,
     coarse centroids retrained over survivors) routed by ITS router.
     Census: corpus/wave/survivor counts, panel churn, and both
@@ -1481,11 +1337,11 @@ def q_roll_delete_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent2, seeds2, indexed2 = warm_index_cycle(
         surv, seeds1, indexed1, None, tomb, fired
     )
-    v1 = _self_excluded_top1(
+    v1 = self_excluded_top1(
         frozen_route(probes, cent1, seeds1),
         tombstone_filter(indexed1, tomb),
     ).select("vec_id", F.col("neighbor_id").alias("nb_v1"))
-    v2 = _self_excluded_top1(
+    v2 = self_excluded_top1(
         frozen_route(probes, cent2, seeds2), indexed2
     ).select("vec_id", F.col("neighbor_id").alias("nb_v2"))
     churn = v1.join(v2, "vec_id").agg(
@@ -1625,9 +1481,7 @@ def _dc2_frames(spark: SparkSession, sf_dir: str):
         )
     )
     merged = surv.unionByName(adm_vecs)
-    cent2 = frozen_centroids(merged)
-    ckey = "cell" if "cell" in cent2.columns else "label"
-    centn = cent2.select(F.col(ckey).alias("label"), "centroid")
+    centn = _label_router(frozen_centroids(merged))
     # wave 2: the gen-2 member union (feeds panel, truth AND cand) and
     # the retrained coarse router (bounded |labels| rows) both read only
     # wave-1 checkpoints — overlapped for the same reason

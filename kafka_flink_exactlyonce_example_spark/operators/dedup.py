@@ -26,6 +26,7 @@ from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine_spark_sql,
     cosine_sql,
     dot_spark_sql,
+    jaccard,
     l2_norm,
 )
 from kafka_flink_exactlyonce_example_spark.operators.overlap import session_cache
@@ -107,10 +108,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the document text."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.select(
-            F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("text_hash"),
-            "doc_id",
-        )
+        d.select(hashing.text_digest().alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
@@ -170,9 +168,7 @@ def q_dedup_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     g = (
         d.select(
-            F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias(
-                "text_hash"
-            ),
+            hashing.text_digest().alias("text_hash"),
             "doc_id",
             hashing.is_del("doc_id").cast("int").alias("is_del"),
         )
@@ -401,8 +397,7 @@ def _verified_pairs_frame(d: DataFrame, bands: DataFrame) -> DataFrame:
         F.col("ws").alias("wb"),
         F.col("n").alias("nb"),
     )
-    n_common = F.size(F.array_intersect("wa", "wb")).cast("double")
-    jacc = n_common / (F.col("na") + F.col("nb") - n_common)
+    jacc = jaccard("wa", "na", "wb", "nb")
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
@@ -432,9 +427,9 @@ def _lsh_verified_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
 
 
-def _jaccard_edges(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
+def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXHAUSTIVE near-dup edges (doc_a < doc_b, word-set Jaccard ≥
-    threshold) over all within-lang pairs — the small-N ground truth
+    0.8) over all within-lang pairs — the small-N ground truth
     that q_lsh_recall audits the LSH candidate route against. O(n²)
     within each language block, so audit-time only; every production
     consumer runs on _lsh_verified_edges instead.
@@ -501,11 +496,11 @@ def _jaccard_edges(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> 
         pairs = (
             a.repartition(par)
             .join(F.broadcast(b), (a.lang_a == b.lang_b) & (a.doc_a < b.doc_b))
-            .filter(lo >= F.lit(threshold) * hi)  # lossless length-ratio prune
+            .filter(lo >= F.lit(0.8) * hi)  # lossless length-ratio prune
         )
         n_common = F.bit_count(F.col("ma").bitwiseAND(F.col("mb")))
         jacc = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-        return pairs.filter(jacc >= threshold).select(
+        return pairs.filter(jacc >= 0.8).select(
             "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
         )
     # fallback: intersect on 64-bit token hashes, not strings: |A∩B| is
@@ -539,11 +534,10 @@ def _jaccard_edges(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> 
     pairs = (
         a.repartition(par)
         .join(F.broadcast(b), (a.lang_a == b.lang_b) & (a.doc_a < b.doc_b))
-        .filter(lo >= F.lit(threshold) * hi)  # lossless length-ratio prune
+        .filter(lo >= F.lit(0.8) * hi)  # lossless length-ratio prune
     )
-    n_common = F.size(F.array_intersect("wa", "wb"))
-    jacc = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-    return pairs.filter(jacc >= threshold).select(
+    jacc = jaccard("wa", "na", "wb", "nb")
+    return pairs.filter(jacc >= 0.8).select(
         "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
     )
 
@@ -1447,13 +1441,12 @@ def near_text_flags(
     batch: DataFrame,
     bands: DataFrame,
     sets: DataFrame,
-    threshold: float = 0.8,
     bands_capped: bool = False,
     takedowns: DataFrame | None = None,
 ) -> DataFrame:
     """Per batch doc (doc_id, lang, text): ``f_near_text`` = 1 iff a
     banded candidate IN THE FROZEN INDEX verifies at same-lang exact
-    word-set Jaccard ≥ threshold — the frame-level twin of
+    word-set Jaccard ≥ 0.8 — the frame-level twin of
     q_ingest_gate's f_near_text check, runnable against any (bands,
     sets) generation instead of the graded sf_dir fixtures. The batch
     side probes with its own (uncapped) bands — it is the |batch|-
@@ -1473,11 +1466,11 @@ def near_text_flags(
     window then never re-runs per micro-batch); the default re-derives
     it, which is fine for one-shot batch checks.
 
-    ``takedowns`` (round 14, VERDICT r13 item 1a): an optional id-set
-    of deleted index docs, LEFT-ANTI-joined out of the index side —
-    bands AND word sets — BEFORE candidate generation, so a fresh doc
-    is never rejected as a near-dup of a doc that no longer exists;
-    the delete semantics between text-index rebuilds, mirroring
+    ``takedowns``: an optional id-set of deleted index docs,
+    LEFT-ANTI-joined out of the index side — bands AND word sets —
+    BEFORE candidate generation, so a fresh doc is never rejected as a
+    near-dup of a doc that no longer exists; the delete semantics
+    between text-index rebuilds, mirroring
     :func:`simsearch.tombstone_filter` on the embedding side (the
     rebuild that removes the rows for good is
     :func:`text_index_compact`). Cap-boundary caveat: with
@@ -1490,7 +1483,10 @@ def near_text_flags(
     compact/freeze. Exact parity while no bucket straddles the cap
     (measured max bucket 3 vs cap 64 on the graded corpora) — pinned,
     precondition first, in tests/test_text_index.py. Default ``None``
-    leaves the plan byte-identical to the historical form."""
+    adds no join.
+
+    Candidates and the verifier are :func:`_tg_cand` and
+    :func:`_text_gen_verify`, the program q_text_gen_fold grades."""
     qb = _bands_rel(_signatures_frame(_shingles_frame(batch)))
     idx_bands = bands
     if takedowns is not None:
@@ -1498,17 +1494,6 @@ def near_text_flags(
         idx_bands = idx_bands.join(t, "doc_id", "left_anti")
         sets = sets.join(t, "doc_id", "left_anti")
     cap = idx_bands if bands_capped else _cap_bands_rel(idx_bands)
-    cand = (
-        qb.join(
-            cap.select(
-                F.col("doc_id").alias("idx_doc"), "band_idx", "band_key"
-            ),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("doc_id") != F.col("idx_doc"))
-        .select("doc_id", "idx_doc")
-        .distinct()
-    )
     ws = _word_set_col()
     qsets = batch.select(
         "doc_id",
@@ -1522,16 +1507,8 @@ def near_text_flags(
         F.col("ws").alias("wi"),
         F.col("n").alias("ni"),
     )
-    n_common = F.size(F.array_intersect("wq", "wi")).cast("double")
-    jacc = n_common / (F.col("nq") + F.col("ni") - n_common)
-    hits = (
-        cand.join(qsets, "doc_id")
-        .join(isets, "idx_doc")
-        .filter(F.col("lang_q") == F.col("lang_i"))
-        .filter(jacc >= threshold)
-        .select("doc_id")
-        .distinct()
-        .withColumn("_h", F.lit(1))
+    hits = _text_gen_verify(_tg_cand(qb, cap), qsets, isets).withColumn(
+        "_h", F.lit(1)
     )
     return (
         batch.select("doc_id")
@@ -1555,16 +1532,15 @@ _TEXT_GEN_PLANT_BASE = 1_000_000_000
 
 def _text_gen_verify(cand: DataFrame, qsets: DataFrame, isets: DataFrame) -> DataFrame:
     """Distinct probe doc_ids whose candidate verifies at same-lang
-    exact word-set Jaccard ≥ 0.8 — the near_text_flags verifier over
-    pre-built word-set relations (parity with the lifecycle API is
-    pinned by tests/test_text_index.py::test_graded_fold_matches_api)."""
-    n_common = F.size(F.array_intersect("wq", "wi")).cast("double")
-    jacc = n_common / (F.col("nq") + F.col("ni") - n_common)
+    exact word-set Jaccard ≥ 0.8, over pre-built word-set relations:
+    the one verifier of :func:`near_text_flags` and q_text_gen_fold
+    (parity of the two callers is pinned by
+    tests/test_text_index.py::test_graded_fold_matches_api)."""
     return (
         cand.join(qsets, "doc_id")
         .join(isets, "idx_doc")
         .filter(F.col("lang_q") == F.col("lang_i"))
-        .filter(jacc >= 0.8)
+        .filter(jaccard("wq", "nq", "wi", "ni") >= 0.8)
         .select("doc_id")
         .distinct()
     )
@@ -2519,7 +2495,7 @@ def q_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     hashes = d.select(
         "doc_id",
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("eh"),
+        hashing.text_digest().alias("eh"),
         F.md5(F.substring("text", 1, 64).cast("binary")).alias("ph"),
     )
     s1 = hashes.groupBy("eh").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
@@ -2651,7 +2627,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         hashing.is_new("doc_id").cast("int").alias("is_new"),
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     new = split.filter(F.col("is_new") == 1)
     corpus = split.filter(F.col("is_new") == 0)
@@ -3197,7 +3173,7 @@ def q_shard_dup_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards = d.select(
         "doc_id",
         shard.alias("shard"),
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     exact_groups = (
         shards.groupBy("h")
@@ -3469,7 +3445,7 @@ def q_bag_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.lower(F.trim(F.col("text"))), " "), lambda w: w != ""
     )
     canon = d.select(
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h_exact"),
+        hashing.text_digest().alias("h_exact"),
         F.md5(
             F.concat_ws(" ", F.array_sort(words)).cast("binary")
         ).alias("h_bag"),

@@ -43,6 +43,7 @@ from kafka_flink_exactlyonce_example_spark.functions.similarity import (
     cosine,
     cosine_spark_sql,
     cosine_sql,
+    jaccard,
 )
 from kafka_flink_exactlyonce_example_spark.operators.dedup import (
     _CELL_TARGET,
@@ -279,7 +280,7 @@ def _gate_frame_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsplit = d.select(
         "doc_id",
         is_new.cast("int").alias("is_new"),
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     new_docs = dsplit.filter(F.col("is_new") == 1).select("doc_id", "h")
     corpus = dsplit.filter(F.col("is_new") == 0)
@@ -1209,8 +1210,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "idx_doc")
         .agg(F.max("_c1").alias("_c1"), F.max("_c2").alias("_c2"))
     )
-    n_common = F.size(F.array_intersect("wq", "wi")).cast("double")
-    jacc = n_common / (F.col("nq") + F.col("ni") - n_common)
+    jacc = jaccard("wq", "nq", "wi", "ni")
     hits_both = (
         cand.join(qsets, "doc_id")
         .join(_tg_isets(sets_all, corpus_ids), "idx_doc")
@@ -1220,7 +1220,7 @@ def q_gate_post_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("_c1").alias("_t1"), F.max("_c2").alias("_t2"))
     )
 
-    dig = F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h")
+    dig = hashing.text_digest().alias("h")
     probe_h = (
         base.filter(F.col("g") == 0)
         .select("doc_id", dig)

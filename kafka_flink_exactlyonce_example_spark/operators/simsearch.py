@@ -1822,6 +1822,41 @@ def frozen_topk(
     )
 
 
+def self_excluded_top1(routed: DataFrame, indexed: DataFrame) -> DataFrame:
+    """:func:`frozen_top1` for probes that are members of ``indexed``:
+    the nearest neighbor other than the probe itself, as (vec_id,
+    neighbor_id, sim), sim 6-dp-rounded, one row per routed vector.
+    "Your nearest neighbor is yourself" is not an answer, so an
+    admitted or surviving probe must not find its own posting row.
+    The exclusion lives IN the join condition, so a sub-cell whose
+    only member is the probe still surfaces as a NULL row (the
+    totality contract). Same tie-breaks as :func:`frozen_topk`."""
+    x = indexed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("cell").alias("icell2"),
+        F.col("embedding").alias("xe"),
+    )
+    nb_w = Window.partitionBy("vec_id").orderBy(
+        F.desc("sim_raw"), F.col("neighbor_id")
+    )
+    return (
+        routed.join(
+            x,
+            (F.col("icell") == F.col("icell2"))
+            & (F.col("neighbor_id") != F.col("vec_id")),
+            "left",
+        )
+        .select(
+            "vec_id",
+            "neighbor_id",
+            cosine("embedding", "xe").alias("sim_raw"),
+        )
+        .withColumn("rn", F.row_number().over(nb_w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "neighbor_id", F.round("sim_raw", 6).alias("sim"))
+    )
+
+
 @session_cache("inc_ann_index")
 def inc_index_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, seeds) trained on the OLD split only,
@@ -2104,15 +2139,15 @@ _CHURN_ORACLE = f"""
 
 
 def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-side ANSWER CHURN across an index-generation roll (round
-    13 — the deploy-gating metric of every production rebuild: the
+    """Serve-side ANSWER CHURN across an index-generation roll (the
+    deploy-gating metric of every production rebuild: the
     keeper-churn report q_dedup_tombstone audits the DEDUP side of a
     wave, this audits what a rebuild does to SEARCH ANSWERS): each
     'inc:' probe is answered twice — against generation 1 (the frozen
     old-split index, exactly q_incremental_ann's relation) and against
     generation 2 (the post-admission rebuild over the FULL corpus,
-    self excluded via the join condition so an all-self cell keeps the
-    totality NULL row) — and the report emits per probe (nb_v1,
+    which holds the probe itself, so :func:`self_excluded_top1`) —
+    and the report emits per probe (nb_v1,
     sim_v1, nb_v2, sim_v2, changed). Churn is non-vacuous by
     construction: gen 2 adds the admitted batch as candidate
     neighbors AND recomputes the coarse centroids, so both
@@ -2148,34 +2183,12 @@ def _rebuild_churn_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     allv = tagged.select("vec_id", "label", "embedding")
     cent2 = frozen_centroids(allv)
     seeds2 = _ivf_seeds_for(spark, sf_dir)
-    routed2 = frozen_route(new, cent2, seeds2)
-    x2 = _ivf_cells_for(spark, sf_dir).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cell").alias("icell2"),
-        F.col("embedding").alias("xe"),
-    )
-    nb_w = Window.partitionBy("vec_id").orderBy(
-        F.desc("sim_raw"), F.col("neighbor_id")
-    )
-    v2 = (
-        routed2.join(
-            x2,
-            (F.col("icell") == F.col("icell2"))
-            & (F.col("neighbor_id") != F.col("vec_id")),
-            "left",
-        )
-        .select(
-            "vec_id",
-            "neighbor_id",
-            cosine("embedding", "xe").alias("sim_raw"),
-        )
-        .withColumn("rn", F.row_number().over(nb_w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            F.col("neighbor_id").alias("nb_v2"),
-            F.round("sim_raw", 6).alias("sim_v2"),
-        )
+    v2 = self_excluded_top1(
+        frozen_route(new, cent2, seeds2), _ivf_cells_for(spark, sf_dir)
+    ).select(
+        "vec_id",
+        F.col("neighbor_id").alias("nb_v2"),
+        F.col("sim").alias("sim_v2"),
     )
     return v1.join(v2, "vec_id").select(
         "vec_id",

@@ -1518,7 +1518,7 @@ def q_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = d.select(
         "doc_id",
         "source",
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     counts = hashes.groupBy("h").agg(F.count(F.lit(1)).alias("n_copies"))
     return (
@@ -2123,7 +2123,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.size(F.array_distinct(arr)).cast("double") / F.size(arr), 6
         ).alias("ttr"),
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
+        hashing.text_digest().alias("h"),
     )
     dup = base.groupBy("h").agg(F.count(F.lit(1)).alias("n_copies"))
     ce = _bigram_ce(spark, sf_dir).select("doc_id", "ce")

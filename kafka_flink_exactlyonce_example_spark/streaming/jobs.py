@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_flink_exactlyonce_example_spark.functions import hashing
 from kafka_flink_exactlyonce_example_spark.streaming.exactly_once import (
     IdempotentBatchSink,
 )
@@ -242,15 +243,15 @@ def temporal_enrich(
     ``out_sink`` defaults to an in-memory list collector for tests;
     pass an IdempotentBatchSink for exactly-once output.
 
-    ``dim_schema`` (StructType): the dimension's schema, used to emit a
-    SCHEMA-STABLE left join from batch 0 — before the first dimension
-    snapshot commits, batches join against an EMPTY typed dimension
-    (all dim columns NULL), exactly what Flink's temporal join emits
-    against a not-yet-populated dynamic table. Without it the pre-
-    snapshot batches passed through UN-JOINED, so the output stream
-    changed schema mid-flight once the dimension appeared (ADVICE
-    r07). Omitting ``dim_schema`` keeps the legacy passthrough for
-    callers that gate the fact stream on dimension readiness."""
+    ``dim_schema`` (StructType): the dimension's schema, used to emit
+    a SCHEMA-STABLE left join from batch 0 — before the first
+    dimension snapshot commits, batches join against an EMPTY typed
+    dimension (all dim columns NULL), exactly what Flink's temporal
+    join emits against a not-yet-populated dynamic table. Without it
+    the pre-snapshot batches passed through UN-JOINED, so the output
+    stream changed schema mid-flight once the dimension appeared.
+    Omitting ``dim_schema`` keeps the legacy passthrough for callers
+    that gate the fact stream on dimension readiness."""
     collected: list = []
 
     def _enrich(batch_df: DataFrame, batch_id: int) -> None:
@@ -273,13 +274,7 @@ def temporal_enrich(
         else:
             collected.extend(joined.collect())
 
-    q = (
-        stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run_exactly_once(stream, _enrich, checkpoint_dir, output_mode="append")
     return q, collected
 
 
@@ -506,13 +501,7 @@ def cdc_apply(
     snapshot (pure function of snapshot N−1 and batch N), so the
     apply is exactly-once end to end. Read the current table with
     ``sink.read_current(spark)``."""
-    return (
-        changes.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_exactly_once(changes, sink, checkpoint_dir, output_mode="append")
 
 
 def run_exactly_once(
@@ -641,10 +630,7 @@ def ingest_gate_decisions(
             .select("h")
             .distinct()
         )
-    digests = batch.select(
-        "doc_id",
-        F.md5(F.lower(F.trim(F.col("text"))).cast("binary")).alias("h"),
-    )
+    digests = batch.select("doc_id", hashing.text_digest().alias("h"))
     exact = (
         digests.join(corpus_digests.withColumn("_e", F.lit(1)), "h", "left")
         .select("doc_id", F.coalesce("_e", F.lit(0)).alias("f_exact"))

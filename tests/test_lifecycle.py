@@ -721,6 +721,15 @@ def test_derive_drops_zero_candidate_depths(spark):
     )
     assert all(r[3] > 0 for r in rows)
 
+    # a 1-member generation has no self-excluded truth and so no
+    # candidates at any depth: the inner joins leave the EMPTY table
+    one = vecs.filter(F.col("vec_id") == 1)
+    cent1, seeds1 = frozen_index_frames(one)
+    seeds1 = seeds1.localCheckpoint()
+    assert lc.derive_generation_table(
+        spark, cent1, seeds1, _assign_to_seeds(one, seeds1)
+    ) == ()
+
 
 def test_derive_chains_across_generations(spark, tmp_path):
     """Round 16 (VERDICT r15 item 5 / 'what's missing' #5): a chained
